@@ -403,11 +403,21 @@ private[graft] object Ops { // graft-wide: Bench clears staged relations between
   }
 
   /** Scratch directory for operators that materialize intermediate
-   * files (e.g. the SCBF roundtrip). Driver-local java.io.tmpdir only
-   * works in local mode; on a real cluster set `graft.scratch.dir` to a
-   * shared filesystem path. */
+   * files (e.g. the SCBF roundtrip): `graft.scratch.dir`, else the
+   * driver-local java.io.tmpdir. Only local mode can use the latter;
+   * a non-local master without the setting fails here, before any
+   * executor writes a file the driver and its peers cannot see. */
   def scratchDir(s: SparkSession): String =
-    s.conf.get("graft.scratch.dir", sys.props("java.io.tmpdir"))
+    scratchDir(s.conf.getOption("graft.scratch.dir"), s.sparkContext.isLocal)
+
+  private[operators] def scratchDir(configured: Option[String], localMaster: Boolean): String =
+    configured.getOrElse {
+      if (!localMaster) throw new IllegalStateException(
+        "graft.scratch.dir is unset and the master is not local: the " +
+          "default java.io.tmpdir is driver-local — set graft.scratch.dir " +
+          "to a filesystem path every executor shares")
+      sys.props("java.io.tmpdir")
+    }
 
   /** Connected components over an undirected edge list (columns `a`,
    * `b`), returning (`vertex`, `component`) where component = min

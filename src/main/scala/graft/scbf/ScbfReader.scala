@@ -1,6 +1,5 @@
 package graft.scbf
 
-import java.io.InputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.util.zip.Inflater
@@ -68,25 +67,6 @@ object ScbfReader {
       buf.array()
     }
     def close(): Unit = ch.close()
-  }
-
-  /** Adapter for Hadoop-style positioned-read streams (e.g.
-   * FSDataInputStream implements PositionedReadable via this shape). */
-  final class SeekableStreamInput(in: InputStream, seek: Long => Unit) extends RandomInput {
-    def readFully(offset: Long, length: Int): Array[Byte] = {
-      if (length < 0 || offset < 0)
-        throw new ScbfFormatException(s"invalid read [$offset, +$length)")
-      seek(offset)
-      val out = new Array[Byte](length)
-      var read = 0
-      while (read < length) {
-        val n = in.read(out, read, length - read)
-        if (n < 0) throw new ScbfFormatException(s"EOF reading $length bytes @$offset")
-        read += n
-      }
-      out
-    }
-    def close(): Unit = in.close()
   }
 
   def open(path: String): RandomInput =

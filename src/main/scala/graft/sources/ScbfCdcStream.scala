@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
@@ -12,6 +13,7 @@ import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.scbf.ScbfFormatException
 
@@ -284,7 +286,7 @@ class ScbfCdcMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ScbfCdcReaderFactory(required, new ScbfUtil.SerializableConf(conf))
+    new ScbfCdcReaderFactory(required, ScbfUtil.broadcastConf(conf))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -300,7 +302,7 @@ case class ScbfCdcPartition(path: String, length: Long, changeType: String,
  * CDC metadata columns as per-split CONSTANT vectors (zero decode
  * cost — the same shape the `_file_path` metadata column rides). */
 class ScbfCdcReaderFactory(required: StructType,
-    conf: ScbfUtil.SerializableConf) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
 
   /** The table columns this scan must decode (CDC columns excluded). */
   private def innerRequired: StructType =
@@ -311,7 +313,7 @@ class ScbfCdcReaderFactory(required: StructType,
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val part = p.asInstanceOf[ScbfCdcPartition]
     val inner = new ScbfColumnarReader(
-      ScbfFilePartition(part.path, part.length), innerRequired, conf.value)
+      ScbfFilePartition(part.path, part.length), innerRequired, conf.value.value)
     new PartitionReader[ColumnarBatch] {
       override def next(): Boolean = inner.next()
       override def get(): ColumnarBatch = {
@@ -334,7 +336,7 @@ class ScbfCdcReaderFactory(required: StructType,
     val part = p.asInstanceOf[ScbfCdcPartition]
     val innerSchema = innerRequired
     val inner = new ScbfRowReader(
-      ScbfFilePartition(part.path, part.length), innerSchema, conf.value)
+      ScbfFilePartition(part.path, part.length), innerSchema, conf.value.value)
     new PartitionReader[InternalRow] {
       override def next(): Boolean = inner.next()
       override def get(): InternalRow = {

@@ -555,8 +555,7 @@ class ScbfTable(
       }
       val p = new Path(root)
       return new ScbfHistoryScanBuilder(
-        p.getFileSystem(conf).makeQualified(p),
-        new ScbfUtil.SerializableConf(conf))
+        p.getFileSystem(conf).makeQualified(p), conf)
     }
     val maxFiles = Option(options.get("maxFilesPerTrigger")).map(_.toInt)
     val compactInterval = Option(options.get("compactInterval")).map(_.toInt)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -83,7 +84,7 @@ object ScbfHistoryRead {
 case class ScbfHistoryPartition(root: String, delta: String,
     start: Long = 0L, end: Long = Long.MaxValue) extends InputPartition
 
-class ScbfHistoryScan(root: Path, conf: ScbfUtil.SerializableConf)
+class ScbfHistoryScan(root: Path, conf: Configuration)
   extends Scan with Batch {
 
   override def readSchema(): StructType = ScbfHistoryRead.schema
@@ -99,13 +100,13 @@ class ScbfHistoryScan(root: Path, conf: ScbfUtil.SerializableConf)
   override def description(): String = s"SCBF history entries, $root"
 
   override def planInputPartitions(): Array[InputPartition] = {
-    if (!ScbfDiscovery.exists(root, conf.value)) {
+    if (!ScbfDiscovery.exists(root, conf)) {
       // same clone special-case as DESCRIBE HISTORY: a fresh branch has
       // no chain of its own — the generic no-log error would
       // misdiagnose a connector-created clone as a foreign directory.
       // A branch WITH local appends has a log and serves it, exactly
       // like the command.
-      if (ScbfClone.isClone(root, conf.value))
+      if (ScbfClone.isClone(root, conf))
         throw new graft.scbf.ScbfFormatException(
           s"history read on $root: a SHALLOW CLONE starts with no history " +
             "of its own — the ref list IS the branch point. Read the " +
@@ -116,8 +117,8 @@ class ScbfHistoryScan(root: Path, conf: ScbfUtil.SerializableConf)
           "is recorded by connector writes; a foreign/reference-tool " +
           "directory has none.")
     }
-    val fs = root.getFileSystem(conf.value)
-    ScbfDiscovery.commitChain(root, conf.value).flatMap { n =>
+    val fs = root.getFileSystem(conf)
+    ScbfDiscovery.commitChain(root, conf).flatMap { n =>
       val len =
         try if (ScbfDiscovery.isFold(n))
           fs.getFileStatus(new Path(ScbfDiscovery.dir(root), n)).getLen
@@ -152,7 +153,7 @@ class ScbfHistoryScan(root: Path, conf: ScbfUtil.SerializableConf)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
-      private val sconf = conf
+      private val taskConf = ScbfUtil.broadcastConf(conf)
       override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
         val hp = p.asInstanceOf[ScbfHistoryPartition]
         new PartitionReader[InternalRow] {
@@ -183,7 +184,7 @@ class ScbfHistoryScan(root: Path, conf: ScbfUtil.SerializableConf)
             opened = true
             try {
               val f = new Path(ScbfDiscovery.dir(rootP), hp.delta)
-              val stream = f.getFileSystem(sconf.value).open(f)
+              val stream = f.getFileSystem(taskConf.value.value).open(f)
               if (hp.start == 0L) {
                 val r = new org.apache.hadoop.util.LineReader(stream)
                 val n = r.readLine(text)
@@ -239,7 +240,7 @@ class ScbfHistoryScan(root: Path, conf: ScbfUtil.SerializableConf)
     }
 }
 
-class ScbfHistoryScanBuilder(root: Path, conf: ScbfUtil.SerializableConf)
+class ScbfHistoryScanBuilder(root: Path, conf: Configuration)
   extends ScanBuilder {
   override def build(): Scan = new ScbfHistoryScan(root, conf)
 }

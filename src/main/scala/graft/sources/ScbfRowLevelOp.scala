@@ -142,7 +142,7 @@ private[sources] class ScbfRowLevelOperation(
         if (partitionCols.isEmpty || bucketSpec.isDefined) new Write {
           override def toBatch: BatchWrite =
             new ScbfRowLevelBatchWrite(rootDir, info.schema(),
-              new ScbfUtil.SerializableConf(conf), maxBuf, partitionCols, op,
+              conf, maxBuf, partitionCols, op,
               bucketSpec)
         }
         else new Write with RequiresDistributionAndOrdering {
@@ -166,7 +166,7 @@ private[sources] class ScbfRowLevelOperation(
             Array.empty
           override def toBatch: BatchWrite =
             new ScbfRowLevelBatchWrite(rootDir, info.schema(),
-              new ScbfUtil.SerializableConf(conf), maxBuf, partitionCols, op,
+              conf, maxBuf, partitionCols, op,
               bucketSpec)
         }
     }
@@ -310,7 +310,7 @@ private[sources] object ScbfRowLevelBatchWrite {
 private[sources] class ScbfRowLevelBatchWrite(
     dir: String,
     schema: StructType,
-    conf: ScbfUtil.SerializableConf,
+    hconf: org.apache.hadoop.conf.Configuration,
     maxBufferedBytes: Long,
     partitionCols: Seq[String],
     op: ScbfRowLevelOperation,
@@ -318,7 +318,7 @@ private[sources] class ScbfRowLevelBatchWrite(
   extends BatchWrite {
 
   private val inner = new ScbfBatchWrite(dir, schema, truncate = false,
-    conf, maxBufferedBytes, filePrefix = None, replaceOnly = None,
+    hconf, maxBufferedBytes, filePrefix = None, replaceOnly = None,
     partitionCols = partitionCols, emitEmptyFiles = false,
     bucketSpec = bucketSpec)
 
@@ -327,7 +327,6 @@ private[sources] class ScbfRowLevelBatchWrite(
       schema.length)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val hconf = conf.value
     val root = new Path(dir)
     val fs = root.getFileSystem(hconf)
     val qroot = fs.makeQualified(root)

@@ -4,6 +4,7 @@ import java.util.OptionalLong
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
@@ -12,6 +13,7 @@ import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.scbf._
 
@@ -518,7 +520,7 @@ class ScbfScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ScbfPartitionReaderFactory(required, new ScbfUtil.SerializableConf(conf))
+    new ScbfPartitionReaderFactory(required, ScbfUtil.broadcastConf(conf))
 
   /** Planner statistics (broadcast decisions, AQE, join reorder hinge
    * on these). Sizes come from the file listing (free) but over the
@@ -991,17 +993,17 @@ case class ScbfFilePartition(path: String, length: Long, key: InternalRow = null
  * grouped); no file IO happens on the executor at all. */
 case class ScbfAggPartition(schema: StructType, rows: Array[Array[Any]]) extends InputPartition
 
-class ScbfPartitionReaderFactory(required: StructType, conf: ScbfUtil.SerializableConf)
+class ScbfPartitionReaderFactory(required: StructType, conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     partition.isInstanceOf[ScbfFilePartition]
 
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    new ScbfColumnarReader(p.asInstanceOf[ScbfFilePartition], required, conf.value)
+    new ScbfColumnarReader(p.asInstanceOf[ScbfFilePartition], required, conf.value.value)
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
-    case f: ScbfFilePartition => new ScbfRowReader(f, required, conf.value)
+    case f: ScbfFilePartition => new ScbfRowReader(f, required, conf.value.value)
     case a: ScbfAggPartition  => new ScbfAggReader(a)
   }
 }

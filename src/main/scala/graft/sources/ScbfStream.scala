@@ -689,7 +689,7 @@ class ScbfMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ScbfPartitionReaderFactory(required, new ScbfUtil.SerializableConf(conf))
+    new ScbfPartitionReaderFactory(required, ScbfUtil.broadcastConf(conf))
 
   /** Logs are the source of truth; commit only runs retention. Once a
    * snapshot's batch is committed, Spark will never re-plan batches at

@@ -1,9 +1,10 @@
 package graft.sources
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.scbf._
 
@@ -90,19 +91,12 @@ object ScbfUtil {
     dest
   }
 
-  /** Hadoop Configuration is not Serializable; standard writable-based
-   * wrapper so tasks receive the driver's filesystem settings. */
-  final class SerializableConf(@transient var value: Configuration) extends Serializable {
-    @throws[IOException]
-    private def writeObject(out: ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    @throws[IOException]
-    private def readObject(in: ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new Configuration(false)
-      value.readFields(in)
-    }
-  }
+  /** The filesystem settings for tasks, shipped once per factory rather
+   * than inside every task binary. Serializes the conf: call it only
+   * where a reader/writer factory ships. A COPY, so per-write options
+   * on the task-bound conf still reach the writers and local-mode tasks
+   * never share the driver's live `hadoopConfiguration`. */
+  def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(
+      new SerializableConfiguration(new Configuration(conf)))
 }

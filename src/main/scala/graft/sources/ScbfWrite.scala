@@ -4,10 +4,12 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.scbf._
 
@@ -109,7 +111,7 @@ class ScbfWriteBuilder(
         "INSERT OVERWRITE / truncate")
     override def toBatch: BatchWrite =
       new ScbfBatchWrite(dir, schema, doTruncate,
-        new ScbfUtil.SerializableConf(conf), maxBufferedBytes, filePrefix, replaceOnly,
+        conf, maxBufferedBytes, filePrefix, replaceOnly,
         partitionCols, rewriteOf,
         scopeFilters = scopeFilters, dynamicPartitionOverwrite = dynamicOverwrite,
         bucketSpec = bucketSpec, cdcTag = cdcTag, cdcRoot = cdcRoot,
@@ -123,8 +125,7 @@ class ScbfWriteBuilder(
       require(partitionCols.isEmpty && bucketSpec.isEmpty,
         "SCBF streaming sink does not support partitioned tables yet — " +
           "stream into the partition directory directly")
-      new ScbfStreamingWrite(dir, schema,
-        new ScbfUtil.SerializableConf(conf), maxBufferedBytes)
+      new ScbfStreamingWrite(dir, schema, conf, maxBufferedBytes)
     }
   }
 }
@@ -215,7 +216,7 @@ object ScbfWrite {
 
 class ScbfBatchWrite(
     dir: String, schema: StructType, truncate: Boolean,
-    conf: ScbfUtil.SerializableConf, maxBufferedBytes: Long,
+    conf: Configuration, maxBufferedBytes: Long,
     filePrefix: Option[String] = None, replaceOnly: Option[Set[String]] = None,
     partitionCols: Seq[String] = Seq.empty,
     // a var: the SQL row-level path (ScbfRowLevelBatchWrite) learns the
@@ -256,8 +257,8 @@ class ScbfBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val path = new Path(dir)
-    val fs = path.getFileSystem(conf.value)
-    if (!truncate) ScbfWrite.validateAppendSchema(dir, schema, conf.value)
+    val fs = path.getFileSystem(conf)
+    if (!truncate) ScbfWrite.validateAppendSchema(dir, schema, conf)
     // STATIC partition overwrite: capture the exact in-scope victims
     // now (deleted only at commit, like truncate's). Path cells decide
     // EXACTLY (point values); a file no cell can decide — a stray
@@ -267,8 +268,8 @@ class ScbfBatchWrite(
     scopeFilters.foreach { sf =>
       require(!truncate, "overwrite scope and truncate are exclusive")
       if (fs.exists(path)) {
-        val qroots = ScbfPartitions.qualifiedRoots(Seq(dir), conf.value)
-        val listed = ScbfDataSource.resolveFiles(Seq(dir), conf.value)
+        val qroots = ScbfPartitions.qualifiedRoots(Seq(dir), conf)
+        val listed = ScbfDataSource.resolveFiles(Seq(dir), conf)
         toReplace = listed.flatMap { f =>
           ScbfPartitions.decideByCells(f.getPath, schema, sf, qroots) match {
             case Some(true)  => Some(f.getPath)
@@ -285,7 +286,7 @@ class ScbfBatchWrite(
     if (truncate && fs.exists(path)) {
       // resolveFiles: recursive over partition subdirectories, so a
       // partitioned overwrite replaces the WHOLE table, not just root
-      val listed = ScbfDataSource.resolveFiles(Seq(dir), conf.value).map(_.getPath)
+      val listed = ScbfDataSource.resolveFiles(Seq(dir), conf).map(_.getPath)
       // a SNAPSHOT-scoped overwrite (OPTIMIZE rewrites pass the exact
       // file set they read) deletes only that snapshot: a file a
       // concurrent append publishes between the rewrite's read and this
@@ -297,16 +298,17 @@ class ScbfBatchWrite(
       }
     }
     fs.mkdirs(path)
+    val taskConf = ScbfUtil.broadcastConf(conf)
     if (partitionCols.isEmpty && bucketSpec.isEmpty)
-      new ScbfDataWriterFactory(dir, schema, conf, maxBufferedBytes, filePrefix,
+      new ScbfDataWriterFactory(dir, schema, taskConf, maxBufferedBytes, filePrefix,
         emitEmptyFiles)
     else
       new ScbfPartitionedDataWriterFactory(
-        dir, schema, conf, maxBufferedBytes, partitionCols, bucketSpec)
+        dir, schema, taskConf, maxBufferedBytes, partitionCols, bucketSpec)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(conf.value)
+    val fs = new Path(dir).getFileSystem(conf)
     // compare by file NAME: listStatus paths are fully qualified
     // (file:/...), task-side staged names are not — path-string
     // comparison would never match. Names are unique (uuid suffix).
@@ -330,7 +332,7 @@ class ScbfBatchWrite(
         val i = e.name.lastIndexOf('/'); if (i < 0) e.name else e.name.substring(i + 1)
       }.toSet
       toReplace = bySub.keySet.toSeq.flatMap(sub =>
-          ScbfDataSource.resolveFiles(Seq(dirOf(sub).toString), conf.value)
+          ScbfDataSource.resolveFiles(Seq(dirOf(sub).toString), conf)
             .map(_.getPath))
         .filterNot(p => newBare.contains(p.getName))
     }
@@ -347,7 +349,7 @@ class ScbfBatchWrite(
     // guards the WHOLE rewrite job, not just its planning window.
     for (snap <- occSnapTs; victims <- replaceOnly) {
       val found = ScbfOcc.conflicts(
-        ScbfOcc.entriesAfter(qroot, conf.value, snap,
+        ScbfOcc.entriesAfter(qroot, conf, snap,
           why => throw new ScbfFormatException(
             s"snapshot rewrite on $dir: cannot verify concurrent-commit " +
               s"safety — $why")),
@@ -389,7 +391,7 @@ class ScbfBatchWrite(
     val cdcRootQ = fs.makeQualified(new Path(cdcRoot.getOrElse(dir)))
     val captureTag: Option[String] = cdcTag.orElse {
       if (victims.nonEmpty && (replaceOnly.isDefined || scopedOverwrite) &&
-          ScbfCdc.enabled(cdcRootQ, conf.value))
+          ScbfCdc.enabled(cdcRootQ, conf))
         Some(ScbfCdc.newTag(if (replaceOnly.isDefined) "compact" else "overwrite"))
       else None
     }
@@ -452,7 +454,7 @@ class ScbfBatchWrite(
           ScbfStats.ioPool.submit(new java.util.concurrent.Callable[Unit] {
             override def call(): Unit = {
               val es = bySub.getOrElse(sub, Seq.empty)
-              ScbfStats.mergeManifest(dirOf(sub), conf.value,
+              ScbfStats.mergeManifest(dirOf(sub), conf,
                 localized(es.toIndexedSeq, sub),
                 fresh = truncate, drop = victimBySub.getOrElse(sub, Set.empty))
             }
@@ -467,7 +469,7 @@ class ScbfBatchWrite(
           val touched = bySub.keySet.map(dirOf(_).toString)
           toReplace.map(_.getParent).distinct
             .filterNot(p => touched.contains(p.toString))
-            .foreach(p => ScbfStats.mergeManifest(p, conf.value, Seq.empty, fresh = true))
+            .foreach(p => ScbfStats.mergeManifest(p, conf, Seq.empty, fresh = true))
         }
       case Some(snapshot) =>
         // snapshot-scoped overwrite COEXISTS with concurrent appends:
@@ -478,12 +480,12 @@ class ScbfBatchWrite(
         // appending mid-merge keeps its entries: its names can never be
         // in the drop set, where a retain-the-live-listing prune would
         // race its commit)
-        val live = ScbfDataSource.resolveFiles(Seq(dir), conf.value)
+        val live = ScbfDataSource.resolveFiles(Seq(dir), conf)
           .map(_.getPath.getName).toSet
         if ((live -- snapshot -- newNames).isEmpty)
-          ScbfStats.mergeManifest(new Path(dir), conf.value, entries, fresh = true)
+          ScbfStats.mergeManifest(new Path(dir), conf, entries, fresh = true)
         else
-          ScbfStats.mergeManifest(new Path(dir), conf.value, entries, fresh = false,
+          ScbfStats.mergeManifest(new Path(dir), conf, entries, fresh = false,
             drop = toReplace.map(_.getName).toSet -- newNames)
     }
     // announce the published files to the streaming discovery log
@@ -521,8 +523,8 @@ class ScbfBatchWrite(
       entries.map(e => ScbfDiscovery.Entry(e.name, e.dataLen, now, rewriteOf, rowsChanged,
         entryTag))
     if (truncate && replaceOnly.isEmpty)
-      ScbfDiscovery.reset(new Path(dir), conf.value, announced)
-    else ScbfDiscovery.append(new Path(dir), conf.value, announced)
+      ScbfDiscovery.reset(new Path(dir), conf, announced)
+    else ScbfDiscovery.append(new Path(dir), conf, announced)
     // scoped overwrite = delete-old-rows + insert-new: the new files
     // announced above are PLAIN entries (they are new data, not the
     // victims' surviving rows — marking them rewriteOf would make a
@@ -530,10 +532,10 @@ class ScbfBatchWrite(
     // disappearance gets its own REMOVAL entry, C:1 like any
     // row-changing commit (same record a metadata-only DELETE leaves)
     if (scopedOverwrite && toReplace.nonEmpty &&
-        ScbfDiscovery.exists(new Path(dir), conf.value)) {
+        ScbfDiscovery.exists(new Path(dir), conf)) {
       val qr = fs.makeQualified(new Path(dir))
       def relOf2(p: Path): String = ScbfCdc.relName(fs, qr, p)
-      ScbfDiscovery.append(new Path(dir), conf.value, Seq(ScbfDiscovery.Entry(
+      ScbfDiscovery.append(new Path(dir), conf, Seq(ScbfDiscovery.Entry(
         s"ow-${java.util.UUID.randomUUID().toString.take(8)}${ScbfDiscovery.RemovalSuffix}",
         ScbfDiscovery.RemovedLen, now,
         rewriteOf = toReplace.map(relOf2).sorted, rowsChanged = true,
@@ -542,7 +544,7 @@ class ScbfBatchWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(conf.value)
+    val fs = new Path(dir).getFileSystem(conf)
     messages.collect { case ScbfCommitMessage(entries) =>
       entries.foreach { e =>
         val f = new Path(dir, e.name)
@@ -567,7 +569,7 @@ class ScbfBatchWrite(
    * (dot-prefix) and get cleared by the next successful overwrite. */
   private def sweepTemps(): Unit = {
     val path = new Path(dir)
-    val fs = path.getFileSystem(conf.value)
+    val fs = path.getFileSystem(conf)
     def sweep(p: Path): Unit =
       if (fs.exists(p)) fs.listStatus(p).toSeq.foreach {
         case f if f.isFile && ScbfWrite.isTemp(f.getPath.getName) =>
@@ -633,7 +635,7 @@ case class ScbfStagedCommitMessage(
  */
 class ScbfStreamingWrite(
     dir: String, schema: StructType,
-    conf: ScbfUtil.SerializableConf, maxBufferedBytes: Long)
+    conf: Configuration, maxBufferedBytes: Long)
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
@@ -645,18 +647,19 @@ class ScbfStreamingWrite(
     // appends, checked once per query (epoch 2+ would only re-validate
     // this query's own files — skip the header read per trigger)
     if (!appendValidated) {
-      ScbfWrite.validateAppendSchema(dir, schema, conf.value)
+      ScbfWrite.validateAppendSchema(dir, schema, conf)
       appendValidated = true
     }
-    path.getFileSystem(conf.value).mkdirs(path)
-    new ScbfStreamingDataWriterFactory(dir, schema, conf, maxBufferedBytes)
+    path.getFileSystem(conf).mkdirs(path)
+    new ScbfStreamingDataWriterFactory(dir, schema, ScbfUtil.broadcastConf(conf),
+      maxBufferedBytes)
   }
 
   @volatile private var appendValidated = false
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     ScbfWrite.epochCommitHook()
-    val fs = new Path(dir).getFileSystem(conf.value)
+    val fs = new Path(dir).getFileSystem(conf)
     messages.collect { case ScbfStagedCommitMessage(pairs, _) => pairs }.flatten
       .foreach { case (tmp, dst) =>
         val (t, d) = (new Path(tmp), new Path(dst))
@@ -699,7 +702,7 @@ class ScbfStreamingWrite(
     val entries = messages.collect { case ScbfStagedCommitMessage(_, es) => es }.flatten
     if (entries.nonEmpty) {
       entries.foreach { e =>
-        ScbfStats.write(new Path(dir, e.name), conf.value, e.stats, e.dataLen)
+        ScbfStats.write(new Path(dir, e.name), conf, e.stats, e.dataLen)
       }
       // Manifest merges are THROTTLED (every ManifestEpochInterval-th
       // epoch, epoch-id-keyed so replays stay deterministic): merging
@@ -713,7 +716,7 @@ class ScbfStreamingWrite(
       // sidecar-covered (skipping intact, one extra read each).
       pendingManifest ++= entries
       if (epochId % ScbfWrite.ManifestEpochInterval == 0) {
-        ScbfStats.mergeManifest(new Path(dir), conf.value,
+        ScbfStats.mergeManifest(new Path(dir), conf,
           pendingManifest.toSeq, fresh = false)
         pendingManifest.clear()
       }
@@ -723,7 +726,7 @@ class ScbfStreamingWrite(
       // a duplicate delta naming the same files — consumers dedup by
       // path, harmless.
       val now = System.currentTimeMillis()
-      ScbfDiscovery.append(new Path(dir), conf.value,
+      ScbfDiscovery.append(new Path(dir), conf,
         entries.toSeq.map(e => ScbfDiscovery.Entry(e.name, e.dataLen, now)))
     }
   }
@@ -734,7 +737,7 @@ class ScbfStreamingWrite(
     new scala.collection.mutable.ArrayBuffer[ScbfStats.FileEntry]()
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(conf.value)
+    val fs = new Path(dir).getFileSystem(conf)
     messages.collect { case ScbfStagedCommitMessage(pairs, _) => pairs }.flatten
       .foreach { case (tmp, _) =>
         val t = new Path(tmp)
@@ -768,18 +771,18 @@ class ScbfStreamingWrite(
 }
 
 class ScbfStreamingDataWriterFactory(
-    dir: String, schema: StructType, conf: ScbfUtil.SerializableConf, maxBufferedBytes: Long)
+    dir: String, schema: StructType, conf: Broadcast[SerializableConfiguration], maxBufferedBytes: Long)
   extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new ScbfDataWriter(dir, schema, conf.value, maxBufferedBytes,
+    new ScbfDataWriter(dir, schema, conf.value.value, maxBufferedBytes,
       // deterministic: replayed epochs regenerate the same names
       seq => f"part-$epochId%05d-$partitionId%05d-$seq%03d${Scbf.FileExtension}",
       publishOnTaskCommit = false, emitEmptyFile = false)
 }
 
 class ScbfDataWriterFactory(
-    dir: String, schema: StructType, conf: ScbfUtil.SerializableConf,
+    dir: String, schema: StructType, conf: Broadcast[SerializableConfiguration],
     maxBufferedBytes: Long, filePrefix: Option[String] = None,
     // INSERT/overwrite keeps the empty-partition file (an empty table
     // stays readable — schema lives in the header); the row-level
@@ -793,20 +796,20 @@ class ScbfDataWriterFactory(
     // files so it can distinguish them from a concurrent append's.
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val pre = filePrefix.getOrElse("")
-    new ScbfDataWriter(dir, schema, conf.value, maxBufferedBytes,
+    new ScbfDataWriter(dir, schema, conf.value.value, maxBufferedBytes,
       seq => f"${pre}part-$partitionId%05d-$taskId-$attempt-$seq%03d${Scbf.FileExtension}",
       publishOnTaskCommit = true, emitEmptyFile = emitEmptyFiles)
   }
 }
 
 class ScbfPartitionedDataWriterFactory(
-    dir: String, schema: StructType, conf: ScbfUtil.SerializableConf,
+    dir: String, schema: StructType, conf: Broadcast[SerializableConfiguration],
     maxBufferedBytes: Long, partitionCols: Seq[String],
     bucketSpec: Option[(String, Int)] = None)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new ScbfPartitionedDataWriter(
-      dir, schema, conf.value, maxBufferedBytes, partitionCols, partitionId, taskId,
+      dir, schema, conf.value.value, maxBufferedBytes, partitionCols, partitionId, taskId,
       bucketSpec)
 }
 

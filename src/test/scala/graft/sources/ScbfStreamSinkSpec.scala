@@ -42,10 +42,8 @@ class ScbfStreamSinkSpec extends AnyFunSuite with SparkTestBase {
 
   private def runEpoch(dir: String, epochId: Long, rows: Seq[(Int, String)],
       publish: Boolean = true): Unit = {
-    val conf = new ScbfUtil.SerializableConf(
-      spark.sparkContext.hadoopConfiguration)
-    val write = new ScbfStreamingWrite(dir, schema, conf,
-      ScbfWrite.DefaultMaxBufferedBytes)
+    val write = new ScbfStreamingWrite(dir, schema,
+      spark.sparkContext.hadoopConfiguration, ScbfWrite.DefaultMaxBufferedBytes)
     val factory = write.createStreamingWriterFactory(
       new PhysicalWriteInfo { override def numPartitions(): Int = 1 })
     val writer = factory.createWriter(0, 0L, epochId)
