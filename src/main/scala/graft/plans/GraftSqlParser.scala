@@ -1288,7 +1288,7 @@ case class GraftRestoreTableCommand(table: String, point: RestorePoint)
     AttributeReference("files_kept", IntegerType, nullable = false)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    import graft.sources.{ScbfBloom, ScbfDataSource, ScbfDiscovery, ScbfStats}
+    import graft.sources.{ScbfDataSource, ScbfDiscovery, ScbfRewrite, ScbfStats}
     val conf = spark.sessionState.newHadoopConf()
     // graft-catalog tables resolve through their own catalog (the table
     // IS its warehouse directory) — same resolution as DESCRIBE HISTORY
@@ -1324,28 +1324,13 @@ case class GraftRestoreTableCommand(table: String, point: RestorePoint)
     // announce-then-remove, same contract as the row-level takedown:
     // log-path streams see the change under their onChangeCommit policy
     if (ScbfDiscovery.exists(qroot, conf)) {
-      ScbfDiscovery.append(qroot, conf, Seq(ScbfDiscovery.Entry(
-        s"restore-${java.util.UUID.randomUUID().toString.take(8)}" +
-          ScbfDiscovery.RemovalSuffix,
-        ScbfDiscovery.RemovedLen, System.currentTimeMillis(),
-        rewriteOf = extras.map(f => rel(f.getPath)).sorted,
-        rowsChanged = true)))
+      ScbfDiscovery.append(qroot, conf, Seq(ScbfRewrite.removalEntry(
+        s"restore-${java.util.UUID.randomUUID().toString.take(8)}",
+        extras.map(f => rel(f.getPath)), cdcTag = None)))
     }
-    // zero-read removal: file + sidecars on the shared driver IO pool
-    // (a restored wave can be 10⁵ files — on an object store the
-    // deletes must overlap, not serialize their latencies), then one
-    // manifest drop per touched directory
-    val deletes = extras.map(f => ScbfStats.ioPool.submit(
-      new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = {
-          fs.delete(f.getPath, false)
-          val sc = ScbfStats.sidecarPath(f.getPath)
-          if (fs.exists(sc)) fs.delete(sc, false)
-          val bl = ScbfBloom.bloomPath(f.getPath)
-          if (fs.exists(bl)) fs.delete(bl, false)
-        }
-      }))
-    deletes.foreach(_.get())
+    // zero-read removal (file + sidecars, parallel), then one manifest
+    // drop per touched directory
+    ScbfRewrite.removeVictims(fs, extras.map(_.getPath), retainAt = None)
     extras.groupBy(_.getPath.getParent).foreach { case (d, fsInDir) =>
       ScbfStats.mergeManifest(d, conf, Seq.empty, fresh = false,
         drop = fsInDir.map(_.getPath.getName).toSet)

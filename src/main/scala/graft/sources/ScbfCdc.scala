@@ -173,11 +173,7 @@ object ScbfCdc extends org.apache.spark.internal.Logging {
           if (!ok) {
             logWarning(s"CDC retention: could not rename $p to $dest — " +
               "deleting instead; a CDC window over this commit will refuse")
-            fs.delete(p, false)
-            val sc = ScbfStats.sidecarPath(p)
-            if (fs.exists(sc)) fs.delete(sc, false)
-            val bl = ScbfBloom.bloomPath(p)
-            if (fs.exists(bl)) fs.delete(bl, false)
+            ScbfOcc.deleteWithSidecars(fs, p)
           } else {
             // sidecar renames CHECKED (ADVICE r13): a failed one would
             // silently orphan the sidecar at the old path and cost
@@ -484,10 +480,8 @@ object ScbfCdc extends org.apache.spark.internal.Logging {
           val listed =
             try {
               if (!fs.exists(d)) Seq.empty
-              else fs.listStatus(d).toSeq.filter(f => f.isFile && {
-                val n = f.getPath.getName
-                n.endsWith(graft.scbf.Scbf.FileExtension) && !n.startsWith(".")
-              })
+              else fs.listStatus(d).toSeq.filter(f =>
+                f.isFile && ScbfDataSource.isDataFile(f.getPath))
             } catch { case NonFatal(ex) =>
               refuse(s"CDC rows area $d is unlistable (${ex.getMessage}); " +
                 "resync from a full read.")

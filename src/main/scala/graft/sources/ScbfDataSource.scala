@@ -137,8 +137,7 @@ object ScbfDataSource {
           case c if c.isDirectory && !isHidden(c.getPath) &&
               c.getPath.getName.indexOf('=') > 0 =>
             walkChildren(fs.listStatus(c.getPath).toSeq)
-          case c if c.isFile && c.getPath.getName.endsWith(Scbf.FileExtension) &&
-              !isHidden(c.getPath) => Seq(c)
+          case c if c.isFile && isDataFile(c.getPath) => Seq(c)
           case _ => Seq.empty
         }
       globbed.flatMap {
@@ -164,6 +163,13 @@ object ScbfDataSource {
 
   private def isHidden(p: Path): Boolean =
     p.getName.startsWith("_") || p.getName.startsWith(".")
+
+  /** A LIVE data file's name: the `.scbf` extension, not hidden (`_` or
+   * `.` prefix — temps, sidecars and foreign files). The one predicate
+   * for every leaf listing that scopes data, so a rewrite never takes
+   * as a victim a file its re-read would drop as hidden. */
+  def isDataFile(p: Path): Boolean =
+    p.getName.endsWith(Scbf.FileExtension) && !isHidden(p)
 
   /** ONE data file, via an early-exit depth-first walk in name order —
    * what schema inference needs (every file's header carries the full
@@ -385,7 +391,7 @@ class ScbfTable(
       ScbfDelete.deleteWhere(SparkSession.active, tablePaths.head, conf, filters)
       ()
     } else ScbfDelete.deleteWhereTable(SparkSession.active, tablePaths.head,
-      conf, schema, partitionColNames, filters,
+      conf, schema, filters,
       parallelism = graft.GraftConf.int(SparkSession.active,
         graft.GraftConf.SweepParallelism, 8))
   }
@@ -474,15 +480,8 @@ class ScbfTable(
     val victims = ScbfDataSource.resolveFiles(Seq(d.toString), conf)
     ScbfUtil.writeEmptyScbf(fs, d, schema, "pm-keeper-",
       announceRoot = Some(qroot))
-    victims.foreach { f =>
-      fs.delete(f.getPath, false)
-      val sc = ScbfStats.sidecarPath(f.getPath)
-      if (fs.exists(sc)) fs.delete(sc, false)
-      val bl = ScbfBloom.bloomPath(f.getPath)
-      if (fs.exists(bl)) fs.delete(bl, false)
-    }
-    ScbfStats.mergeManifest(d, conf, Seq.empty, fresh = false,
-      drop = victims.map(_.getPath.getName).toSet)
+    ScbfRewrite.removeVictims(fs, victims.map(_.getPath), retainAt = None)
+    ScbfRewrite.dropFromManifests(conf, victims.map(_.getPath))
     true
   }
 

@@ -21,31 +21,21 @@ import org.apache.spark.sql.sources._
  * manifest merge, bloom/stats sidecars — all inherited), and the
  * originals (plus their sidecars) are deleted last.
  *
- * Failure semantics, same logless contract the OPTIMIZE rewrites
- * document: a crash BEFORE the append job commits aborts cleanly (new
- * files are swept, originals untouched — the delete simply didn't
- * happen); a crash in the window AFTER the append commits and before
- * the originals are removed leaves original+replacement coexisting
- * (duplicated survivors, deleted rows still gone from the
- * replacement but present in the original). Readers during a healthy
- * delete see the same transient old+new window `cluster` documents.
- * A deployment needing atomic multi-file visibility layers a
- * transaction log above the format — out of scope for the frozen
- * reference format, stated honestly here.
+ * The commit steps — rewrite-transparent listing and heal, OCC check
+ * and post-publish recheck with rollback, victim removal, root-log
+ * re-announcement — are the shared copy-on-write commit path
+ * ([[ScbfRewrite]]), with its failure contract: a crash before the
+ * replacement commits leaves the delete un-happened; a crash after it
+ * leaves original and replacement coexisting until the next rewrite's
+ * listing hides and heals the original.
  *
  * The no-op fast path matters operationally: probing `DELETE WHERE
  * doc_id = k` over a clustered/bloom'd directory where nothing
  * matches rewrites NOTHING (pure metadata reads).
  *
- * Concurrency contract: concurrent APPENDS are handled (the fold-in
- * re-list rounds in [[rewriteRounds]], and snapshot scoping on the
- * OPTIMIZE side). Concurrent REWRITERS — two deletes/updates/
- * optimizes on one directory — remain a single-writer contract, as in
- * any logless table format: two rewrites can scope the same original
- * and both republish survivors from it (duplicates), or one can
- * remove a file the other is mid-read. Serialize maintenance per
- * directory; a deployment needing multi-writer rewrites layers a
- * transaction log above the frozen format.
+ * Concurrency: concurrent APPENDS fold in through the bounded re-list
+ * rounds of [[rewriteRounds]]; concurrent REWRITERS are arbitrated by
+ * the shared OCC ([[ScbfRewrite.Occ]]).
  */
 object ScbfDelete {
 
@@ -105,26 +95,19 @@ object ScbfDelete {
    * to the root's own files instead of recursing into every
    * partition.
    *
-   * After each directory's rewrite commits, its replacement files are
-   * re-announced to the ROOT discovery log with subdir-qualified
-   * names and the `C:1` row-changing tag — a root stream gets the
-   * identical onChangeCommit semantics (skip with a warning / deliver
-   * / fail) as a flat-directory DELETE, instead of the bare-name
-   * partition-log announcements it cannot match. `parallelism` drives
+   * After each directory's rewrite commits, it is re-announced to the
+   * ROOT discovery log ([[ScbfRewrite.announceToRoot]], row-changing),
+   * so a root stream gets the same onChangeCommit semantics as for a
+   * flat-directory DELETE. `parallelism` drives
    * that many per-directory rewrites as concurrent Spark jobs (same
    * contract as [[ScbfMaintenance.clusterTable]]: every started
    * attempt completes before the first failure surfaces).
-   * `partitionCols` is not consulted for DELETE (the single-mechanism
-   * design needs no predicate split) — it stays in the signature for
-   * symmetry with [[updateWhereTable]], which must refuse
-   * partition-column SETs.
    */
   def deleteWhereTable(
       spark: SparkSession,
       rootDir: String,
       conf: org.apache.hadoop.conf.Configuration,
       tableSchema: org.apache.spark.sql.types.StructType,
-      partitionCols: Seq[String],
       filters: Array[Filter],
       parallelism: Int = 1): Unit = {
     val root = new Path(rootDir)
@@ -178,42 +161,16 @@ object ScbfDelete {
     // no-op the optimization (correctness unaffected — conservative)
     val qroots = ScbfPartitions.qualifiedRoots(Seq(rootDir), conf)
     def sweepOne(part: Path): Unit = {
-      val sub = qroot.toUri.relativize(fs.makeQualified(part).toUri)
-        .getPath.stripSuffix("/")
       // root-dir rounds announce themselves in their own commit;
       // subdirectory rounds re-announce to the root log PER ROUND,
-      // immediately after each round's commit (atomic-rename appends:
-      // safe from concurrent pool threads, like the sweep) — a crash
-      // between a round's partition-level commit and a deferred
-      // whole-partition announcement would leave no C:1 mark and make
-      // a caught-up root stream's next reconcile re-deliver the
-      // replacement's rows even under onChangeCommit=skip; per-round
-      // announcement narrows that window to the flat path's
-      val announce: RewriteRound => Unit = r =>
-        if (sub.nonEmpty) {
-          val live = ScbfDataSource.resolveFiles(Seq(part.toString), conf)
-          val now = System.currentTimeMillis()
-          val produced = live.filter(_.getPath.getName.startsWith(r.prefix))
-          val entries =
-            if (produced.nonEmpty) produced.map(f =>
-              ScbfDiscovery.Entry(s"$sub/${f.getPath.getName}", f.getLen, now,
-                rewriteOf = r.replaced.map(n => s"$sub/$n").sorted,
-                rowsChanged = true, cdcTag = r.cdcTag))
-            // metadata-only round (DELETE whole-file fast path): no
-            // replacement exists to carry the announcement, so the
-            // root log gets the same REMOVAL entry the partition's own
-            // log got — subdir-qualified, like every root announcement
-            // (same existing-log gate as the flat path)
-            else if (r.replaced.nonEmpty && ScbfDiscovery.exists(qroot, conf))
-              Seq(ScbfDiscovery.Entry(
-                s"$sub/${r.prefix.stripSuffix("-")}${ScbfDiscovery.RemovalSuffix}",
-                ScbfDiscovery.RemovedLen, now,
-                rewriteOf = r.replaced.map(n => s"$sub/$n").sorted,
-                rowsChanged = true, cdcTag = r.cdcTag))
-            else Seq.empty
-          ScbfDiscovery.append(qroot, conf, entries)
-        }
-      perPartition(part.toString, announce)
+      // immediately after each round's commit — a crash between a
+      // round's partition-level commit and a deferred whole-partition
+      // announcement would leave no C:1 mark, and a caught-up root
+      // stream's next reconcile would re-deliver the replacement's rows
+      // even under onChangeCommit=skip
+      perPartition(part.toString, r =>
+        ScbfRewrite.announceToRoot(qroot, conf, part, r.prefix, r.replaced,
+          rowsChanged = true, r.cdcTag))
       ()
     }
     // Bounded re-list rounds at the DIRECTORY level, mirroring
@@ -377,6 +334,7 @@ object ScbfDelete {
       s"untranslatable ${op.toLowerCase} condition: ${filters.mkString(", ")}")
     val cond = filters.flatMap(filterToColumn).reduceOption(_ && _)
       .getOrElse(lit(true)) // empty WHERE = the whole table
+    val where = s"$op on $dir"
     // names already processed or proven out of scope, plus this job's
     // own replacement prefixes (survivor files must never re-enter)
     var accounted = Set.empty[String]
@@ -405,107 +363,45 @@ object ScbfDelete {
     // 10⁵-file table must not cost full-table listings per round)
     def listCandidates(): Seq[org.apache.hadoop.fs.FileStatus] =
       if (leafOnly)
-        dfs.listStatus(qdir).toSeq.filter(f => f.isFile && {
-          val n = f.getPath.getName
-          n.endsWith(graft.scbf.Scbf.FileExtension) && !n.startsWith(".")
-        })
+        dfs.listStatus(qdir).toSeq.filter(f =>
+          f.isFile && ScbfDataSource.isDataFile(f.getPath))
       else ScbfDataSource.resolveFiles(Seq(dir), conf)
-    // ---- OCC: write-write conflict detection (Delta's
-    // ConcurrentDeleteRead contract; the shared rule/rollback live in
-    // [[ScbfOcc]]) -------------------------------------------------
-    // Two concurrent mutations whose victim sets overlap must not both
-    // publish: the loser would either resurrect rows the winner deleted
-    // (its replacement re-publishes survivors of files the winner
-    // rewrote) or silently lose the winner's update — the lost-update
-    // shape. Each round snapshots the log's newest commit instant
-    // BEFORE listing, then verifies nothing committed since has named
-    // one of this round's victims in rewriteOf: once just before any
-    // side effect (cheap abort) and once again after publishing but
-    // before the originals are removed (the publish itself re-checks —
-    // whichever racer appends second sees the other's entries, so two
-    // overlapping mutations can never BOTH keep their replacements;
-    // the later one rolls its replacement back through the same
-    // aborted-rewrite scrub path managed schema rewrites use). An
-    // UNVERIFIABLE recheck (replay failure) rolls back too — fail
-    // closed, never leave announced entries Spark's abort then orphans.
-    // Arbitration (round 15, on the ordinal-CAS protocol): of two
-    // racers that both published, exactly the HIGHER ordinal rolls
-    // back at its recheck — single-loser, no retry storm (see
-    // ScbfOcc scaladoc).
-    // Cost: one bounded replay of the post-snapshot deltas per check —
-    // noise next to the rewrite IO.
-    def postSnapEntries(snapTs: Long): Seq[(ScbfDiscovery.Entry, String)] =
-      ScbfOcc.entriesAfter(qdir, conf, snapTs,
-        why => throw new graft.scbf.ScbfFormatException(
-          s"$op on $dir: cannot verify concurrent-commit safety — $why"))
-    // ---- rewrite-transparent listing (the coexistence fix — see
-    // ScbfOcc.recordedVictims): names the log records as another
-    // commit's victims are dead originals pending removal; planning
-    // them would double their rows with their replacements'. The full
-    // chain replays ONCE per operation; each round extends the set
-    // with commits that landed since (one bounded replay from the
-    // op-start instant — the same bill the recheck pays).
-    def refuseVictims(why: String): Nothing =
-      throw new graft.scbf.ScbfFormatException(
-        s"$op on $dir: cannot verify the listing's rewrite-transparency " +
-          s"— $why")
-    val opStartTs: Option[Long] = ScbfOcc.snapshot(qdir, conf, refuseVictims)
+    // The rewrite-transparent listing (ScbfRewrite.liveListing) needs
+    // the log's recorded victims. The full chain replays ONCE per
+    // operation; each round extends the set with the commits that
+    // landed since — one bounded replay from the op-start instant, the
+    // same bill the OCC recheck pays.
+    val opStartTs: Option[Long] =
+      ScbfOcc.snapshot(qdir, conf, ScbfRewrite.listingRefusal(where))
     val opVictims: Map[String, Seq[ScbfOcc.VictimRec]] =
       if (opStartTs.isEmpty) Map.empty
-      else ScbfOcc.recordedVictims(qdir, conf, refuseVictims)
+      else ScbfRewrite.recordedVictims(where, qdir, conf)
+    val sinceOpStart = new ScbfRewrite.Occ(where, qdir, conf, opStartTs)
     def recordedVictimsNow(): Map[String, Seq[ScbfOcc.VictimRec]] =
-      opStartTs match {
-        case Some(t0) =>
-          val late = postSnapEntries(t0)
-            .flatMap { case (e, d) =>
-              e.rewriteOf.map(_ -> ScbfOcc.recOf(e, d)) }
-            .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-          (opVictims.keySet ++ late.keySet).iterator.map(v =>
-            v -> (opVictims.getOrElse(v, Nil) ++ late.getOrElse(v, Nil))).toMap
-        case None =>
-          // no chain at op start: any chain that appears mid-op is
-          // young and cheap to replay whole
-          if (ScbfDiscovery.exists(qdir, conf))
-            ScbfOcc.recordedVictims(qdir, conf, refuseVictims)
-          else Map.empty
+      if (opStartTs.isDefined) {
+        val late = sinceOpStart.entries()
+          .flatMap { case (e, d) => e.rewriteOf.map(_ -> ScbfOcc.recOf(e, d)) }
+          .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+        (opVictims.keySet ++ late.keySet).iterator.map(v =>
+          v -> (opVictims.getOrElse(v, Nil) ++ late.getOrElse(v, Nil))).toMap
       }
-    def refuseConflict(found: Seq[String], phase: String): Unit =
-      if (found.nonEmpty) throw new graft.scbf.ScbfFormatException(
-        ScbfOcc.refusalMessage(s"$op on $dir", found, phase))
+      // no chain at op start: any chain that appears mid-op is young
+      // and cheap to replay whole
+      else if (ScbfDiscovery.exists(qdir, conf))
+        ScbfRewrite.recordedVictims(where, qdir, conf)
+      else Map.empty
     var round = 0
     while (true) {
       round += 1
-      // newest published commit instant BEFORE this round's listing:
-      // anything stamped after it committed concurrently with the
-      // round; None (genuinely no chain) skips OCC, a FAILED listing
-      // refuses — see ScbfOcc.snapshot
-      val snapTs: Option[Long] = ScbfOcc.snapshot(qdir, conf,
-        why => throw new graft.scbf.ScbfFormatException(
-          s"$op on $dir: cannot verify concurrent-commit safety — $why"))
-      // the rewrite-transparent VIEW: recorded victims whose
-      // replacements are themselves listed (or whose takedown is
-      // recorded) are dead bytes — excluded from the round's whole
-      // universe, the empty-table guard's included
-      val listedRaw = listCandidates()
-      val listedNames = listedRaw.iterator.flatMap(f =>
-        Seq(f.getPath.getName, ScbfCdc.relName(dfs, qdir, f.getPath))).toSet
-      val victimRecords = recordedVictimsNow()
-      val dead = ScbfOcc.deadAmong(listedNames, victimRecords,
-        listedNames.contains) // listCandidates is unpruned — sound universe
-      def in(set: Set[String])(f: org.apache.hadoop.fs.FileStatus): Boolean =
-        set.contains(f.getPath.getName) ||
-          set.contains(ScbfCdc.relName(dfs, qdir, f.getPath))
-      // HEAL while we're here (both idempotent against a live owner
-      // finishing concurrently, both staleness-gated). ROLLBACKS
-      // FIRST: with a crashed loser's replacement still on disk, the
-      // removal heal's tag preference could retain a victim's bytes
-      // under the loser's tag — the very dir the rollback heal then
-      // deletes; healing the loser away first removes the ambiguity.
-      ScbfOcc.completePendingRollbacks(dfs, qdir, conf,
-        listedRaw.filter(in(dead.loserOutputs)), victimRecords)
-      ScbfOcc.completePendingRemovals(dfs, qdir, conf,
-        listedRaw.filter(in(dead.originals)), victimRecords)
-      val listed = listedRaw.filterNot(in(dead.all))
+      // OCC snapshot BEFORE this round's listing: anything stamped
+      // after it committed concurrently with the round
+      val occ = new ScbfRewrite.Occ(where, qdir, conf,
+        ScbfRewrite.snapshot(where, qdir, conf))
+      // recorded victims are dead bytes, excluded from the round's whole
+      // universe (the empty-table guard's included) and healed once
+      // stale; listCandidates is unpruned, so it is its own universe
+      val listed = ScbfRewrite.liveListing(where, dfs, qdir, conf,
+        listCandidates(), recordedVictimsNow(), probeFs = false, heal = true)
       val candidates = listed
         .filterNot(f => accounted.contains(f.getPath.getName) ||
           ourPrefixes.exists(f.getPath.getName.startsWith))
@@ -548,6 +444,15 @@ object ScbfDelete {
             affected.size == listed.size)
           Seq(affected.minBy(_.getLen))
         else rewriteSet0
+      val affectedNames = affected.map(_.getPath.getName).toSet
+      val removalId = prefix.stripSuffix("-")
+      val removalName = s"$removalId${ScbfDiscovery.RemovalSuffix}"
+      def selfName(n: String): Boolean =
+        n == removalName || ourPrefixes.exists(p =>
+          n.startsWith(p) || n.startsWith(p.stripSuffix("-")))
+      occ.checkBeforePublish(affectedNames, selfName)
+      prePublishHook()
+      val tag = if (cdcOn) Some(ScbfCdc.newTag(op.toLowerCase(java.util.Locale.ROOT))) else None
       // CDC capture, BEFORE the replacement commits (a crash before
       // the commit aborts cleanly; the stray un-announced tag dir is
       // inert and vacuumable): materialize the round's change rows
@@ -556,18 +461,6 @@ object ScbfDelete {
       // source scan is shared: persisted across the change-row jobs
       // and the replacement rewrite, so CDC adds ~one pass over the
       // round's scope, not two or three.
-      val affectedNames = affected.map(_.getPath.getName).toSet
-      val removalName = s"${prefix.stripSuffix("-")}${ScbfDiscovery.RemovalSuffix}"
-      def selfName(n: String): Boolean =
-        n == removalName || ourPrefixes.exists(p =>
-          n.startsWith(p) || n.startsWith(p.stripSuffix("-")))
-      // OCC pre-commit check: abort BEFORE any side effect if another
-      // commit already rewrote/removed one of this round's victims
-      snapTs.foreach(st => refuseConflict(
-        ScbfOcc.conflicts(postSnapEntries(st), affectedNames, selfName),
-        "detected before publish"))
-      prePublishHook()
-      val tag = if (cdcOn) Some(ScbfCdc.newTag(op.toLowerCase(java.util.Locale.ROOT))) else None
       val srcOpt =
         if (rewriteSet.isEmpty) None
         else {
@@ -594,158 +487,49 @@ object ScbfDelete {
             whole.map(f => ScbfCdc.relName(dfs, qcdc, f.getPath)))
       }
       if (srcOpt.isDefined) {
-        val src = srcOpt.get
-        // the connector's own append path: task-commit publish, sidecars,
-        // manifest merge — a failure here aborts with originals untouched
-        // announce the replacements as rewrites of ALL affected names
-        // (dropped-whole files included — their disappearance is covered
-        // by the same entries), tagged row-changing (C:1): by default a
-        // caught-up log-path stream skips them with a logged warning
-        // (their rows are a subset of what it already delivered — an
-        // append-only stream cannot retract deletions anyway), but the
-        // reader's onChangeCommit option can deliver them (surviving
-        // rows re-deliver, changed values reach the stream) or fail the
-        // stream loudly (Delta's default for change commits). A fresh
-        // consumer delivers them normally under any policy. On a
-        // partitioned table, tableRewrite re-announces each round to the
-        // ROOT log with subdir-qualified names, so root streams get the
-        // same policies; a direct per-partition call without that
-        // re-announcement leaves bare names a root stream can't match —
-        // skip then degrades to delivery, never loss.
-        val w = rewrite(src, cond).write.format("scbf").mode("append")
+        // the connector's own append path (task-commit publish,
+        // sidecars, manifest merge — a failure aborts with originals
+        // untouched), announcing the replacements as rewrites of ALL
+        // affected names, tagged row-changing (C:1) so a caught-up
+        // log-path stream applies its onChangeCommit policy
+        val w = rewrite(srcOpt.get, cond).write.format("scbf").mode("append")
           .option("filePrefix", prefix)
           .option("rewriteOfNames", affected.map(_.getPath.getName).mkString(","))
         tag.foreach(t => w.option("cdcTag", t).option("cdcRoot", qcdc.toString))
         w.save(dir)
       } else if (ScbfDiscovery.exists(new Path(dir), conf)) {
         // METADATA-ONLY round: every victim was dropped whole and no
-        // replacement publishes, so nothing would announce the change
-        // — yet rows this table's streams may have delivered are about
-        // to disappear. Append a REMOVAL entry (synthetic name, len −1,
-        // R:victims, C:1): log-path consumers get the identical
-        // onChangeCommit semantics a replacement entry carries (skip
-        // logs a warning, fail stops the stream, deliver has nothing
-        // to deliver) while the takedown itself stays zero-data-IO.
-        // Gated on the log existing — a log-less table has no log-path
-        // consumers, and CREATING a log here would flip its streams
-        // from listing mode to a log that omits every other file.
-        // Same announce-then-remove order and best-effort contract as
-        // the write path (a swallowed announce failure can mute the
-        // policy, never break delivery correctness).
-        ScbfDiscovery.append(new Path(dir), conf, Seq(ScbfDiscovery.Entry(
-          s"${prefix.stripSuffix("-")}${ScbfDiscovery.RemovalSuffix}",
-          ScbfDiscovery.RemovedLen, System.currentTimeMillis(),
-          rewriteOf = affected.map(_.getPath.getName).sorted,
-          rowsChanged = true,
-          // tag only the log AT the CDC root (a partition's own log
-          // would resolve it against a nonexistent local area; the
-          // table-level root re-announcement carries it there)
+        // replacement publishes, so a REMOVAL entry announces the
+        // change (log-path consumers get the same onChangeCommit
+        // semantics) while the takedown stays zero-data-IO. Gated on
+        // the log existing — CREATING a log here would flip a log-less
+        // table's streams from listing mode to a log that omits every
+        // other file. The tag goes only on the log AT the CDC root (the
+        // table-level root re-announcement carries it there).
+        ScbfDiscovery.append(new Path(dir), conf, Seq(ScbfRewrite.removalEntry(
+          removalId, affected.map(_.getPath.getName),
           cdcTag = if (qcdc == qdir) tag else None)))
       }
       } finally if (tag.isDefined) srcOpt.foreach(_.unpersist())
       postPublishHook()
-      // OCC post-publish recheck, BEFORE the originals are removed:
-      // the publish happened-before this replay, so of two overlapping
-      // racers at least one sees the other here. A foreign commit that
-      // names this round's PUBLISHED replacements in its own rewriteOf
-      // is NOT a conflict — it listed after our publish and serialized
-      // behind us (its rewrite consumed our output). One that rewrote
-      // our VICTIMS without seeing our replacements raced us blind:
-      // the loser rolls its replacement back through the
-      // aborted-rewrite scrub path (files + sidecars + log entries +
-      // CDC area) and refuses — the originals stay with the winner's
-      // commit, so the table renders exactly the winner's state; a
-      // stream that raced the scrubbed entries fails loudly on the
-      // vanished file (the documented abort contract), never silently
-      // serves the loser's rows.
-      // ONE bounded replay serves both the conflict test and this
-      // round's own published names (the write announced them, so they
-      // are post-snapshot entries matching our prefix) — no table
-      // listing here, exactly the cost the OCC block comment promises.
-      // An UNVERIFIABLE replay rolls back too (fail closed): published
-      // files it cannot identify from the log are re-derived from the
-      // round's prefix by one directory listing, the degraded path.
-      val postOrFail = snapTs match {
-        case None => Right(Seq.empty[(ScbfDiscovery.Entry, String)]) // no chain at snapshot: no OCC
-        case Some(st) =>
-          try Right(postSnapEntries(st))
-          catch { case e: graft.scbf.ScbfFormatException => Left(e) }
-      }
-      val publishedNames = postOrFail match {
-        case Right(post) => post.map(_._1.name).filter(_.startsWith(prefix)).toSet
-        case Left(_) => ScbfDataSource.resolveFiles(Seq(dir), conf)
-          .map(_.getPath.getName).filter(_.startsWith(prefix)).toSet
-      }
-      val lateConflicts = postOrFail match {
-        case Right(post) => ScbfOcc.conflicts(post, affectedNames, selfName,
-          ourOutputs = publishedNames,
-          // single-loser arbitration: our commit's ordinal, read off
-          // the same replay (the delta that announced our outputs —
-          // or, on a metadata-only round, our removal sentinel)
-          ourOrd = ScbfOcc.ourOrdinal(post, publishedNames + removalName))
-        case Left(e) => Seq(s"UNVERIFIABLE (${e.getMessage})")
-      }
-      if (lateConflicts.nonEmpty) {
-        // outputs a later commit already consumed are load-bearing
-        // lineage and stay (see rollbackPublished's consumed contract).
-        // An UNVERIFIABLE recheck treats EVERYTHING as consumed:
-        // nothing destructive happens on a replay we could not read
-        // (scrubbing a consumed entry would un-deaden its victims into
-        // row duplication), the refusal stays loud, and the fork
-        // machinery completes the rollback once the state is stale.
-        val consumed = postOrFail match {
-          case Right(post) =>
-            ScbfOcc.consumedOf(post, selfName, publishedNames)
-          case Left(_) => publishedNames
-        }
-        val scrubbed = ScbfOcc.rollbackPublished(dfs, qdir, conf,
-          publishedNames, alsoScrub = Set(removalName),
-          cdcTagDir = tag.map(t => new Path(ScbfCdc.dir(qcdc), t)),
-          consumed = consumed)
-        throw new graft.scbf.ScbfFormatException(
-          ScbfOcc.refusalMessage(s"$op on $dir", lateConflicts,
-            "detected after publish; replacement rolled back") +
-            ScbfOcc.scrubCaveat(scrubbed))
-      }
-      removeOriginals(dir, conf, affected, retainAt = tag.map((qcdc, _)))
+      // ONE bounded replay serves both the recheck and this round's own
+      // published names (the write announced them, so they are
+      // post-snapshot entries carrying our prefix); an unreadable replay
+      // re-derives them from the round's prefix by one listing
+      occ.recheckAfterPublish(affectedNames, selfName,
+        published = {
+          case Some(post) => post.map(_._1.name).filter(_.startsWith(prefix)).toSet
+          case None => ScbfDataSource.resolveFiles(Seq(dir), conf)
+            .map(_.getPath.getName).filter(_.startsWith(prefix)).toSet
+        },
+        alsoScrub = Set(removalName), cdc = tag.map((qcdc, _)))
+      val victims = affected.map(_.getPath)
+      ScbfRewrite.removeVictims(dfs, victims, retainAt = tag.map((qcdc, _)))
+      ScbfRewrite.dropFromManifests(conf, victims)
       val round_ = RewriteRound(prefix, affected.map(_.getPath.getName), tag)
       rounds += round_
       onRound(round_)
     }
     rounds.result() // unreachable; the while(true) exits via return
-  }
-
-  /** Post-commit removal of replaced originals (+ their sidecars) and
-   * manifest compaction — shared by delete and update. Runs only AFTER
-   * the replacement append committed; a crash before this point aborts
-   * with originals untouched. */
-  private def removeOriginals(
-      dir: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      affected: Seq[org.apache.hadoop.fs.FileStatus],
-      // CDC retention (ScbfCdc): (table root, tag) — originals RENAME
-      // into the tag's pre/ area instead of being deleted
-      retainAt: Option[(Path, String)] = None): Unit = {
-    val fs = new Path(dir).getFileSystem(conf)
-    retainAt match {
-      case Some((qroot, tag)) =>
-        ScbfCdc.retain(fs, qroot, tag, affected.map(_.getPath))
-      case None =>
-        // parallel on the shared driver IO pool: a whole-partition takedown
-        // can remove 10⁵ files, and on an object store the delete latencies
-        // must overlap, not serialize (same schedule as RESTORE's removal)
-        affected.map(f => ScbfStats.ioPool.submit(
-          new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = ScbfOcc.deleteWithSidecars(fs, f.getPath)
-          })).foreach(_.get())
-    }
-    // manifest entries for the removed names are dead weight (planning
-    // keys lookups by the LIVE listing, so they can never be trusted
-    // for a live file) — drop exactly those names in one merge cycle,
-    // so the manifest doesn't grow monotonically under repeated
-    // deletes/updates and a concurrent append's just-merged entries
-    // survive (a retain-the-live-listing prune would race its commit)
-    ScbfStats.mergeManifest(new Path(dir), conf, Seq.empty, fresh = false,
-      drop = affected.map(_.getPath.getName).toSet)
   }
 }

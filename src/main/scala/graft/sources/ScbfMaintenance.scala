@@ -44,65 +44,59 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * the window a concurrent append lands in. */
   private[sources] var raceHook: () => Unit = () => ()
 
-  /** OCC snapshot for a maintenance rewrite, taken BEFORE the file
-   * listing it plans from ([[ScbfOcc.snapshot]]); passed to the
-   * overwrite as the `occSnapTs` write option so the conflict check
-   * runs at the COMMIT INSTANT — a concurrent DELETE landing anywhere
-   * in the rewrite job (read, shuffle, write) aborts the rewrite
-   * rather than having its removed rows resurrected by it. None
-   * (genuinely no chain) skips the check: a log-less table has nothing
-   * announced to conflict with; a FAILED listing refuses — fail
-   * closed (ADVICE r14). */
-  private def occSnap(dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[Long] = {
+  /**
+   * The one snapshot rewrite behind [[cluster]], [[compact]] and
+   * [[zorder]]: refuse on a clone; take the OCC snapshot BEFORE the
+   * listing it plans from (passed to the overwrite as `occSnapTs`, so
+   * the conflict check runs at the COMMIT INSTANT — a concurrent DELETE
+   * landing anywhere in the rewrite job aborts the rewrite instead of
+   * having its removed rows resurrected); list the directory
+   * rewrite-transparently, healing what the log records as pending
+   * ([[ScbfRewrite.liveListing]] — OPTIMIZE is the natural healer);
+   * then read exactly that snapshot, `shape` it and overwrite exactly
+   * its files (`replaceFileNames`).
+   *
+   * `plan` sees the snapshot and returns the shaping step, or None when
+   * there is nothing worth rewriting. Returns the names ACTUALLY folded
+   * into the rewrite — callers announcing the rewrite elsewhere
+   * ([[sweepPartitions]]' root log) must mark exactly this set, not
+   * their own re-listing: a file appended between two listings would
+   * be folded in but not marked, and a caught-up stream would skip the
+   * rewrite as covered while the file's own announcement points at
+   * deleted data.
+   */
+  private def rewriteSnapshot(spark: SparkSession, dir: String, what: String,
+      maxBufferedBytes: Option[Long], filePrefix: Option[String],
+      cdcTag: Option[String], cdcRoot: Option[String])(
+      plan: Seq[org.apache.hadoop.fs.FileStatus] =>
+        Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame])
+      : Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(dir)
-    ScbfOcc.snapshot(p.getFileSystem(conf).makeQualified(p), conf,
-      why => throw new graft.scbf.ScbfFormatException(
-        s"maintenance rewrite on $dir: cannot verify concurrent-commit " +
-          s"safety — $why"))
-  }
-
-  /** The maintenance rewrite's snapshot listing, rewrite-transparent
-   * (the coexistence fix — [[ScbfOcc.recordedVictims]]): a listed
-   * file the log records as another commit's victim, whose
-   * replacement is itself listed (or whose takedown is recorded), is
-   * a dead original pending physical removal — folding it into the
-   * rewrite would RESURRECT the rows its mutation removed even when
-   * that mutation fully committed before this rewrite's snapshot (the
-   * crashed-removal shape OCC alone cannot see). */
-  private def liveSnapshot(dir: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    ScbfClone.refuseIfClone(p, conf, s"OPTIMIZE ($what)")
     val fs = p.getFileSystem(conf)
     val q = fs.makeQualified(p)
-    val snapshot = ScbfDataSource.resolveFiles(Seq(dir), conf)
-    def refuse(why: String): Nothing =
-      throw new graft.scbf.ScbfFormatException(
-        s"maintenance rewrite on $dir: cannot verify the listing's " +
-          s"rewrite-transparency — $why")
-    val victims = ScbfOcc.recordedVictims(q, conf, refuse)
-    if (victims.isEmpty) snapshot
-    else {
-      def rel(f: org.apache.hadoop.fs.FileStatus): String =
-        ScbfCdc.relName(fs, q, f.getPath)
-      val names = snapshot.iterator.flatMap(f =>
-        Seq(f.getPath.getName, rel(f))).toSet
-      val dead = ScbfOcc.deadAmong(names, victims, names.contains)
-      def in(set: Set[String])(f: org.apache.hadoop.fs.FileStatus): Boolean =
-        set.contains(f.getPath.getName) || set.contains(rel(f))
-      // OPTIMIZE is the natural healer: complete a crashed takedown's
-      // pending removal and a crashed arbitration loser's pending
-      // rollback instead of leaving the dead bytes to double every
-      // listing-based read until a DELETE re-run. Rollbacks FIRST —
-      // see the ScbfDelete heal comment (tag-preference ambiguity
-      // while the loser's replacement still exists).
-      ScbfOcc.completePendingRollbacks(fs, q, conf,
-        snapshot.filter(in(dead.loserOutputs)), victims)
-      ScbfOcc.completePendingRemovals(fs, q, conf,
-        snapshot.filter(in(dead.originals)), victims)
-      snapshot.filterNot(in(dead.all))
-    }
+    val where = s"maintenance rewrite on $dir"
+    val occTs = ScbfRewrite.snapshot(where, q, conf)
+    val snapshot = ScbfRewrite.liveListing(where, fs, q, conf,
+      ScbfDataSource.resolveFiles(Seq(dir), conf),
+      ScbfRewrite.recordedVictims(where, q, conf), probeFs = false, heal = true)
+    // a freshly-created (or fully-truncated) directory has nothing to
+    // rewrite — loading zero paths would crash with an unrelated error
+    if (snapshot.isEmpty) return Seq.empty
+    val shape = plan(snapshot).getOrElse(return Seq.empty)
+    raceHook()
+    val writer = shape(spark.read.format("scbf")
+      .load(snapshot.map(_.getPath.toString): _*))
+      .write.format("scbf").mode("overwrite")
+      .option("replaceFileNames", snapshot.map(_.getPath.getName).mkString(","))
+    maxBufferedBytes.foreach(b => writer.option("maxBufferedBytes", b))
+    filePrefix.foreach(p => writer.option("filePrefix", p))
+    cdcTag.foreach(t => writer.option("cdcTag", t))
+    cdcRoot.foreach(r => writer.option("cdcRoot", r))
+    occTs.foreach(t => writer.option("occSnapTs", t))
+    writer.save(dir)
+    snapshot.map(_.getPath.getName)
   }
 
   /** Per-partition maintenance rewrites thread the table-level CDC
@@ -120,35 +114,69 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       cdcRoot: Option[String] = None): Seq[String] = {
     require(clusterCols.nonEmpty, "cluster requires at least one column")
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    val conf = spark.sessionState.newHadoopConf()
-    ScbfClone.refuseIfClone(new org.apache.hadoop.fs.Path(dir), conf,
-      "OPTIMIZE (cluster)")
-    val occTs = occSnap(dir, conf)
-    val snapshot = liveSnapshot(dir, conf)
-    // a freshly-created (or fully-truncated) directory has nothing to
-    // rewrite — loading zero paths would crash with an unrelated error
-    if (snapshot.isEmpty) return Seq.empty
-    raceHook()
-    val df = spark.read.format("scbf")
-      .load(snapshot.map(_.getPath.toString): _*)
-    val writer = df
-      .repartitionByRange(numFiles, clusterCols.map(col): _*)
-      .write.format("scbf").mode("overwrite")
-      .option("replaceFileNames", snapshot.map(_.getPath.getName).mkString(","))
-    maxBufferedBytes.foreach(b => writer.option("maxBufferedBytes", b))
-    filePrefix.foreach(p => writer.option("filePrefix", p))
-    cdcTag.foreach(t => writer.option("cdcTag", t))
-    cdcRoot.foreach(r => writer.option("cdcRoot", r))
-    occTs.foreach(t => writer.option("occSnapTs", t))
-    writer.save(dir)
-    // the names ACTUALLY folded into the rewrite — callers announcing
-    // the rewrite elsewhere (sweepPartitions' root log) must mark
-    // exactly this set, not their own (re-)listing: a file appended
-    // between two listings would be folded in but not marked, and a
-    // caught-up stream would skip the rewrite as covered while the
-    // file's own announcement points at deleted data
-    snapshot.map(_.getPath.getName)
+    rewriteSnapshot(spark, dir, "cluster", maxBufferedBytes, filePrefix,
+      cdcTag, cdcRoot)(_ => Some(_.repartitionByRange(numFiles, clusterCols.map(col): _*)))
   }
+
+  /** Plain bin-packing compaction — `OPTIMIZE tbl [FILES n]` without a
+   * BY clause: fold the directory's current files into `numFiles`
+   * without imposing an order (Delta's un-ZORDERed OPTIMIZE). The
+   * 100 TB small-file remedy when no clustering column is worth a
+   * sort: same snapshot scoping, replace-only announcement (pure
+   * compaction, no C:1 — streams stay silent) and commit discipline
+   * as [[cluster]]. SHUFFLE-FREE in the normal (fold-down) direction:
+   * the scan plans one partition per file, so `coalesce` packs several
+   * files per task without moving a row — at 100 TB that is the whole
+   * point of bin-packing over clustering. Only the rare grow-the-
+   * file-count direction pays a repartition shuffle (coalesce cannot
+   * split partitions). */
+  def compact(
+      spark: SparkSession,
+      dir: String,
+      numFiles: Int,
+      maxBufferedBytes: Option[Long] = None,
+      filePrefix: Option[String] = None,
+      cdcTag: Option[String] = None,
+      cdcRoot: Option[String] = None): Seq[String] = {
+    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
+    rewriteSnapshot(spark, dir, "compact", maxBufferedBytes, filePrefix,
+      cdcTag, cdcRoot) { snapshot =>
+      // idempotence: already AT the target file count with a
+      // plausibly-packed layout — re-running `OPTIMIZE tbl` must not pay
+      // a full rewrite and churn the discovery log for a layout it
+      // cannot improve. Count equality alone is NOT enough: one huge
+      // file plus tiny ones has the target count but none of the
+      // balance a pack exists to give, so the skip additionally requires
+      // max ≤ 2× mean size (the one-huge-of-n case maxes out at n× mean,
+      // so the band must sit well below small n; a rewrite's own
+      // row-round-robin output lands within a few % of mean, so the
+      // skip-after-pack contract holds and re-runs converge instead of
+      // churning). An equal-count rebalance must REPARTITION:
+      // coalesce(n) over n per-file input partitions is the identity and
+      // would rewrite the skew verbatim. Growing the count (numFiles >
+      // current) stays an explicit rewrite: the caller asked for more
+      // parallelism.
+      val lens = snapshot.map(_.getLen)
+      val balanced = lens.size == 1 || lens.max <= 2L * (lens.sum / lens.size)
+      if (numFiles == snapshot.size && balanced) None
+      else Some(df =>
+        if (numFiles < snapshot.size) df.coalesce(numFiles)
+        else df.repartition(numFiles))
+    }
+  }
+
+  /** Table-level [[compact]] — every partition swept, root-log
+   * re-announced; same contract as [[clusterTable]]. */
+  def compactTable(
+      spark: SparkSession,
+      dir: String,
+      numFilesPerPartition: Int,
+      maxBufferedBytes: Option[Long] = None,
+      parallelism: Int = 1): Seq[String] =
+    sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
+      compact(spark, part, numFilesPerPartition, maxBufferedBytes,
+        Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
+    }
 
   /**
    * Z-order clustering rewrite — the multi-dimensional OPTIMIZE
@@ -173,84 +201,6 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * defaults to 8 (256 buckets — plenty against file counts, which are
    * ~10⁴ per directory even at 100 TB).
    */
-  /** Plain bin-packing compaction — `OPTIMIZE tbl [FILES n]` without a
-   * BY clause: fold the directory's current files into `numFiles`
-   * without imposing an order (Delta's un-ZORDERed OPTIMIZE). The
-   * 100 TB small-file remedy when no clustering column is worth a
-   * sort: same snapshot scoping, replace-only announcement (pure
-   * compaction, no C:1 — streams stay silent) and commit discipline
-   * as [[cluster]]. SHUFFLE-FREE in the normal (fold-down) direction:
-   * the scan plans one partition per file, so `coalesce` packs several
-   * files per task without moving a row — at 100 TB that is the whole
-   * point of bin-packing over clustering. Only the rare grow-the-
-   * file-count direction pays a repartition shuffle (coalesce cannot
-   * split partitions). */
-  def compact(
-      spark: SparkSession,
-      dir: String,
-      numFiles: Int,
-      maxBufferedBytes: Option[Long] = None,
-      filePrefix: Option[String] = None,
-      cdcTag: Option[String] = None,
-      cdcRoot: Option[String] = None): Seq[String] = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    val conf = spark.sessionState.newHadoopConf()
-    ScbfClone.refuseIfClone(new org.apache.hadoop.fs.Path(dir), conf,
-      "OPTIMIZE (compact)")
-    val occTs = occSnap(dir, conf)
-    val snapshot = liveSnapshot(dir, conf)
-    // idempotence: nothing to pack (empty directory), or already AT the
-    // target file count with a plausibly-packed layout — re-running
-    // `OPTIMIZE tbl` must not pay a full rewrite and churn the
-    // discovery log for a layout it cannot improve. Count equality
-    // alone is NOT enough: one huge file plus tiny ones has the target
-    // count but none of the balance a pack exists to give, so the skip
-    // additionally requires max ≤ 2× mean size (the one-huge-of-n case
-    // maxes out at n× mean, so the band must sit well below small n;
-    // a rewrite's own row-round-robin output lands within a few % of
-    // mean, so the skip-after-pack contract holds and re-runs converge
-    // instead of churning). An equal-count rebalance must REPARTITION:
-    // coalesce(n) over n per-file input partitions is the identity and
-    // would rewrite the skew verbatim.
-    // Growing the count (numFiles > current) stays an explicit
-    // rewrite: the caller asked for more parallelism.
-    if (snapshot.isEmpty) return Seq.empty
-    if (numFiles == snapshot.size) {
-      val lens = snapshot.map(_.getLen)
-      val balanced = lens.size == 1 || lens.max <= 2L * (lens.sum / lens.size)
-      if (balanced) return Seq.empty
-    }
-    raceHook()
-    val df = spark.read.format("scbf")
-      .load(snapshot.map(_.getPath.toString): _*)
-    val packed =
-      if (numFiles < snapshot.size) df.coalesce(numFiles)
-      else df.repartition(numFiles)
-    val writer = packed
-      .write.format("scbf").mode("overwrite")
-      .option("replaceFileNames", snapshot.map(_.getPath.getName).mkString(","))
-    maxBufferedBytes.foreach(b => writer.option("maxBufferedBytes", b))
-    filePrefix.foreach(p => writer.option("filePrefix", p))
-    cdcTag.foreach(t => writer.option("cdcTag", t))
-    cdcRoot.foreach(r => writer.option("cdcRoot", r))
-    occTs.foreach(t => writer.option("occSnapTs", t))
-    writer.save(dir)
-    snapshot.map(_.getPath.getName)
-  }
-
-  /** Table-level [[compact]] — every partition swept, root-log
-   * re-announced; same contract as [[clusterTable]]. */
-  def compactTable(
-      spark: SparkSession,
-      dir: String,
-      numFilesPerPartition: Int,
-      maxBufferedBytes: Option[Long] = None,
-      parallelism: Int = 1): Seq[String] =
-    sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
-      compact(spark, part, numFilesPerPartition, maxBufferedBytes,
-        Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
-    }
-
   def zorder(
       spark: SparkSession,
       dir: String,
@@ -265,65 +215,50 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     require(bits >= 1 && bits <= 16, s"bits per column must be in [1,16], got $bits")
     import org.apache.spark.sql.functions._
-    val hconf = spark.sessionState.newHadoopConf()
-    ScbfClone.refuseIfClone(new org.apache.hadoop.fs.Path(dir), hconf,
-      "OPTIMIZE (zorder)")
-    val occTs = occSnap(dir, hconf)
-    val snapshot = liveSnapshot(dir, hconf)
-    if (snapshot.isEmpty) return Seq.empty // nothing to rewrite
-    raceHook()
-    val df = spark.read.format("scbf")
-      .load(snapshot.map(_.getPath.toString): _*)
-    zCols.foreach { c =>
-      val dt = df.schema(c).dataType
-      require(dt == org.apache.spark.sql.types.IntegerType ||
-        dt == org.apache.spark.sql.types.DoubleType,
-        s"zorder column '$c' must be numeric (int32/float64), got $dt")
-    }
-    require(!df.columns.exists(c => c == "__z" || c.startsWith("__zb_")),
-      "zorder uses helper columns __z/__zb_N; rename conflicting table columns first")
-    val nBuckets = 1 << bits
-    // pass 1: equi-depth cutpoints (bounded driver data: 2^bits doubles
-    // per column). relativeError trades one extra scan's precision for
-    // speed; bucket skew only costs pruning sharpness, never rows.
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    // ONE multi-column quantile job — d columns share a single table
-    // scan (the single-column overload would cost d full scans)
-    val cutArrays =
-      df.stat.approxQuantile(zCols.toArray, probs, 0.001)
-    val cuts: Map[String, Array[Double]] =
-      zCols.zip(cutArrays).toMap
-    // bucket rank: count of cutpoints <= v, via the aggregate HOF over
-    // the cutpoint array literal — codegen'd, no UDF
-    def bucket(c: String): org.apache.spark.sql.Column =
-      aggregate(
-        lit(cuts(c)),
-        lit(0),
-        (acc, cut) => acc + when(col(c).cast("double") >= cut, 1).otherwise(0))
-    val withBuckets = zCols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      d.withColumn(s"__zb_$i", bucket(c))
-    }
-    // interleave: bit b of column i lands at position b*d + i
-    val zCol = (for {
-      i <- zCols.indices
-      b <- 0 until bits
-    } yield shiftleft(
-      shiftright(col(s"__zb_$i"), b).bitwiseAND(lit(1)).cast("long"),
-      b * zCols.size + i))
-      .reduce(_.bitwiseOR(_))
-    val writer = withBuckets
-      .withColumn("__z", zCol)
-      .repartitionByRange(numFiles, col("__z"))
-      .drop((zCols.indices.map(i => s"__zb_$i") :+ "__z"): _*)
-      .write.format("scbf").mode("overwrite")
-      .option("replaceFileNames", snapshot.map(_.getPath.getName).mkString(","))
-    maxBufferedBytes.foreach(b => writer.option("maxBufferedBytes", b))
-    filePrefix.foreach(p => writer.option("filePrefix", p))
-    cdcTag.foreach(t => writer.option("cdcTag", t))
-    cdcRoot.foreach(r => writer.option("cdcRoot", r))
-    occTs.foreach(t => writer.option("occSnapTs", t))
-    writer.save(dir)
-    snapshot.map(_.getPath.getName) // see [[cluster]]: the folded-in set
+    rewriteSnapshot(spark, dir, "zorder", maxBufferedBytes, filePrefix,
+      cdcTag, cdcRoot) { _ => Some { df =>
+      zCols.foreach { c =>
+        val dt = df.schema(c).dataType
+        require(dt == org.apache.spark.sql.types.IntegerType ||
+          dt == org.apache.spark.sql.types.DoubleType,
+          s"zorder column '$c' must be numeric (int32/float64), got $dt")
+      }
+      require(!df.columns.exists(c => c == "__z" || c.startsWith("__zb_")),
+        "zorder uses helper columns __z/__zb_N; rename conflicting table columns first")
+      val nBuckets = 1 << bits
+      // pass 1: equi-depth cutpoints (bounded driver data: 2^bits doubles
+      // per column). relativeError trades one extra scan's precision for
+      // speed; bucket skew only costs pruning sharpness, never rows.
+      val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
+      // ONE multi-column quantile job — d columns share a single table
+      // scan (the single-column overload would cost d full scans)
+      val cutArrays =
+        df.stat.approxQuantile(zCols.toArray, probs, 0.001)
+      val cuts: Map[String, Array[Double]] =
+        zCols.zip(cutArrays).toMap
+      // bucket rank: count of cutpoints <= v, via the aggregate HOF over
+      // the cutpoint array literal — codegen'd, no UDF
+      def bucket(c: String): org.apache.spark.sql.Column =
+        aggregate(
+          lit(cuts(c)),
+          lit(0),
+          (acc, cut) => acc + when(col(c).cast("double") >= cut, 1).otherwise(0))
+      val withBuckets = zCols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
+        d.withColumn(s"__zb_$i", bucket(c))
+      }
+      // interleave: bit b of column i lands at position b*d + i
+      val zCol = (for {
+        i <- zCols.indices
+        b <- 0 until bits
+      } yield shiftleft(
+        shiftright(col(s"__zb_$i"), b).bitwiseAND(lit(1)).cast("long"),
+        b * zCols.size + i))
+        .reduce(_.bitwiseOR(_))
+      withBuckets
+        .withColumn("__z", zCol)
+        .repartitionByRange(numFiles, col("__z"))
+        .drop((zCols.indices.map(i => s"__zb_$i") :+ "__z"): _*)
+    } }
   }
 
   /** The partition directories of a table: the distinct parents of its
@@ -349,17 +284,10 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * running in the background). Either way re-running is always safe
    * (a clustered partition just re-clusters).
    *
-   * Stream transparency at the ROOT: the per-partition commit
-   * announces to the PARTITION's own discovery log (it is a complete
-   * standalone SCBF directory), which a stream reading the table root
-   * never consumes — so after each partition's rewrite this method
-   * re-announces the new files to the ROOT log with subdir-qualified
-   * names, marked as rewrites of the subdir-qualified snapshot. A
-   * caught-up root stream admits them seen-without-delivery exactly
-   * like a root-level OPTIMIZE; rewrite outputs are identified by a
-   * per-partition unique file prefix, so a concurrent append's files
-   * can never be mis-marked as rewrite output (they announce
-   * themselves through their own commit).
+   * Stream transparency at the ROOT: after each partition's rewrite,
+   * its outputs are re-announced to the ROOT log
+   * ([[ScbfRewrite.announceToRoot]]), so a caught-up root stream admits
+   * them seen-without-delivery exactly like a root-level OPTIMIZE.
    *
    * `parallelism` runs that many partition rewrites as CONCURRENT
    * Spark jobs from driver threads — partitions are disjoint
@@ -411,27 +339,13 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     val cdcOn = ScbfCdc.enabled(qroot, conf)
     val parts = partitionDirs(dir, conf)
     def sweepOne(part: org.apache.hadoop.fs.Path): Unit = {
-      val sub = qroot.toUri.relativize(part.toUri).getPath.stripSuffix("/")
       val prefix = s"opt-${java.util.UUID.randomUUID().toString.take(8)}-"
       val tag = if (cdcOn) Some(ScbfCdc.newTag("compact")) else None
-      // the root-log mark must carry the names the rewrite ACTUALLY
-      // folded in (its return value) — a separate listing here could
-      // miss a file appended before the rewrite's own snapshot, and a
-      // caught-up root stream would then skip the rewrite as covered
-      // while that file's rows reach it only through the (deleted)
-      // original
+      // the root-log mark carries the names the rewrite ACTUALLY folded
+      // in (its return value) — see rewriteSnapshot
       val snapshot = rewrite(part.toString, prefix, tag)
-      // root-log re-announcement (see scaladoc) — skipped when the
-      // partition IS the root: the inner commit already announced there
-      if (sub.nonEmpty) {
-        val produced = ScbfDataSource.resolveFiles(Seq(part.toString), conf)
-          .filter(_.getPath.getName.startsWith(prefix))
-        val now = System.currentTimeMillis()
-        ScbfDiscovery.append(qroot, conf, produced.map(f =>
-          ScbfDiscovery.Entry(s"$sub/${f.getPath.getName}", f.getLen, now,
-            rewriteOf = snapshot.map(n => s"$sub/$n").sorted,
-            cdcTag = if (snapshot.nonEmpty) tag else None)))
-      }
+      ScbfRewrite.announceToRoot(qroot, conf, part, prefix, snapshot,
+        rowsChanged = false, cdcTag = if (snapshot.nonEmpty) tag else None)
     }
     forEachDir(parts, parallelism)(sweepOne)
     parts.map(_.toString)

@@ -4,15 +4,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
- * Shared write-write CONFLICT DETECTION (OCC — Delta's
- * ConcurrentDeleteRead contract) for every COW mutation surface: the
- * API rewrite engine ([[ScbfDelete]]), the SQL row-level path
- * ([[ScbfRowLevelBatchWrite]]), and the maintenance rewrites
- * (OPTIMIZE/cluster/zorder — [[ScbfMaintenance]] plans the snapshot,
- * [[ScbfBatchWrite]] checks it at the overwrite's commit instant).
- * One copy of the snapshot point, the replay, the conflict rule, the
- * refusal text and the rollback file-cleanup so the surfaces can
- * never silently diverge.
+ * The write-write CONFLICT RULES (OCC — Delta's ConcurrentDeleteRead
+ * contract) behind the shared copy-on-write commit path
+ * ([[ScbfRewrite]], through which the API rewrites, SQL row-level
+ * operations and OPTIMIZE all commit): the snapshot point, the replay,
+ * the conflict rule, recorded-victim deadness, the refusal text and
+ * the rollback file-cleanup.
  *
  * The rule: a commit stamped after the mutation's snapshot that names
  * one of its VICTIMS in `rewriteOf` raced it. A commit that names the
@@ -284,10 +281,7 @@ private[sources] object ScbfOcc extends org.apache.spark.internal.Logging {
         case None => deleteWithSidecars(fs, f.getPath)
       }
     }
-    healable.map(_.getPath).groupBy(_.getParent).foreach { case (parent, ps) =>
-      ScbfStats.mergeManifest(parent, conf, Seq.empty, fresh = false,
-        drop = ps.map(_.getName).toSet)
-    }
+    ScbfRewrite.dropFromManifests(conf, healable.map(_.getPath))
   }
 
   /** Complete a PENDING ROLLBACK: a crashed arbitration loser's
@@ -378,12 +372,9 @@ private[sources] object ScbfOcc extends org.apache.spark.internal.Logging {
         "(load-bearing lineage); only the unconsumed outputs retract.")
     val scrubbed = ScbfDiscovery.scrubEntries(qroot, conf,
       retract ++ alsoScrub)
-    retract.foreach(n => deleteWithSidecars(fs, new Path(qroot, n)))
-    retract.map(n => new Path(qroot, n)).groupBy(_.getParent)
-      .foreach { case (parent, ps) =>
-        ScbfStats.mergeManifest(parent, conf, Seq.empty, fresh = false,
-          drop = ps.map(_.getName))
-      }
+    val retracted = retract.toSeq.map(n => new Path(qroot, n))
+    ScbfRewrite.removeVictims(fs, retracted, retainAt = None)
+    ScbfRewrite.dropFromManifests(conf, retracted)
     // the tag area drops even on a partial (consumed) rollback: its
     // materialized change rows cover the WHOLE aborted scope, and a
     // CDC window served from them would report phantom changes for

@@ -36,13 +36,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *  - **Write side**: the replacement rows ride the connector's own
  *    append path ([[ScbfBatchWrite]]: task-commit publish, partition
  *    routing, stats/bloom sidecars, per-directory manifest merge,
- *    discovery-log announcement). At job commit the append publishes
- *    first, then the scanned originals (plus sidecars) are removed
- *    and their manifest entries dropped — the same
- *    append-then-remove failure contract [[ScbfDelete]] documents: a
- *    crash before the append commits aborts cleanly (originals
- *    untouched), a crash in the removal window leaves
- *    original+replacement coexisting, re-runnable.
+ *    discovery-log announcement); the commit then runs the shared
+ *    copy-on-write commit path ([[ScbfRewrite]]: OCC check and recheck,
+ *    0-row keepers, victim removal) — with its failure contract.
  *
  *  - **Streams**: replacement files are announced with
  *    `Entry.rewriteOf` = the replaced names (root-relative on
@@ -107,6 +103,16 @@ private[sources] class ScbfRowLevelOperation(
    * several times per row-level op (planning, EXPLAIN, retries) and
    * the O(history) fold read must not be re-paid each time. */
   @volatile private[sources] var victimsCache: Option[Map[String, Seq[ScbfOcc.VictimRec]]] = None
+
+  /** The table root, qualified — where the log, the CDC area and the
+   * root-relative victim names live. */
+  private[sources] lazy val qroot: Path = {
+    val p = new Path(rootDir)
+    p.getFileSystem(conf).makeQualified(p)
+  }
+
+  /** How refusals name this operation. */
+  private[sources] def where: String = s"row-level SQL on $qroot"
 
   override def command(): RowLevelOperation.Command = cmd
 
@@ -218,47 +224,22 @@ private[sources] class ScbfRowLevelScanBuilder(
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
-  /** The mutation's listing, rewrite-transparent (the coexistence fix
-   * — ScbfOcc.recordedVictims): a listed file the log records as
-   * another commit's victim whose replacement bytes exist is a dead
-   * original pending removal; planning it alongside the replacement
-   * would bake every coexisting row into the rewrite's output twice.
-   * Replacement existence probes the FILESYSTEM, not this (pruned)
-   * listing — a stats-pruned replacement must still kill its original. */
+  /** The mutation's listing, rewrite-transparent
+   * ([[ScbfRewrite.liveListing]]). The listing is stats-pruned, so a
+   * replacement's existence probes the FILESYSTEM (a pruned-away
+   * replacement must still kill its original), and it does not heal at
+   * plan time. */
   private def transparentListFiles(
       filters: Seq[org.apache.spark.sql.sources.Filter])
       : Seq[org.apache.hadoop.fs.FileStatus] = {
     val listedRaw = listFiles(filters)
-    val rp = new org.apache.hadoop.fs.Path(tablePaths.head)
-    val rfs = rp.getFileSystem(conf)
-    val rq = rfs.makeQualified(rp)
-    def refuse(why: String): Nothing =
-      throw new graft.scbf.ScbfFormatException(
-        s"row-level SQL on $rq: cannot verify the listing's " +
-          s"rewrite-transparency — $why")
     val victims = op.victimsCache.getOrElse {
-      val v = ScbfOcc.recordedVictims(rq, conf, refuse)
+      val v = ScbfRewrite.recordedVictims(op.where, op.qroot, conf)
       op.victimsCache = Some(v)
       v
     }
-    if (victims.isEmpty) listedRaw
-    else {
-      def rel(f: org.apache.hadoop.fs.FileStatus): String =
-        ScbfCdc.relName(rfs, rq, f.getPath)
-      val names = listedRaw.iterator.flatMap(f =>
-        Seq(f.getPath.getName, rel(f))).toSet
-      val dead = ScbfOcc.deadAmong(names, victims, n =>
-        try rfs.exists(new org.apache.hadoop.fs.Path(rq, n))
-        catch { case scala.util.control.NonFatal(e) =>
-          // fail CLOSED, like the chain replay: an unverifiable
-          // replacement could hide exactly the double-planned rows
-          // this exclusion exists to prevent
-          refuse(s"replacement existence probe failed for $n " +
-            s"(${e.getMessage})")
-        }).all
-      listedRaw.filterNot(f =>
-        dead.contains(f.getPath.getName) || dead.contains(rel(f)))
-    }
+    ScbfRewrite.liveListing(op.where, op.qroot.getFileSystem(conf), op.qroot, conf,
+      listedRaw, victims, probeFs = true, heal = false)
   }
 
   override def build(): Scan =
@@ -274,14 +255,8 @@ private[sources] class ScbfRowLevelScanBuilder(
         Array.empty
       override def planInputPartitions(): Array[InputPartition] = {
         // OCC snapshot BEFORE the listing the plan rides on: commits
-        // stamped after this instant raced the operation; a FAILED
-        // listing refuses (fail closed — ADVICE r14)
-        val rp = new org.apache.hadoop.fs.Path(tablePaths.head)
-        val rq = rp.getFileSystem(conf).makeQualified(rp)
-        op.occSnapTs = ScbfOcc.snapshot(rq, conf,
-          why => throw new graft.scbf.ScbfFormatException(
-            s"row-level SQL on $rq: cannot verify concurrent-commit " +
-              s"safety — $why"))
+        // stamped after this instant raced the operation
+        op.occSnapTs = ScbfRewrite.snapshot(op.where, op.qroot, conf)
         val parts = super.planInputPartitions()
         op.scannedPaths =
           Some(parts.toSeq.collect { case ScbfFilePartition(p, _, _) => p })
@@ -291,13 +266,10 @@ private[sources] class ScbfRowLevelScanBuilder(
 }
 
 /**
- * Commit = the connector's own append commit, then group removal:
- * publish replacement files (manifests merged per partition
- * directory, discovery entries announced with `rewriteOf` = the
- * root-relative replaced names, row-changing tag set), then delete
- * the scanned originals + sidecars and drop their manifest entries
- * per directory. Abort delegates to the append's abort (originals
- * untouched).
+ * Commit = the connector's own append commit inside the shared
+ * copy-on-write commit path ([[ScbfRewrite]]), plus the value-diff CDC
+ * capture only this path needs. Abort delegates to the append's abort
+ * (originals untouched).
  */
 private[sources] object ScbfRowLevelBatchWrite {
   /** Test seam for the OCC race windows: invoked with "pre" at commit
@@ -323,13 +295,12 @@ private[sources] class ScbfRowLevelBatchWrite(
     bucketSpec = bucketSpec)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new ScbfRowOpStrippingFactory(inner.createBatchWriterFactory(info),
-      schema.length)
+    new ScbfRowOpStrippingFactory(inner.createBatchWriterFactory(info), schema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(dir)
     val fs = root.getFileSystem(hconf)
-    val qroot = fs.makeQualified(root)
+    val qroot = op.qroot
     val scanned = op.scannedPaths.getOrElse(Seq.empty).map(new Path(_))
     // root-relative qualified names ("part=x/file.scbf" / "file.scbf")
     // — the discovery-log naming tableRewrite uses, so root streams
@@ -337,29 +308,15 @@ private[sources] class ScbfRowLevelBatchWrite(
     def qualify(p: Path): String = ScbfCdc.relName(fs, qroot, p)
     val publishedEntries =
       messages.collect { case m: ScbfCommitMessage => m.entries }.flatten.toSeq
-    // ---- OCC (same contract as ScbfDelete's rewrite rounds): no
-    // concurrent commit may have rewritten/removed this operation's
-    // victim groups since its scan's snapshot. Checked twice: here,
-    // BEFORE any side effect (the inner commit hasn't announced —
-    // Spark's abort cleans the task-committed files), and again after
-    // the announce, before originals are removed (the loser rolls its
-    // replacement back and refuses — see below). A foreign commit
-    // naming our published replacements serialized BEHIND us and is
-    // not a conflict.
     val victimNames = scanned.map(qualify).toSet
     val publishedNames = publishedEntries.map(_.name).toSet
-    def occEntries(): Seq[(ScbfDiscovery.Entry, String)] =
-      if (victimNames.isEmpty || op.occSnapTs.isEmpty) Seq.empty
-      else ScbfOcc.entriesAfter(qroot, hconf, op.occSnapTs.get,
-        why => throw new graft.scbf.ScbfFormatException(
-          s"row-level SQL on $qroot: cannot verify concurrent-commit " +
-            s"safety — $why"))
-    def refuseOcc(found: Seq[String], phase: String): Unit =
-      if (found.nonEmpty) throw new graft.scbf.ScbfFormatException(
-        ScbfOcc.refusalMessage(s"row-level SQL on $qroot", found, phase))
+    // OCC against the scan's snapshot (ScbfRewrite.Occ): checked before
+    // any side effect — Spark's abort then cleans the task-committed
+    // files — and rechecked after the announce, before the originals go
+    val occ = new ScbfRewrite.Occ(op.where, qroot, hconf,
+      op.occSnapTs.filter(_ => victimNames.nonEmpty))
     ScbfRowLevelBatchWrite.occHook("pre")
-    refuseOcc(ScbfOcc.conflicts(occEntries(), victimNames,
-      publishedNames.contains), "detected before publish")
+    occ.checkBeforePublish(victimNames, publishedNames.contains)
     // CDC capture (ScbfCdc) — value-level by necessity: the group-based
     // ReplaceData rows reach the writer with the per-row operation
     // marker projected away (the metadata-attribute path), so the
@@ -446,112 +403,30 @@ private[sources] class ScbfRowLevelBatchWrite(
     inner.cdcTag = cdcTag
     inner.commit(messages)
     ScbfRowLevelBatchWrite.occHook("post")
-    // OCC post-publish recheck (before originals are removed): the
-    // announce above happened-before this replay, so of two blind
-    // overlapping racers at least one sees the other here; the loser
-    // rolls its published replacement back (files + sidecars + log
-    // entries + CDC rows area) and refuses — originals stay with the
-    // winner's state.
-    // an UNVERIFIABLE recheck rolls back too (fail closed): the
-    // announce already happened, so throwing WITHOUT the rollback
-    // would let Spark's abort delete the files while their log and
-    // manifest entries stay live — the poisoned-log shape
-    var latePost: Option[Seq[(ScbfDiscovery.Entry, String)]] = None
-    val lateOcc =
-      try {
-        val post = occEntries()
-        latePost = Some(post)
-        ScbfOcc.conflicts(post, victimNames,
-          publishedNames.contains, ourOutputs = publishedNames,
-          // single-loser arbitration: our commit's ordinal off the
-          // same replay
-          ourOrd = ScbfOcc.ourOrdinal(post, publishedNames))
-      }
-      catch { case e: graft.scbf.ScbfFormatException =>
-        Seq(s"UNVERIFIABLE (${e.getMessage})")
-      }
-    if (lateOcc.nonEmpty) {
-      // outputs a later commit already consumed stay (load-bearing
-      // lineage); an UNVERIFIABLE replay treats everything as
-      // consumed — nothing destructive on a state we could not read,
-      // the fork machinery completes the rollback once stale (same
-      // contract as ScbfDelete's rollback)
-      val consumed = latePost match {
-        case Some(post) =>
-          ScbfOcc.consumedOf(post, publishedNames.contains, publishedNames)
-        case None => publishedNames
-      }
-      val scrubbed = ScbfOcc.rollbackPublished(fs, qroot, hconf,
-        publishedNames, alsoScrub = Set.empty,
-        cdcTagDir = cdcTag.map(t => new Path(ScbfCdc.dir(qroot), t)),
-        consumed = consumed)
-      throw new graft.scbf.ScbfFormatException(
-        ScbfOcc.refusalMessage(s"row-level SQL on $qroot", lateOcc,
-          "detected after publish; replacement rolled back") +
-          ScbfOcc.scrubCaveat(scrubbed))
-    }
-    // EMPTY-REPLACEMENT coverage. A rewrite can legitimately publish
-    // NOTHING for some (or all) of its groups — a subquery DELETE or
-    // MERGE matched-DELETE that removes every row, or a partition-
-    // column UPDATE that moves a whole directory's rows elsewhere
-    // (emitEmptyFiles=false keeps no-op tasks from littering). Two
-    // consequences need handling before/alongside the removals:
-    //  1) a directory losing its LAST data file gets a 0-row KEEPER
-    //     (codec-written, before the removals) so it stays a readable
-    //     standalone SCBF table — the same contract ScbfDelete's
-    //     empty-table guard keeps;
-    //  2) if nothing was published at all, no replacement entry exists
-    //     to carry the rewriteOf announcement — append the same
-    //     REMOVAL entry the whole-file DELETE fast path uses, or the
-    //     log's live entries keep claiming the removed files: silent
-    //     under every onChangeCommit policy, and read-crashing for a
-    //     lagging consumer with those entries still pending.
-    val published = publishedEntries
-    val publishedDirs = published
+    occ.recheckAfterPublish(victimNames, publishedNames.contains,
+      published = _ => publishedNames, alsoScrub = Set.empty,
+      cdc = cdcTag.map((qroot, _)))
+    // A rewrite can legitimately publish NOTHING for some (or all) of
+    // its groups — a subquery DELETE or MERGE matched-DELETE removing
+    // every row, or a partition-column UPDATE moving a directory's rows
+    // elsewhere (emitEmptyFiles=false keeps no-op tasks from
+    // littering): a directory losing its LAST data file gets the 0-row
+    // keeper, and when nothing was published at all the REMOVAL entry
+    // carries the rewriteOf announcement (otherwise the log's live
+    // entries keep claiming the removed files — silent under every
+    // onChangeCommit policy, read-crashing for a lagging consumer).
+    val publishedDirs = publishedEntries
       .map(e => fs.makeQualified(new Path(root, e.name)).getParent).toSet
-    val byDir = scanned.groupBy(p => fs.makeQualified(p).getParent)
-    byDir.foreach { case (parent, ps) =>
-      if (!publishedDirs.contains(parent)) {
-        val removedNames = ps.map(_.getName).toSet
-        val liveLeft =
-          try fs.listStatus(parent).toSeq.filter(f => f.isFile && {
-            val n = f.getPath.getName
-            n.endsWith(graft.scbf.Scbf.FileExtension) && !n.startsWith(".")
-          }).map(_.getPath.getName).filterNot(removedNames)
-          catch { case _: java.io.FileNotFoundException => Seq.empty }
-        if (liveLeft.isEmpty)
-          ScbfUtil.writeEmptyScbf(fs, parent, schema, "rl-keeper-",
-            announceRoot = Some(qroot))
-      }
-    }
-    if (published.isEmpty && scanned.nonEmpty &&
+    ScbfRewrite.keepEmptiedDirsReadable(fs, scanned, publishedDirs.contains,
+      schema, "rl-keeper-", announceRoot = qroot)
+    if (publishedEntries.isEmpty && scanned.nonEmpty &&
         ScbfDiscovery.exists(qroot, hconf))
-      ScbfDiscovery.append(qroot, hconf, Seq(ScbfDiscovery.Entry(
-        s"rl-${java.util.UUID.randomUUID().toString.take(8)}${ScbfDiscovery.RemovalSuffix}",
-        ScbfDiscovery.RemovedLen, System.currentTimeMillis(),
-        rewriteOf = scanned.map(qualify).sorted, rowsChanged = true,
-        cdcTag = cdcTag)))
-    // remove the replaced groups — only AFTER the replacement append
-    // committed (crash before here = clean abort, originals intact).
-    // Under CDC capture the originals RETAIN (rename into the tag's
-    // pre/ area) instead — same commit point, same manifest drops.
-    cdcTag.foreach(t => ScbfCdc.retain(fs, qroot, t, scanned))
-    scanned.groupBy(_.getParent).foreach { case (parent, ps) =>
-      if (cdcTag.isEmpty) ps.foreach { p =>
-        fs.delete(p, false)
-        val sc = ScbfStats.sidecarPath(p)
-        if (fs.exists(sc)) fs.delete(sc, false)
-        val bl = ScbfBloom.bloomPath(p)
-        if (fs.exists(bl)) fs.delete(bl, false)
-      }
-      // one merge cycle per directory dropping exactly the removed
-      // names — same discipline as ScbfDelete.removeOriginals: a
-      // concurrent append's just-merged entries survive
-      ScbfStats.mergeManifest(parent, hconf, Seq.empty, fresh = false,
-        drop = ps.map(_.getName).toSet)
-    }
+      ScbfDiscovery.append(qroot, hconf, Seq(ScbfRewrite.removalEntry(
+        s"rl-${java.util.UUID.randomUUID().toString.take(8)}",
+        scanned.map(qualify), cdcTag)))
+    ScbfRewrite.removeVictims(fs, scanned, retainAt = cdcTag.map((qroot, _)))
+    ScbfRewrite.dropFromManifests(hconf, scanned)
   }
-
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     inner.abort(messages)
@@ -578,10 +453,11 @@ private[sources] object ScbfRowOpStrippingFactory {
 }
 
 private[sources] class ScbfRowOpStrippingFactory(
-    inner: DataWriterFactory, tableWidth: Int) extends DataWriterFactory {
+    inner: DataWriterFactory, schema: StructType) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[org.apache.spark.sql.catalyst.InternalRow] = {
     val w = inner.createWriter(partitionId, taskId)
+    val tableWidth = schema.length
     // capture the probe once per writer (test seam — null in production
     // so the hot loop pays no volatile read per row)
     val probe: Int => Unit =
@@ -589,12 +465,15 @@ private[sources] class ScbfRowOpStrippingFactory(
         ScbfRowOpStrippingFactory.markerProbe
       else null
     new DataWriter[org.apache.spark.sql.catalyst.InternalRow] {
-      private val view = new ScbfShiftedRow(1)
+      // zero-copy view of the row without its leading marker, reused
+      // across rows (the SCBF writer buffers column VALUES, not rows)
+      private val view =
+        org.apache.spark.sql.catalyst.ProjectingInternalRow(schema, 1 to tableWidth)
       override def write(row: org.apache.spark.sql.catalyst.InternalRow): Unit =
         if (row.numFields == tableWidth) w.write(row)
         else if (row.numFields == tableWidth + 1) {
           if (probe != null) probe(row.getInt(0))
-          view.target = row
+          view.project(row)
           w.write(view)
         }
         else throw new graft.scbf.ScbfFormatException(
@@ -605,50 +484,4 @@ private[sources] class ScbfRowOpStrippingFactory(
       override def close(): Unit = w.close()
     }
   }
-}
-
-/** Zero-copy view of an InternalRow with the first `shift` fields
- * dropped. Reused across rows (the consumer extracts values
- * immediately — ScbfDataWriter buffers column VALUES, not rows). */
-private[sources] final class ScbfShiftedRow(shift: Int)
-  extends org.apache.spark.sql.catalyst.InternalRow {
-  var target: org.apache.spark.sql.catalyst.InternalRow = _
-  override def numFields: Int = target.numFields - shift
-  override def setNullAt(i: Int): Unit = target.setNullAt(i + shift)
-  override def update(i: Int, v: Any): Unit = target.update(i + shift, v)
-  override def copy(): org.apache.spark.sql.catalyst.InternalRow =
-    // fail-fast by design: the SCBF writer extracts values immediately
-    // and never retains rows, so a copy() call means a consumer this
-    // view was not built for — surface that instead of guessing types
-    throw new UnsupportedOperationException(
-      "ScbfShiftedRow.copy: the SCBF writer never retains rows")
-  override def isNullAt(i: Int): Boolean = target.isNullAt(i + shift)
-  override def getBoolean(i: Int): Boolean = target.getBoolean(i + shift)
-  override def getByte(i: Int): Byte = target.getByte(i + shift)
-  override def getShort(i: Int): Short = target.getShort(i + shift)
-  override def getInt(i: Int): Int = target.getInt(i + shift)
-  override def getLong(i: Int): Long = target.getLong(i + shift)
-  override def getFloat(i: Int): Float = target.getFloat(i + shift)
-  override def getDouble(i: Int): Double = target.getDouble(i + shift)
-  override def getDecimal(i: Int, p: Int, s: Int): org.apache.spark.sql.types.Decimal =
-    target.getDecimal(i + shift, p, s)
-  override def getUTF8String(i: Int): org.apache.spark.unsafe.types.UTF8String =
-    target.getUTF8String(i + shift)
-  override def getBinary(i: Int): Array[Byte] = target.getBinary(i + shift)
-  override def getGeography(i: Int): org.apache.spark.unsafe.types.GeographyVal =
-    target.getGeography(i + shift)
-  override def getGeometry(i: Int): org.apache.spark.unsafe.types.GeometryVal =
-    target.getGeometry(i + shift)
-  override def getInterval(i: Int): org.apache.spark.unsafe.types.CalendarInterval =
-    target.getInterval(i + shift)
-  override def getVariant(i: Int): org.apache.spark.unsafe.types.VariantVal =
-    target.getVariant(i + shift)
-  override def getStruct(i: Int, numFields: Int): org.apache.spark.sql.catalyst.InternalRow =
-    target.getStruct(i + shift, numFields)
-  override def getArray(i: Int): org.apache.spark.sql.catalyst.util.ArrayData =
-    target.getArray(i + shift)
-  override def getMap(i: Int): org.apache.spark.sql.catalyst.util.MapData =
-    target.getMap(i + shift)
-  override def get(i: Int, dt: org.apache.spark.sql.types.DataType): AnyRef =
-    target.get(i + shift, dt)
 }

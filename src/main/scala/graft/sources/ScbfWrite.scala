@@ -347,39 +347,17 @@ class ScbfBatchWrite(
     // only the task-committed replacement files; victims stay, and the
     // table renders exactly the concurrent mutation's state. This
     // guards the WHOLE rewrite job, not just its planning window.
-    for (snap <- occSnapTs; victims <- replaceOnly) {
-      val found = ScbfOcc.conflicts(
-        ScbfOcc.entriesAfter(qroot, conf, snap,
-          why => throw new ScbfFormatException(
-            s"snapshot rewrite on $dir: cannot verify concurrent-commit " +
-              s"safety — $why")),
-        victims, selfName = newNames.contains)
-      if (found.nonEmpty) throw new ScbfFormatException(
-        ScbfOcc.refusalMessage(s"snapshot rewrite on $dir", found,
+    replaceOnly.foreach(victims =>
+      new ScbfRewrite.Occ(s"snapshot rewrite on $dir", qroot, conf, occSnapTs)
+        .checkBeforePublish(victims, isSelf = newNames.contains,
           "detected at commit; the rewrite aborted, originals untouched"))
-    }
     // scoped overwrite emptying a directory the insert does not
-    // repopulate (static scope with no rows for it): write the 0-row
-    // keeper BEFORE the deletions — no unreadable window (the same
-    // contract as the row-level commit)
-    if (scopedOverwrite && toReplace.nonEmpty) {
-      toReplace.map(_.getParent).distinct.foreach { parent =>
-        val sub = relOf(parent)
-        if (!bySub.contains(sub)) {
-          val victimNames =
-            toReplace.filter(_.getParent == parent).map(_.getName).toSet
-          val left =
-            try fs.listStatus(parent).toSeq.filter(f => f.isFile && {
-              val n = f.getPath.getName
-              n.endsWith(Scbf.FileExtension) && !n.startsWith(".")
-            }).map(_.getPath.getName).filterNot(victimNames)
-            catch { case _: java.io.FileNotFoundException => Seq.empty }
-          if (left.isEmpty)
-            ScbfUtil.writeEmptyScbf(fs, parent, schema, "ow-keeper-",
-              announceRoot = Some(new Path(dir)))
-        }
-      }
-    }
+    // repopulate (static scope with no rows for it): the 0-row keeper
+    // goes in BEFORE the deletions (ScbfRewrite)
+    if (scopedOverwrite)
+      ScbfRewrite.keepEmptiedDirsReadable(fs, toReplace,
+        repopulated = p => bySub.contains(relOf(p)), schema, "ow-keeper-",
+        announceRoot = new Path(dir))
     // CDC retention (ScbfCdc): a snapshot rewrite (OPTIMIZE) or scoped
     // overwrite on a CDC-enabled table RETAINS its victims instead of
     // deleting them — self-tagged here when the caller did not pass a
@@ -395,31 +373,8 @@ class ScbfBatchWrite(
         Some(ScbfCdc.newTag(if (replaceOnly.isDefined) "compact" else "overwrite"))
       else None
     }
-    captureTag match {
-      case Some(tag) if victims.nonEmpty =>
-        ScbfCdc.retain(fs, cdcRootQ, tag, victims)
-      case _ =>
-        // independent per-file removals overlap on the shared IO pool
-        // (optimization r15): a partition overwrite's victim set is
-        // O(partition files), and three serial round-trips per victim
-        // made the removal latency-bound on object stores
-        victims.map { p =>
-          ScbfStats.ioPool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = {
-              fs.delete(p, false)
-              // the replaced file's stats/bloom sidecars go with it
-              // (orphan sidecars are invisible to readers, but don't
-              // accumulate them)
-              val sc = ScbfStats.sidecarPath(p)
-              if (fs.exists(sc)) fs.delete(sc, false)
-              val bl = ScbfBloom.bloomPath(p)
-              if (fs.exists(bl)) fs.delete(bl, false)
-            }
-          })
-        }.foreach(f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-    }
+    ScbfRewrite.removeVictims(fs, victims,
+      retainAt = captureTag.filter(_ => victims.nonEmpty).map((cdcRootQ, _)))
     // compact per-file stats into the directory manifest so planning
     // reads one stats file, not one per data file. Overwrite starts
     // fresh (stale entries for replaced files must not survive); append
@@ -533,13 +488,9 @@ class ScbfBatchWrite(
     // row-changing commit (same record a metadata-only DELETE leaves)
     if (scopedOverwrite && toReplace.nonEmpty &&
         ScbfDiscovery.exists(new Path(dir), conf)) {
-      val qr = fs.makeQualified(new Path(dir))
-      def relOf2(p: Path): String = ScbfCdc.relName(fs, qr, p)
-      ScbfDiscovery.append(new Path(dir), conf, Seq(ScbfDiscovery.Entry(
-        s"ow-${java.util.UUID.randomUUID().toString.take(8)}${ScbfDiscovery.RemovalSuffix}",
-        ScbfDiscovery.RemovedLen, now,
-        rewriteOf = toReplace.map(relOf2).sorted, rowsChanged = true,
-        cdcTag = captureTag)))
+      ScbfDiscovery.append(new Path(dir), conf, Seq(ScbfRewrite.removalEntry(
+        s"ow-${java.util.UUID.randomUUID().toString.take(8)}",
+        toReplace.map(relOf), captureTag)))
     }
   }
 
@@ -547,12 +498,7 @@ class ScbfBatchWrite(
     val fs = new Path(dir).getFileSystem(conf)
     messages.collect { case ScbfCommitMessage(entries) =>
       entries.foreach { e =>
-        val f = new Path(dir, e.name)
-        fs.delete(f, false)
-        val sc = ScbfStats.sidecarPath(f)
-        if (fs.exists(sc)) fs.delete(sc, false)
-        val bl = ScbfBloom.bloomPath(f)
-        if (fs.exists(bl)) fs.delete(bl, false)
+        ScbfOcc.deleteWithSidecars(fs, new Path(dir, e.name))
       }
     }
     // no sweep here: an ABORTED overwrite leaves the old table contents

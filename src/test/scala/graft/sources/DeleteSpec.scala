@@ -260,4 +260,28 @@ class DeleteSpec extends AnyFunSuite with SparkTestBase {
     val live = files(dir).keySet
     assert(man.keySet.subsetOf(live), s"manifest keys ${man.keySet} vs live $live")
   }
+
+  test("a `_`-prefixed file in a partition directory is not the table's: DELETE leaves it byte-identical") {
+    val dir = tmpDir("scbf-del-hidden")
+    spark.sql("DROP TABLE IF EXISTS scbf_del_hidden")
+    spark.sql(s"CREATE TABLE scbf_del_hidden (id INT, grp STRING) " +
+      s"USING scbf PARTITIONED BY (grp) LOCATION '$dir'")
+    try {
+      spark.sql("INSERT INTO scbf_del_hidden SELECT CAST(id AS INT), " +
+        "CONCAT('g', CAST(id % 2 AS STRING)) FROM range(0, 100)")
+      val part = new java.io.File(dir, "grp=g0")
+      val data = part.listFiles().filter(f =>
+        f.getName.endsWith(".scbf") && !f.getName.startsWith(".")).head
+      // a copy of a data file the scan hides (`_` prefix): not part of
+      // the table, so no rewrite may take it as a victim
+      val foreign = new java.io.File(part, "_" + data.getName)
+      java.nio.file.Files.copy(data.toPath, foreign.toPath)
+      val bytes = java.nio.file.Files.readAllBytes(foreign.toPath)
+      spark.sql("DELETE FROM scbf_del_hidden WHERE id < 10")
+      assert(foreign.isFile, "a file outside the table must survive the DELETE")
+      assert(java.util.Arrays.equals(
+        java.nio.file.Files.readAllBytes(foreign.toPath), bytes))
+      assert(spark.sql("SELECT COUNT(*) FROM scbf_del_hidden").head().getLong(0) == 90L)
+    } finally spark.sql("DROP TABLE IF EXISTS scbf_del_hidden")
+  }
 }

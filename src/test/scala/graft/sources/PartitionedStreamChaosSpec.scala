@@ -194,7 +194,7 @@ class PartitionedStreamChaosSpec extends AnyFunSuite with SparkTestBase {
           val hi = lo + rnd.nextInt(60)
           val par = 1 + rnd.nextInt(3) // concurrent per-partition rewrites too
           val (rm, ad) = mutate(ScbfDelete.deleteWhereTable(spark, dir, conf,
-            tableSchema, Seq("grp"), Array(
+            tableSchema, Array(
               org.apache.spark.sql.sources.GreaterThanOrEqual("id", lo),
               org.apache.spark.sql.sources.LessThan("id", hi)),
             parallelism = par))

@@ -358,4 +358,36 @@ class RowLevelSqlSpec extends AnyFunSuite with SparkTestBase {
         == org.apache.spark.sql.Row(750L, 50))
     } finally spark.sql("DROP TABLE IF EXISTS scbf_metadel")
   }
+
+  test("SQL UPDATE and MERGE remove their victims' sidecars and manifest entries") {
+    val dir = tmpDir("scbf-sql-victims")
+    mkTable("scbf_victims", dir, parts = 4)
+    val fs = new Path(dir).getFileSystem(hconf)
+    def sidecars(p: String): Seq[Path] =
+      Seq(ScbfStats.sidecarPath(new Path(p)), ScbfBloom.bloomPath(new Path(p)))
+    def checkVictims(op: String)(run: => Unit): Unit = {
+      val before = dataFiles(dir).keySet
+      before.foreach(p => sidecars(p).foreach(sc =>
+        assert(fs.exists(sc), s"$op: the fixture lacks $sc")))
+      run
+      val gone = before -- dataFiles(dir).keySet
+      assert(gone.nonEmpty, s"$op must replace at least one file")
+      gone.foreach(p => sidecars(p).foreach(sc =>
+        assert(!fs.exists(sc), s"$op left the victim's $sc behind")))
+      val manifest = ScbfStats.readManifest(new Path(dir), hconf).keySet
+      gone.foreach(p => assert(!manifest.contains(new Path(p).getName),
+        s"$op left the victim $p in the manifest"))
+    }
+    try {
+      checkVictims("UPDATE")(
+        spark.sql("UPDATE scbf_victims SET v = v + 1 WHERE id < 100"))
+      spark.range(0, 10)
+        .select((col("id") * 50).cast("int").as("id"),
+          lit("m").as("grp"), lit(3).cast("int").as("v"))
+        .createOrReplaceTempView("victims_src")
+      checkVictims("MERGE")(spark.sql(
+        """MERGE INTO scbf_victims t USING victims_src s ON t.id = s.id
+          WHEN MATCHED THEN UPDATE SET t.v = s.v"""))
+    } finally spark.sql("DROP TABLE IF EXISTS scbf_victims")
+  }
 }

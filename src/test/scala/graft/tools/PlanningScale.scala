@@ -442,7 +442,7 @@ object PlanningScalePartitioned {
     ScbfPartitions.listedDirs.clear()
     timed("maintenance: partition-scoped DELETE (discovery, no-op)") {
       // spark session unused on the no-op path (nothing rewrites)
-      ScbfDelete.deleteWhereTable(null, root, conf, schemaP, Seq("pk"),
+      ScbfDelete.deleteWhereTable(null, root, conf, schemaP,
         Array(EqualTo("pk", "p07"), GreaterThanOrEqual("id", Int.MaxValue - 1)))
     }
     val walked = ScbfPartitions.listedDirs.toArray(Array.empty[String]).toSeq
