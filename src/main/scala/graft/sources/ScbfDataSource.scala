@@ -181,8 +181,7 @@ object ScbfDataSource {
         try fs.listStatus(d).toSeq.sortBy(_.getPath.getName)
         catch { case _: java.io.FileNotFoundException => Seq.empty }
       children.iterator.flatMap { c =>
-        if (c.isFile && !isHidden(c.getPath) &&
-            c.getPath.getName.endsWith(Scbf.FileExtension)) Some(c)
+        if (c.isFile && isDataFile(c.getPath)) Some(c)
         else if (c.isDirectory && !isHidden(c.getPath) &&
             c.getPath.getName.indexOf('=') > 0) walk(fs, c.getPath)
         else None

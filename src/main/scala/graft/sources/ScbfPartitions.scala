@@ -390,8 +390,7 @@ object ScbfPartitions {
       val children =
         try fs.listStatus(d).toSeq
         catch { case _: java.io.FileNotFoundException => Seq.empty }
-      if (children.exists(c => c.isFile && !hidden(c.getPath.getName) &&
-          c.getPath.getName.endsWith(graft.scbf.Scbf.FileExtension)))
+      if (children.exists(c => c.isFile && ScbfDataSource.isDataFile(c.getPath)))
         out += d
       children.foreach { c =>
         val n = c.getPath.getName
@@ -442,7 +441,7 @@ object ScbfPartitions {
       children.foreach { c =>
         if (isRoot) rootChildHook(c)
         val n = c.getPath.getName
-        if (c.isFile && !hidden(n) && n.endsWith(graft.scbf.Scbf.FileExtension))
+        if (c.isFile && ScbfDataSource.isDataFile(c.getPath))
           out += c
         else if (c.isDirectory && !hidden(n) && n.indexOf('=') > 0) {
           val cells = partValues(new Path(c.getPath, "f"), schema, qroots)

@@ -993,7 +993,8 @@ case class ScbfFilePartition(path: String, length: Long, key: InternalRow = null
  * grouped); no file IO happens on the executor at all. */
 case class ScbfAggPartition(schema: StructType, rows: Array[Array[Any]]) extends InputPartition
 
-class ScbfPartitionReaderFactory(required: StructType, conf: Broadcast[SerializableConfiguration])
+class ScbfPartitionReaderFactory(
+    required: StructType, private[sources] val conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean =

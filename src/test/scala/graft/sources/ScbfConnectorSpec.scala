@@ -232,4 +232,27 @@ class ScbfConnectorSpec extends AnyFunSuite with SparkTestBase {
       .filter($"score" > 2.0).select($"id").as[Int].collect().sorted
     assert(got.toSeq == Seq(2, 3))
   }
+
+  test("a data file cut short inside its last block fails the read as a truncated file") {
+    val dir = tmpDir("scbf-truncated")
+    sampleDf.coalesce(1).write.format("scbf").mode("overwrite").save(dir)
+    val data = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.endsWith(".scbf") && !f.getName.startsWith(".")).head
+    val in = graft.scbf.ScbfReader.open(data.getPath)
+    val lastBlock = try {
+      val hdr = graft.scbf.ScbfReader.readHeader(in)
+      graft.scbf.ScbfReader.readMeta(in, hdr, data.length())
+        .flatMap(m => m.data +: m.strings.toSeq).maxBy(_.offset)
+    } finally in.close()
+    val raf = new java.io.RandomAccessFile(data, "rw")
+    try raf.setLength(lastBlock.offset + lastBlock.compSize / 2) finally raf.close()
+    // the local filesystem would otherwise report a checksum mismatch
+    java.nio.file.Files.deleteIfExists(
+      new java.io.File(dir, s".${data.getName}.crc").toPath)
+    val err = intercept[Exception](spark.read.format("scbf").load(dir).collect())
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => t.isInstanceOf[graft.scbf.ScbfFormatException] &&
+      t.getMessage.contains("Truncated")),
+      s"no truncated-file format error in ${chain.map(_.toString).mkString(" <- ")}")
+  }
 }

@@ -11,7 +11,9 @@ import graft.SparkTestBase
 /** The factories the connector ships to tasks carry a broadcast handle
  * for the Hadoop conf, never the conf itself: their serialized size
  * does not grow with the conf. A conf inlined into each factory would
- * put every entry into every task binary and rebuild it in every task. */
+ * put every entry into every task binary and rebuild it in every task.
+ * The broadcast is reused across queries while the conf's content is
+ * the same, and only then. */
 class TaskConfShippingSpec extends AnyFunSuite with SparkTestBase {
 
   private val schema = StructType(Seq(
@@ -53,5 +55,47 @@ class TaskConfShippingSpec extends AnyFunSuite with SparkTestBase {
       paddedConf(), ScbfWrite.DefaultMaxBufferedBytes)
     val n = shippedBytes(write.createStreamingWriterFactory(writeInfo))
     assert(n < MaxFactoryBytes, s"streaming writer factory serializes to $n bytes")
+  }
+
+  private def scanBroadcast(conf: Configuration) =
+    new ScbfScan(schema, schema, Seq.empty, conf).createReaderFactory()
+      .asInstanceOf[ScbfPartitionReaderFactory].conf
+
+  test("two scans over the same conf share one broadcast") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(scanBroadcast(conf).id == scanBroadcast(conf).id)
+  }
+
+  test("a key set on the live conf gets a new broadcast that tasks read") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = "graft.test.broadcast.reuse"
+    val before = scanBroadcast(conf)
+    try {
+      conf.set(key, "v1")
+      val after = scanBroadcast(conf)
+      assert(after.id != before.id)
+      val seen = spark.sparkContext.parallelize(Seq(0), 1)
+        .map(_ => after.value.value.get(key)).collect().toSeq
+      assert(seen == Seq("v1"))
+    } finally conf.unset(key)
+  }
+
+  test("a per-write option does not leak into the next write through a shared broadcast") {
+    def bloomSidecars(dir: String): Int =
+      new java.io.File(dir).listFiles().count(_.getName.endsWith(".bloom"))
+    def write(dir: String, opts: Map[String, String]): Unit =
+      spark.range(0, 100).selectExpr("CAST(id AS INT) AS id")
+        .write.format("scbf").options(opts).mode("overwrite").save(dir)
+    val off = tmpDir("scbf-ship-nobloom")
+    write(off, Map("bloomMaxBytes" -> "0"))
+    assert(bloomSidecars(off) == 0, "bloomMaxBytes=0 must write no bloom sidecar")
+    val on = tmpDir("scbf-ship-bloom")
+    write(on, Map.empty)
+    assert(bloomSidecars(on) > 0, "a default write must write bloom sidecars")
+  }
+
+  test("a conf with different content gets a broadcast of its own") {
+    val live = scanBroadcast(spark.sparkContext.hadoopConfiguration)
+    assert(scanBroadcast(paddedConf()).id != live.id)
   }
 }
