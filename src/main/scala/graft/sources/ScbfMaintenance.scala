@@ -56,9 +56,27 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * then read exactly that snapshot, `shape` it and overwrite exactly
    * its files (`replaceFileNames`).
    *
+   * One skip rule for every kind: a snapshot of ONE file at a target
+   * of ONE file is left alone — no job, no commit, no announcement
+   * (Delta's bin-packing leaves a single-file bin alone the same way).
+   * The rewrite could not change its data: [[cluster]] and [[zorder]]
+   * range-partition ACROSS output files but never sort within one, so
+   * the one output would hold the same rows as the one input, with
+   * stats describing the same values, under a new name only. The file
+   * keeps its name, bytes and sidecars; readers, pruning, streams and
+   * the change feed see exactly the state the rewrite would have left.
+   * Only the manifest's insert-only directory sketches (`dirndv`,
+   * `dirhist`, `dirtopk`: size estimates, never answers or pruning)
+   * keep the over-estimate earlier copy-on-write drops left, which a
+   * rewrite's fresh manifest would have shed, until the directory next
+   * changes ([[ScbfStats.mergeManifest]]).
+   * The OCC snapshot and the heal still run first, so a skipped
+   * directory heals like any other. [[compact]] adds its own
+   * equal-count, balanced-sizes skip through `plan`.
+   *
    * `plan` sees the snapshot and returns the shaping step, or None when
    * there is nothing worth rewriting. Returns the names ACTUALLY folded
-   * into the rewrite — callers announcing the rewrite elsewhere
+   * into the rewrite, empty when skipped — callers announcing it elsewhere
    * ([[sweepPartitions]]' root log) must mark exactly this set, not
    * their own re-listing: a file appended between two listings would
    * be folded in but not marked, and a caught-up stream would skip the
@@ -66,7 +84,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * deleted data.
    */
   private def rewriteSnapshot(spark: SparkSession, dir: String, what: String,
-      maxBufferedBytes: Option[Long], filePrefix: Option[String],
+      numFiles: Int, maxBufferedBytes: Option[Long], filePrefix: Option[String],
       cdcTag: Option[String], cdcRoot: Option[String])(
       plan: Seq[org.apache.hadoop.fs.FileStatus] =>
         Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame])
@@ -82,8 +100,9 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       ScbfDataSource.resolveFiles(Seq(dir), conf),
       ScbfRewrite.recordedVictims(where, q, conf), probeFs = false, heal = true)
     // a freshly-created (or fully-truncated) directory has nothing to
-    // rewrite — loading zero paths would crash with an unrelated error
-    if (snapshot.isEmpty) return Seq.empty
+    // rewrite — loading zero paths would crash with an unrelated error;
+    // one file at a one-file target is already the rewrite's output
+    if (snapshot.isEmpty || (snapshot.size == 1 && numFiles == 1)) return Seq.empty
     val shape = plan(snapshot).getOrElse(return Seq.empty)
     raceHook()
     val writer = shape(spark.read.format("scbf")
@@ -99,7 +118,12 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     snapshot.map(_.getPath.getName)
   }
 
-  /** Per-partition maintenance rewrites thread the table-level CDC
+  /** Range-partition `dir` on `clusterCols` into `numFiles` files with
+   * disjoint value ranges (no sort within a file), so a directory
+   * already at one file with a one-file target is skipped
+   * ([[rewriteSnapshot]]). Returns the names folded in.
+   *
+   * Per-partition maintenance rewrites thread the table-level CDC
    * coordinates ([[ScbfCdc]]) so the sweep's ROOT re-announcement can
    * carry the same tag the partition commit retained under — a flat
    * rewrite needs neither (the commit self-tags at its own root). */
@@ -114,7 +138,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       cdcRoot: Option[String] = None): Seq[String] = {
     require(clusterCols.nonEmpty, "cluster requires at least one column")
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    rewriteSnapshot(spark, dir, "cluster", maxBufferedBytes, filePrefix,
+    rewriteSnapshot(spark, dir, "cluster", numFiles, maxBufferedBytes, filePrefix,
       cdcTag, cdcRoot)(_ => Some(_.repartitionByRange(numFiles, clusterCols.map(col): _*)))
   }
 
@@ -139,7 +163,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       cdcTag: Option[String] = None,
       cdcRoot: Option[String] = None): Seq[String] = {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    rewriteSnapshot(spark, dir, "compact", maxBufferedBytes, filePrefix,
+    rewriteSnapshot(spark, dir, "compact", numFiles, maxBufferedBytes, filePrefix,
       cdcTag, cdcRoot) { snapshot =>
       // idempotence: already AT the target file count with a
       // plausibly-packed layout — re-running `OPTIMIZE tbl` must not pay
@@ -157,7 +181,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       // current) stays an explicit rewrite: the caller asked for more
       // parallelism.
       val lens = snapshot.map(_.getLen)
-      val balanced = lens.size == 1 || lens.max <= 2L * (lens.sum / lens.size)
+      val balanced = lens.max <= 2L * (lens.sum / lens.size)
       if (numFiles == snapshot.size && balanced) None
       else Some(df =>
         if (numFiles < snapshot.size) df.coalesce(numFiles)
@@ -176,7 +200,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
       compact(spark, part, numFilesPerPartition, maxBufferedBytes,
         Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
-    }
+    }.map(_._1)
 
   /**
    * Z-order clustering rewrite — the multi-dimensional OPTIMIZE
@@ -199,7 +223,9 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    *
    * Numeric columns only (quantiles are numeric); `bits` per column
    * defaults to 8 (256 buckets — plenty against file counts, which are
-   * ~10⁴ per directory even at 100 TB).
+   * ~10⁴ per directory even at 100 TB). Like [[cluster]], no sort
+   * within a file: a one-file directory at a one-file target is
+   * skipped before the quantile job ([[rewriteSnapshot]]).
    */
   def zorder(
       spark: SparkSession,
@@ -215,7 +241,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     require(bits >= 1 && bits <= 16, s"bits per column must be in [1,16], got $bits")
     import org.apache.spark.sql.functions._
-    rewriteSnapshot(spark, dir, "zorder", maxBufferedBytes, filePrefix,
+    rewriteSnapshot(spark, dir, "zorder", numFiles, maxBufferedBytes, filePrefix,
       cdcTag, cdcRoot) { _ => Some { df =>
       zCols.foreach { c =>
         val dt = df.schema(c).dataType
@@ -281,13 +307,16 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * with everything before it fully maintained and everything after it
    * untouched; in parallel, every started partition attempt runs to
    * completion before the first failure surfaces (nothing is left
-   * running in the background). Either way re-running is always safe
-   * (a clustered partition just re-clusters).
+   * running in the background). Either way re-running is always safe,
+   * and cheap where nothing changed: a partition already at one file
+   * with a one-file target is skipped without a job or a commit
+   * ([[rewriteSnapshot]]); any other partition re-clusters.
    *
    * Stream transparency at the ROOT: after each partition's rewrite,
    * its outputs are re-announced to the ROOT log
    * ([[ScbfRewrite.announceToRoot]]), so a caught-up root stream admits
-   * them seen-without-delivery exactly like a root-level OPTIMIZE.
+   * them seen-without-delivery exactly like a root-level OPTIMIZE. A
+   * skipped partition published nothing and announces nothing.
    *
    * `parallelism` runs that many partition rewrites as CONCURRENT
    * Spark jobs from driver threads — partitions are disjoint
@@ -309,7 +338,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
       cluster(spark, part, clusterCols, numFilesPerPartition,
         maxBufferedBytes, Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
-    }
+    }.map(_._1)
 
   /** Table-level [[zorder]] — the multi-dimensional [[clusterTable]];
    * same per-partition sweep, same root-log re-announcement. */
@@ -324,10 +353,28 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
       zorder(spark, part, zCols, numFilesPerPartition, bits,
         maxBufferedBytes, Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
-    }
+    }.map(_._1)
 
+  /** `OPTIMIZE` as SQL runs it ([[graft.plans.GraftOptimizeCommand]]):
+   * ZORDER BY z-orders, CLUSTER BY clusters, no BY clause compacts; a
+   * partitioned table sweeps every partition. Returns the number of
+   * original files folded in, summed over partitions — a skipped
+   * directory folds none. */
+  private[graft] def optimize(spark: SparkSession, dir: String, partitioned: Boolean,
+      zorderBy: Boolean, cols: Seq[String], files: Int, parallelism: Int): Int = {
+    def one(d: String, prefix: Option[String], tag: Option[String], root: Option[String]) =
+      if (zorderBy) zorder(spark, d, cols, files, filePrefix = prefix, cdcTag = tag, cdcRoot = root)
+      else if (cols.isEmpty) compact(spark, d, files, None, prefix, tag, root)
+      else cluster(spark, d, cols, files, None, prefix, tag, root)
+    if (!partitioned) one(dir, None, None, None).size
+    else sweepPartitions(spark, dir, parallelism)((part, prefix, tag) =>
+      one(part, Some(prefix), tag, Some(dir))).map(_._2).sum
+  }
+
+  /** Each partition directory of `dir` with the number of files its
+   * rewrite folded in. */
   private def sweepPartitions(spark: SparkSession, dir: String, parallelism: Int)(
-      rewrite: (String, String, Option[String]) => Seq[String]): Seq[String] = {
+      rewrite: (String, String, Option[String]) => Seq[String]): Seq[(String, Int)] = {
     require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -338,17 +385,19 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     // commit retained its victims under (ScbfCdc)
     val cdcOn = ScbfCdc.enabled(qroot, conf)
     val parts = partitionDirs(dir, conf)
-    def sweepOne(part: org.apache.hadoop.fs.Path): Unit = {
+    def sweepOne(part: org.apache.hadoop.fs.Path): (String, Int) = {
       val prefix = s"opt-${java.util.UUID.randomUUID().toString.take(8)}-"
       val tag = if (cdcOn) Some(ScbfCdc.newTag("compact")) else None
       // the root-log mark carries the names the rewrite ACTUALLY folded
-      // in (its return value) — see rewriteSnapshot
-      val snapshot = rewrite(part.toString, prefix, tag)
-      ScbfRewrite.announceToRoot(qroot, conf, part, prefix, snapshot,
-        rowsChanged = false, cdcTag = if (snapshot.nonEmpty) tag else None)
+      // in (its return value) — see rewriteSnapshot; a skipped
+      // partition folded nothing, published nothing, announces nothing
+      val folded = rewrite(part.toString, prefix, tag)
+      if (folded.nonEmpty)
+        ScbfRewrite.announceToRoot(qroot, conf, part, prefix, folded,
+          rowsChanged = false, cdcTag = tag)
+      part.toString -> folded.size
     }
     forEachDir(parts, parallelism)(sweepOne)
-    parts.map(_.toString)
   }
 
   /** Run `f` over independent directories with up to `parallelism`
@@ -360,18 +409,18 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * sweeps and table-level DELETE/UPDATE) would then race it, exactly
    * the single-rewriter hazard. Each per-directory op is atomic
    * (commit-or-leave-intact), so once this HAS returned, re-running
-   * is always safe. */
-  private[sources] def forEachDir(
+   * is always safe. Returns `f`'s results in `dirs` order. */
+  private[sources] def forEachDir[T](
       dirs: Seq[org.apache.hadoop.fs.Path],
-      parallelism: Int)(f: org.apache.hadoop.fs.Path => Unit): Unit = {
+      parallelism: Int)(f: org.apache.hadoop.fs.Path => T): Seq[T] = {
     require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
-    if (parallelism == 1 || dirs.size <= 1) dirs.foreach(f)
+    if (parallelism == 1 || dirs.size <= 1) dirs.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(parallelism, dirs.size))
       try {
-        val futures = dirs.map(d => pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = f(d)
+        val futures = dirs.map(d => pool.submit(new java.util.concurrent.Callable[T] {
+          override def call(): T = f(d)
         }))
         val results = futures.map(fu => scala.util.Try(fu.get()))
         val failures = results.collect { case scala.util.Failure(e) =>
@@ -388,6 +437,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
           failures.drop(1).foreach(first.addSuppressed)
           throw first
         }
+        results.map(_.get)
       } finally pool.shutdown()
     }
   }

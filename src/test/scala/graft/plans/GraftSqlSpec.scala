@@ -127,6 +127,29 @@ class GraftSqlSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.sql("DROP TABLE IF EXISTS sqlopt_noop")
   }
 
+  test("a partitioned OPTIMIZE returns the files it folded, summed over partitions") {
+    val dir = tmpDir("scbf-sql-optcount")
+    spark.sql("DROP TABLE IF EXISTS sqlopt_count")
+    try {
+      spark.sql("CREATE TABLE sqlopt_count (id INT, grp STRING) USING scbf " +
+        s"PARTITIONED BY (grp) LOCATION '$dir'")
+      // two single-task inserts: 2 files in each of 3 partitions
+      (0 until 2).foreach { k =>
+        spark.sql(s"""INSERT INTO sqlopt_count SELECT /*+ COALESCE(1) */
+          CAST(id AS INT), concat('g', CAST(id % 3 AS INT))
+          FROM range(${k * 90}, ${k * 90 + 90})""")
+      }
+      val perDir = ScbfDataSource.resolveFiles(Seq(dir), hconf)
+        .groupBy(_.getPath.getParent.getName).view.mapValues(_.size).toMap
+      assert(perDir == Map("grp=g0" -> 2, "grp=g1" -> 2, "grp=g2" -> 2), perDir.toString)
+      assert(spark.sql("OPTIMIZE sqlopt_count CLUSTER BY (id)").head().getInt(0) == 6)
+      // every partition is now one file at the one-file target
+      assert(spark.sql("OPTIMIZE sqlopt_count CLUSTER BY (id)").head().getInt(0) == 0)
+      assert(spark.sql("SELECT COUNT(*), SUM(id) FROM sqlopt_count").head() ==
+        org.apache.spark.sql.Row(180L, (0L until 180L).sum))
+    } finally spark.sql("DROP TABLE IF EXISTS sqlopt_count")
+  }
+
   test("VACUUM sweeps aged temps and orphan sidecars across partitions, pure SQL") {
     val dir = tmpDir("scbf-sql-vac")
     spark.sql("DROP TABLE IF EXISTS sqlvac_t")
