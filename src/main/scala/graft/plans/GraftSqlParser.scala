@@ -648,11 +648,11 @@ private[plans] object GraftSchemaRewrite {
     // keeper-only directories (TRUNCATEd / freshly ADDed partitions
     // hold a 0-row file the empty-DataFrame write cannot reproduce):
     // re-create them empty with the NEW schema so no partition vanishes
-    val oldDirs = ScbfPartitions.pruneDirs(rootP, conf, meta.schema,
-      Seq.empty, ScbfPartitions.qualifiedRoots(Seq(rootDir), conf)).map(rel)
+    def dataDirs(root: org.apache.hadoop.fs.Path) =
+      ScbfPartitions.walk(root, conf).filter(_.holdsData).map(_.dir).toSeq
+    val oldDirs = dataDirs(rootP).map(rel)
     val qsucc = fs.makeQualified(successor)
-    val newDirs = ScbfPartitions.pruneDirs(successor, conf, newSchema,
-      Seq.empty, ScbfPartitions.qualifiedRoots(Seq(successor.toString), conf))
+    val newDirs = dataDirs(successor)
       .map(p => qsucc.toUri.relativize(
         fs.makeQualified(p).toUri).getPath.stripPrefix("/")).toSet
     oldDirs.filterNot(newDirs).foreach { d =>

@@ -77,7 +77,7 @@ object ScbfClone {
 
   private val Header = "clone\t1"
 
-  /** Ref-file stat calls ([[resolve]]/[[resolvePruned]]) — the
+  /** Ref-file stat calls ([[resolvePruned]]) — the
    * partition-grade pin: a partition-predicate read of a clone must
    * stat only the selected partitions' refs, not the whole list. */
   val refStats = new java.util.concurrent.atomic.AtomicLong(0)
@@ -217,7 +217,7 @@ object ScbfClone {
 
   /** ONE referenced file's status — schema inference needs a single
    * header, so a 10⁵-ref clone must not stat every ref for it. A
-   * dangling first ref refuses with the same contract as [[resolve]]
+   * dangling first ref refuses with the same contract as [[resolvePruned]]
    * (schema inference is just the earliest reader to trip over it). */
   def firstRef(dir: Path, conf: Configuration): Option[FileStatus] =
     read(dir, conf).flatMap { meta =>
@@ -237,26 +237,20 @@ object ScbfClone {
   /** Resolve the refs to live FileStatuses — pooled stats (a clone can
    * reference 10⁵+ files; object-store HEADs must overlap), each
    * length-guarded: missing or resized files refuse with the
-   * dangling-reference contract. */
-  def resolve(dir: Path, conf: Configuration): Seq[FileStatus] =
-    read(dir, conf) match {
-      case None       => Seq.empty
-      case Some(meta) => statRefs(dir, conf, meta, meta.refs)
-    }
-
-  /** Partition-pruned [[resolve]] — the branch-side rendering of
-   * directory pruning: ref paths carry the SOURCE's `k=v` cells, so a
-   * partition predicate drops whole source directories' refs by pure
-   * path arithmetic BEFORE any of them is stat'ed. A partition-scoped
-   * read of a 10⁵-ref clone stats (and length-guards) only the
-   * selected partitions' refs — [[refStats]] is the pin. Exactly
-   * [[ScbfPartitions.prune]]'s conservative semantics: an unparseable
-   * cell or no usable filter keeps the ref; every filter stays
-   * residual downstream, so correctness never depends on the prune.
-   * The dangling-ref guard narrows with the scope by design — a read
-   * that never plans a pruned partition cannot (and need not) vouch
-   * for its refs, same as the source's own pruned scan never touching
-   * a pruned directory's files. */
+   * dangling-reference contract. Partition-pruned — the branch-side
+   * rendering of directory pruning: ref paths carry the SOURCE's `k=v`
+   * cells, so a partition predicate drops whole source directories'
+   * refs by pure path arithmetic BEFORE any of them is stat'ed. A
+   * partition-scoped read of a 10⁵-ref clone stats (and length-guards)
+   * only the selected partitions' refs — [[refStats]] is the pin.
+   * Exactly [[ScbfPartitions.prune]]'s conservative semantics: an
+   * unparseable cell or no usable filter keeps the ref (no filters
+   * resolves every ref); every filter stays residual downstream, so
+   * correctness never depends on the prune. The dangling-ref guard
+   * narrows with the scope by design — a read that never plans a
+   * pruned partition cannot (and need not) vouch for its refs, same as
+   * the source's own pruned scan never touching a pruned directory's
+   * files. */
   def resolvePruned(dir: Path, conf: Configuration,
       schema: org.apache.spark.sql.types.StructType,
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[FileStatus] =

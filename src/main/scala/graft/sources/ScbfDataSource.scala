@@ -122,120 +122,68 @@ object ScbfDataSource {
 
   /** Path-based core of the listing — re-invoked by the streaming
    * source on baseline/reconcile triggers (incremental triggers read
-   * the [[ScbfDiscovery]] log instead of re-listing). */
+   * the [[ScbfDiscovery]] log instead of re-listing): the unfiltered
+   * [[resolveFilesPruned]]. */
   def resolveFiles(tablePaths: Seq[String], conf: Configuration): Seq[FileStatus] = {
     listings.incrementAndGet()
-    val statuses = tablePaths.flatMap { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      val globbed = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
-      // directories recurse into `k=v`-named children (Hive-style
-      // partition layout, ScbfPartitions) — and ONLY those, so an
-      // unrelated nested directory never leaks files into the table
-      def walkChildren(children: Seq[FileStatus]): Seq[FileStatus] =
-        children.flatMap {
-          case c if c.isDirectory && !isHidden(c.getPath) &&
-              c.getPath.getName.indexOf('=') > 0 =>
-            walkChildren(fs.listStatus(c.getPath).toSeq)
-          case c if c.isFile && isDataFile(c.getPath) => Seq(c)
-          case _ => Seq.empty
-        }
-      globbed.flatMap {
-        // a SHALLOW CLONE directory's data is its ref list ∪ its own
-        // (appended) files. Clone detection rides the top-level listing
-        // the walk pays anyway (the ref file is one of its hidden
-        // children) — a non-clone table never pays an extra RPC for
-        // the feature's existence on this hot planning path.
-        case d if d.isDirectory =>
-          val children = fs.listStatus(d.getPath).toSeq
-          val refs =
-            if (children.exists(c => c.isFile &&
-                c.getPath.getName == ScbfClone.RefFile))
-              ScbfClone.resolve(d.getPath, conf)
-            else Seq.empty
-          refs ++ walkChildren(children)
-        case f if isHidden(f.getPath) => Seq.empty
-        case f => Seq(f)
-      }
-    }
-    statuses.sortBy(_.getPath.toString)
+    resolveFilesPruned(tablePaths, conf, new StructType(), Seq.empty)
   }
 
-  private def isHidden(p: Path): Boolean =
-    p.getName.startsWith("_") || p.getName.startsWith(".")
-
-  /** A LIVE data file's name: the `.scbf` extension, not hidden (`_` or
-   * `.` prefix — temps, sidecars and foreign files). The one predicate
-   * for every leaf listing that scopes data, so a rewrite never takes
-   * as a victim a file its re-read would drop as hidden. */
+  /** A LIVE data file's name: the `.scbf` extension, not hidden
+   * ([[ScbfPartitions.isHidden]]: temps, sidecars and foreign files).
+   * The one predicate for every leaf listing that scopes data, so a
+   * rewrite never takes as a victim a file its re-read would drop as
+   * hidden. */
   def isDataFile(p: Path): Boolean =
-    p.getName.endsWith(Scbf.FileExtension) && !isHidden(p)
+    p.getName.endsWith(Scbf.FileExtension) && !ScbfPartitions.isHidden(p.getName)
 
-  /** ONE data file, via an early-exit depth-first walk in name order —
-   * what schema inference needs (every file's header carries the full
-   * schema). Visits at most one directory per tree level on the happy
-   * path instead of listing the whole tree. */
-  def findFirstFile(tablePaths: Seq[String], conf: Configuration): Option[FileStatus] = {
-    def walk(fs: org.apache.hadoop.fs.FileSystem, d: Path): Option[FileStatus] = {
-      val children =
-        try fs.listStatus(d).toSeq.sortBy(_.getPath.getName)
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
-      children.iterator.flatMap { c =>
-        if (c.isFile && isDataFile(c.getPath)) Some(c)
-        else if (c.isDirectory && !isHidden(c.getPath) &&
-            c.getPath.getName.indexOf('=') > 0) walk(fs, c.getPath)
-        else None
-      }.nextOption()
-    }
+  /** ONE data file — what schema inference needs (every file's header
+   * carries the full schema): the first data file of the lazy
+   * [[ScbfPartitions.walk]], which stops listing once it is found. */
+  def findFirstFile(tablePaths: Seq[String], conf: Configuration): Option[FileStatus] =
     tablePaths.iterator.flatMap { p =>
       val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
+      Option(hp.getFileSystem(conf).globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
         .sortBy(_.getPath.toString).iterator.flatMap {
           // a fresh clone holds no local data files — its first ref
           // serves schema inference (every SCBF file carries the schema)
           case d if d.isDirectory =>
-            walk(fs, d.getPath).orElse(ScbfClone.firstRef(d.getPath, conf))
-          case f if isHidden(f.getPath) => None
-          case f                        => Some(f)
+            ScbfPartitions.walk(d.getPath, conf).flatMap(_.dataFiles).nextOption()
+              .orElse(ScbfClone.firstRef(d.getPath, conf))
+          case f if ScbfPartitions.isHidden(f.getPath.getName) => None
+          case f                                               => Some(f)
         }
     }.nextOption()
-  }
 
-  /** Filter-driven file resolution for scan planning: directories walk
-   * through [[ScbfPartitions.pruneResolve]] — one listing per kept
-   * directory, partition `k=v` names pruned BEFORE their contents are
-   * listed — so a partition-pruned read of a 10⁶-file table lists the
-   * root plus the touched partitions only. With no usable filter this
-   * degenerates to exactly [[resolveFiles]]'s walk (same one-pass
-   * cost). Glob patterns and plain-file paths behave as in
-   * [[resolveFiles]]; output is path-sorted like it too. */
+  /** Expand each path for scan planning: glob patterns honored,
+   * directories walk through [[ScbfPartitions.walk]] with the
+   * partition-cell prune, plain files taken as-is. A pruned
+   * partition's directory is never listed, so a partition-pruned read
+   * of a 10⁶-file table lists the root plus the touched partitions
+   * only. A SHALLOW CLONE directory's data is its ref list (pruned by
+   * the refs' SOURCE-rooted cells, [[ScbfClone.resolvePruned]]) ∪ its
+   * own files; detection reads the root's own listing, so a non-clone
+   * table pays no extra RPC for the feature. Output is path-sorted. */
   def resolveFilesPruned(tablePaths: Seq[String], conf: Configuration,
       schema: StructType,
       filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[FileStatus] = {
-    val qroots = ScbfPartitions.qualifiedRoots(tablePaths, conf)
+    val keep = ScbfPartitions.cellPrune(schema, filters,
+      ScbfPartitions.qualifiedRoots(tablePaths, conf))
     val statuses = tablePaths.flatMap { p =>
       val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      val globbed = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
+      val globbed = Option(hp.getFileSystem(conf).globStatus(hp)).map(_.toSeq)
+        .getOrElse(Seq.empty)
       globbed.flatMap {
-        // clone refs are directory-pruned by their SOURCE-rooted k=v
-        // cells (ScbfClone.resolvePruned — pure path arithmetic, so a
-        // pruned partition's refs are never stat'ed); per-file
-        // stats/bloom pruning still applies to the survivors
-        // downstream, off the SOURCE directories' sidecars. Detection
-        // rides pruneResolve's own root listing (the rootChildHook
-        // seam) — no extra RPC for non-clone tables.
         case d if d.isDirectory =>
-          var hasRef = false
-          val pruned = ScbfPartitions.pruneResolve(d.getPath, conf, schema,
-            filters, qroots,
-            c => if (c.isFile && c.getPath.getName == ScbfClone.RefFile)
-              hasRef = true)
-          (if (hasRef) ScbfClone.resolvePruned(d.getPath, conf, schema, filters)
-           else Seq.empty) ++ pruned
-        case f if isHidden(f.getPath) => Seq.empty
-        case f                        => Seq(f)
+          val tree = ScbfPartitions.walk(d.getPath, conf, keep).toSeq
+          val refs =
+            if (tree.head.children.exists(c => c.isFile &&
+                c.getPath.getName == ScbfClone.RefFile))
+              ScbfClone.resolvePruned(d.getPath, conf, schema, filters)
+            else Seq.empty
+          refs ++ tree.flatMap(_.dataFiles)
+        case f if ScbfPartitions.isHidden(f.getPath.getName) => Seq.empty
+        case f                                               => Seq(f)
       }
     }
     statuses.sortBy(_.getPath.toString)

@@ -186,15 +186,15 @@ object ScbfDelete {
     var round = 0
     while (true) {
       round += 1
-      // directory-first discovery (ScbfPartitions.pruneDirs): prune
+      // directory-first discovery (ScbfPartitions.walk): prune
       // partition NAMES before listing their contents, so a scoped
       // takedown's listing bill is the in-scope subtree plus one root
       // listing — never a full-table leaf LIST per round. Pure
       // optimization (see scaladoc): over-keeping a directory only
       // costs its listing — the rewrite condition enforces exactness
-      val parents = ScbfPartitions.pruneDirs(
-        new Path(rootDir), conf, tableSchema, filters.toSeq, qroots)
-        .filterNot(done)
+      val parents = ScbfPartitions.walk(new Path(rootDir), conf,
+        ScbfPartitions.cellPrune(tableSchema, filters.toSeq, qroots))
+        .filter(_.holdsData).map(_.dir).filterNot(done).toSeq
       if (parents.isEmpty) return
       if (round > MaxRewriteRounds) throw new graft.scbf.ScbfFormatException(
         s"partitioned rewrite on $rootDir: concurrent ingest kept creating " +

@@ -287,15 +287,6 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     } }
   }
 
-  /** The partition directories of a table: the distinct parents of its
-   * data files (recursive listing). An unpartitioned table yields its
-   * own root; a hive-layout table yields one leaf per partition value
-   * combination. */
-  private[sources] def partitionDirs(
-      dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[org.apache.hadoop.fs.Path] =
-    ScbfDataSource.resolveFiles(Seq(dir), conf).map(_.getPath.getParent).distinct
-
   /**
    * Table-level OPTIMIZE: run [[cluster]] in EVERY partition directory
    * of a (possibly hive-partitioned) table with one call — the shape
@@ -379,12 +370,21 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val qroot = root.getFileSystem(conf).makeQualified(root)
+    // a clone's data are refs into the SOURCE's directories: a sweep
+    // of its own tree would miss them, so it refuses like the
+    // single-directory rewrite does
+    ScbfClone.refuseIfClone(root, conf, "OPTIMIZE (table)")
     // one CDC probe per sweep: each per-partition rewrite is its own
     // commit, so each gets its own tag — generated HERE so the root
     // re-announcement below can carry the same tag the partition
     // commit retained its victims under (ScbfCdc)
     val cdcOn = ScbfCdc.enabled(qroot, conf)
-    val parts = partitionDirs(dir, conf)
+    // the directories holding data: the root of an unpartitioned
+    // table, one leaf per partition value combination otherwise. An
+    // unpruned walk of the whole tree, counted as the full-table
+    // listing it is
+    ScbfDataSource.listings.incrementAndGet()
+    val parts = ScbfPartitions.walk(root, conf).filter(_.holdsData).map(_.dir).toSeq
     def sweepOne(part: org.apache.hadoop.fs.Path): (String, Int) = {
       val prefix = s"opt-${java.util.UUID.randomUUID().toString.take(8)}-"
       val tag = if (cdcOn) Some(ScbfCdc.newTag("compact")) else None
@@ -530,12 +530,13 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
   /** Table-level [[vacuum]]: the janitorial sweep over EVERY table
    * directory (the partitioned root's own litter and a crashed
    * write's temp-only partition directory both need sweeping, so
-   * this walks [[ScbfPartitions.allDirs]], not just data-holding
-   * dirs). Directories sweep CONCURRENTLY up to `parallelism` driver
-   * threads — per-directory vacuums are pure independent filesystem
-   * metadata work (list + targeted deletes; no Spark jobs), so on an
-   * object store the sweep's wall-clock is latency-bound and
-   * serializing it is O(dirs) round-trips for no reason. An explicit
+   * this walks every directory of [[ScbfPartitions.walk]], not just
+   * data-holding ones). Directories sweep CONCURRENTLY up to
+   * `parallelism` driver threads — per-directory vacuums are pure
+   * independent filesystem metadata work (list + targeted deletes; no
+   * Spark jobs), so on an object store the sweep's wall-clock is
+   * latency-bound and serializing it is O(dirs) round-trips for no
+   * reason. An explicit
    * `olderThanMs` (SQL `RETAIN n HOURS`) overrides both the litter
    * and the CDC-retention defaults, exactly as the per-directory
    * call does. Returns (temps removed, orphan sidecars removed). */
@@ -546,7 +547,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       parallelism: Int = 1): (Int, Int) = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(rootDir)
-    val dirs = ScbfPartitions.allDirs(root, conf)
+    val dirs = ScbfPartitions.walk(root, conf).map(_.dir).toSeq
     val temps = new java.util.concurrent.atomic.AtomicInteger(0)
     val orphans = new java.util.concurrent.atomic.AtomicInteger(0)
     forEachDir(dirs, parallelism) { d =>

@@ -91,7 +91,6 @@ private[sources] object ScbfPartitionMgmt {
         }
         nm -> v
     }.toMap
-    def hidden(n: String) = n.startsWith(".") || n.startsWith("_")
     def walk(d: Path, depth: Int, acc: Vector[String]): Seq[Seq[String]] =
       if (depth == pSchema.length) Seq(acc)
       else {
@@ -102,7 +101,7 @@ private[sources] object ScbfPartitionMgmt {
         children.flatMap { c =>
           val n = c.getPath.getName
           val i = n.indexOf('=')
-          if (!c.isDirectory || hidden(n) || i <= 0 ||
+          if (!c.isDirectory || ScbfPartitions.isHidden(n) || i <= 0 ||
               n.substring(0, i) != col) Seq.empty
           else {
             val v = ScbfPartitions.unescape(n.substring(i + 1))

@@ -280,11 +280,6 @@ object ScbfPartitions {
     }
   }
 
-  /** Point-interval stats for the partition cells — evaluated by the
-   * SAME [[ScbfStats.mayMatch]] the file-skipping layer uses, so
-   * partition pruning and stats pruning can never disagree on filter
-   * semantics. A cell that doesn't parse to its schema type (foreign
-   * directory naming) is omitted — conservatively kept. */
   /** EXACT decision from partition-path cells, where [[prune]] is only
    * conservative: Some(matches) when EVERY column the filters
    * reference has a parseable cell on this file's path — the cells
@@ -304,6 +299,11 @@ object ScbfPartitions {
     if (!decided) None else Some(ScbfStats.mayMatch(usable, st))
   }
 
+  /** Point-interval stats for the partition cells — evaluated by the
+   * SAME [[ScbfStats.mayMatch]] the file-skipping layer uses, so
+   * partition pruning and stats pruning can never disagree on filter
+   * semantics. A cell that doesn't parse to its schema type (foreign
+   * directory naming) is omitted — conservatively kept. */
   private def synth(values: Map[String, String], schema: StructType): ScbfStats.FileStats = {
     val cols = Map.newBuilder[String, ScbfStats.ColRange]
     val strs = Map.newBuilder[String, ScbfStats.StrRange]
@@ -326,133 +326,85 @@ object ScbfPartitions {
     ScbfStats.FileStats(1L, cols.result(), strs.result())
   }
 
-  /** Test seam: every directory [[pruneDirs]] actually listed.
-   * PlanningScale/Delete specs pin that a partition-scoped rewrite
-   * never lists an out-of-scope partition directory. Bounded so a
-   * long-lived driver running many maintenance ops cannot grow it
-   * without limit (specs clear() it before the operation they pin). */
-  val listedDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private val ListedDirsCap = 100000
-
-  private def recordListing(p: Path): Unit =
-    if (listedDirs.size < ListedDirsCap) listedDirs.add(p.toString)
-
-  /**
-   * Partition-directory discovery for table-level maintenance WITHOUT
-   * a full-table leaf listing: list the root's immediate children
-   * (ONE listing), prune `k=v` child directory NAMES by the same
-   * point-interval arithmetic the file prune uses, and recurse only
-   * into kept subtrees. Returns every directory that directly holds at
-   * least one data file and whose cumulative partition cells may match
-   * the filters — the per-directory passes a table-level DELETE/UPDATE
-   * runs. On a 10⁶-file table a single-partition takedown now costs
-   * one root listing plus the in-scope subtree's listings instead of
-   * ~2 full object-store LISTs per re-list round (the round-8 `weak`
-   * grade). Conservative exactly like [[prune]]: an unparseable cell,
-   * a foreign column name, or no usable filter keeps the subtree — an
-   * over-keep costs one listing, never an over-delete (the rewrite
-   * enforces the full condition per directory regardless).
-   */
-  /** Every directory of the table tree — the root plus all nested
-   * `k=v` directories, whether or not they currently hold data files.
-   * VACUUM's domain: a crashed write can leave ONLY dot-temps in a
-   * fresh partition directory (no live data file), and the root of a
-   * partitioned table holds no data at all — both still need their
-   * litter swept, so the data-holding filter [[pruneDirs]] applies is
-   * exactly wrong here. Same walk, same listing accounting. */
-  def allDirs(root: Path, conf: Configuration): Seq[Path] = {
-    val fs = root.getFileSystem(conf)
-    def hidden(n: String) = n.startsWith(".") || n.startsWith("_")
-    val out = Seq.newBuilder[Path]
-    def walk(d: Path): Unit = {
-      recordListing(d)
-      out += d
-      val children =
-        try fs.listStatus(d).toSeq
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
-      children.foreach { c =>
-        val n = c.getPath.getName
-        if (c.isDirectory && !hidden(n) && n.indexOf('=') > 0) walk(c.getPath)
-      }
+  /** Test seam: every directory [[walk]] listed, in listing order.
+   * Specs and the pinned queries clear() it before the operation whose
+   * listing scope they pin. Capped so a long-lived driver that never
+   * clears it stops recording instead of growing without limit; the
+   * count beside the queue keeps the cap check O(1) (a queue's size()
+   * walks it), and clear() resets both. */
+  private val listedCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  val listedDirs: java.util.concurrent.ConcurrentLinkedQueue[String] =
+    new java.util.concurrent.ConcurrentLinkedQueue[String] {
+      override def clear(): Unit = { super.clear(); listedCount.set(0) }
     }
-    walk(fs.makeQualified(root))
-    out.result()
+  private[sources] val ListedDirsCap = 100000
+
+  private[sources] def recordListing(p: Path): Unit =
+    if (listedCount.get < ListedDirsCap && listedCount.incrementAndGet() <= ListedDirsCap)
+      listedDirs.add(p.toString)
+
+  /** The one hidden-name rule: a `_` or `.` prefix marks temps,
+   * sidecars, logs and foreign files, never table data. */
+  def isHidden(name: String): Boolean = name.startsWith(".") || name.startsWith("_")
+
+  /** One directory [[walk]] visited, with its own listing sorted by name. */
+  final case class Listed(dir: Path, children: Seq[FileStatus]) {
+    def dataFiles: Seq[FileStatus] = children.filter(isData)
+    def holdsData: Boolean = children.exists(isData)
   }
 
-  def pruneDirs(root: Path, conf: Configuration, schema: StructType,
-      filters: Seq[Filter], qroots: Seq[String]): Seq[Path] = {
-    val fs = root.getFileSystem(conf)
-    val usable = filters.filter(ScbfStats.usable)
-    def hidden(n: String) = n.startsWith(".") || n.startsWith("_")
-    val out = Seq.newBuilder[Path]
-    def walk(d: Path): Unit = {
-      recordListing(d)
-      val children =
-        try fs.listStatus(d).toSeq
-        catch { case _: java.io.FileNotFoundException => Seq.empty }
-      if (children.exists(c => c.isFile && ScbfDataSource.isDataFile(c.getPath)))
-        out += d
-      children.foreach { c =>
-        val n = c.getPath.getName
-        if (c.isDirectory && !hidden(n) && n.indexOf('=') > 0) {
-          // cumulative cells of the CHILD directory: partValues drops
-          // the last path component, so probe with a synthetic leaf
-          val cells = partValues(new Path(c.getPath, "f"), schema, qroots)
-          if (usable.isEmpty || cells.isEmpty ||
-              ScbfStats.mayMatch(usable, synth(cells, schema)))
-            walk(c.getPath)
-        }
-      }
-    }
-    walk(fs.makeQualified(root))
-    out.result()
-  }
+  private def isData(c: FileStatus): Boolean = c.isFile && ScbfDataSource.isDataFile(c.getPath)
 
   /**
-   * [[pruneDirs]] for the batch READ path: the same directory-first
-   * walk — one listing per visited directory, `k=v` child NAMES pruned
-   * by the point-interval arithmetic before their contents are ever
-   * listed — but returning the kept directories' data FILES (the
-   * scan's planning input). This is what keeps a partition-pruned
-   * `SELECT ... WHERE pk = 'p1'` on a 10⁶-file table at
-   * root-plus-touched-partitions listings instead of a full-table leaf
-   * LIST that [[prune]] then mostly discards. Exactly [[prune]]'s
-   * conservative semantics at directory granularity: an unparseable
-   * cell, a foreign column name, or no usable filter keeps the subtree
-   * (its files are then subject to the per-file stats pass, and every
-   * filter stays residual — correctness never depends on the prune).
+   * The table tree, directory first: every table listing (scan
+   * planning, path loads, schema inference, DELETE/UPDATE discovery,
+   * OPTIMIZE, VACUUM, the overwrite temp sweep) is a projection of
+   * this walk. A lazy pre-order iterator: each directory is listed
+   * (ONE `listStatus`, recorded in [[listedDirs]]) only when the
+   * iterator reaches it, so an early exit lists nothing further.
+   *  - It descends only into non-hidden ([[isHidden]]) `k=v` child
+   *    directories for which `keep` holds; anything else below the
+   *    root is not part of the table.
+   *  - `keep` is [[cellPrune]] for a filtered walk: partition NAMES
+   *    are pruned before their contents are listed, conservatively
+   *    (an unparseable cell, a foreign column or no usable filter
+   *    keeps the subtree).
+   *  - A directory that vanished after its parent was listed (a
+   *    racing DROP PARTITION or rewrite) yields an empty listing.
+   *  - Each listing is sorted by name, and children follow their
+   *    parent in that order.
    */
-  /** `rootChildHook` sees every DIRECT child of the root during the
-   * listing the walk pays anyway — the zero-extra-RPC seam the clone
-   * layer uses to detect its (hidden) ref file on the planning hot
-   * path without a per-table exists() probe. */
-  def pruneResolve(root: Path, conf: Configuration, schema: StructType,
-      filters: Seq[Filter], qroots: Seq[String],
-      rootChildHook: FileStatus => Unit = _ => ()): Seq[FileStatus] = {
+  def walk(root: Path, conf: Configuration, keep: Path => Boolean): Iterator[Listed] = {
     val fs = root.getFileSystem(conf)
-    val usable = filters.filter(ScbfStats.usable)
-    def hidden(n: String) = n.startsWith(".") || n.startsWith("_")
-    val out = Seq.newBuilder[FileStatus]
-    def walk(d: Path, isRoot: Boolean): Unit = {
+    // the listing of `d` waits until the iterator reaches it
+    def visit(d: Path): Iterator[Listed] = Iterator.single(()).flatMap { _ =>
       recordListing(d)
       val children =
-        try fs.listStatus(d).toSeq
+        try fs.listStatus(d).toSeq.sortBy(_.getPath.getName)
         catch { case _: java.io.FileNotFoundException => Seq.empty }
-      children.foreach { c =>
-        if (isRoot) rootChildHook(c)
+      Iterator.single(Listed(d, children)) ++ children.iterator.filter { c =>
         val n = c.getPath.getName
-        if (c.isFile && ScbfDataSource.isDataFile(c.getPath))
-          out += c
-        else if (c.isDirectory && !hidden(n) && n.indexOf('=') > 0) {
-          val cells = partValues(new Path(c.getPath, "f"), schema, qroots)
-          if (usable.isEmpty || cells.isEmpty ||
-              ScbfStats.mayMatch(usable, synth(cells, schema)))
-            walk(c.getPath, isRoot = false)
-        }
-      }
+        c.isDirectory && !isHidden(n) && n.indexOf('=') > 0 && keep(c.getPath)
+      }.flatMap(c => visit(c.getPath))
     }
-    walk(fs.makeQualified(root), isRoot = true)
-    out.result()
+    visit(fs.makeQualified(root))
+  }
+
+  /** [[walk]] over every `k=v` directory. */
+  def walk(root: Path, conf: Configuration): Iterator[Listed] = walk(root, conf, _ => true)
+
+  /** The partition-cell prune for [[walk]]: keeps a directory unless
+   * its cumulative `k=v` cells PROVE no row can pass the filters —
+   * [[prune]]'s point-interval arithmetic at directory granularity. */
+  def cellPrune(schema: StructType, filters: Seq[Filter],
+      qroots: Seq[String]): Path => Boolean = {
+    val usable = filters.filter(ScbfStats.usable)
+    if (usable.isEmpty) _ => true
+    else { dir =>
+      // partValues drops the last path component: probe with a leaf
+      val cells = partValues(new Path(dir, "f"), schema, qroots)
+      cells.isEmpty || ScbfStats.mayMatch(usable, synth(cells, schema))
+    }
   }
 
   /** Drop files whose partition-path values PROVE no row can pass the

@@ -289,7 +289,7 @@ class ScbfScan(
    * arithmetic against `col=value` components — so a pruned
    * partition's manifest is never even opened. On the deferred-listing
    * path (table reads) the pruning happens DURING the walk
-   * ([[ScbfPartitions.pruneResolve]]): a pruned partition's directory
+   * ([[ScbfPartitions.walk]]): a pruned partition's directory
    * is never LISTED either, which is what bounds a partition-pruned
    * SELECT's metadata bill at root + touched partitions on a 10⁶-file
    * table. Eager (test/tool) construction keeps the post-hoc prune of

@@ -514,18 +514,11 @@ class ScbfBatchWrite(
    * the job). Orphans from hard crashes are invisible to readers
    * (dot-prefix) and get cleared by the next successful overwrite. */
   private def sweepTemps(): Unit = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(conf)
-    def sweep(p: Path): Unit =
-      if (fs.exists(p)) fs.listStatus(p).toSeq.foreach {
-        case f if f.isFile && ScbfWrite.isTemp(f.getPath.getName) =>
-          fs.delete(f.getPath, false)
-        // partition subdirectories stage their own temps
-        case d if d.isDirectory && d.getPath.getName.indexOf('=') > 0 =>
-          sweep(d.getPath)
-        case _ => ()
-      }
-    sweep(path)
+    val fs = new Path(dir).getFileSystem(conf)
+    // partition subdirectories stage their own temps
+    ScbfPartitions.walk(new Path(dir), conf).flatMap(_.children)
+      .filter(f => f.isFile && ScbfWrite.isTemp(f.getPath.getName))
+      .foreach(f => fs.delete(f.getPath, false))
   }
 }
 

@@ -184,7 +184,8 @@ class PartitionedStreamChaosSpec extends AnyFunSuite with SparkTestBase {
             spark, dir, Seq("id", "n"), 1 + rnd.nextInt(2), bits = 4))
           s"zorderTable [${applyRewrite(rm, ad)}]"
         case 7 => // vacuum every partition: never visible
-          val parts = ScbfMaintenance.partitionDirs(dir, conf)
+          val parts = ScbfPartitions.walk(new Path(dir), conf)
+            .filter(_.holdsData).map(_.dir).toSeq
           val (rm, ad) = mutate(parts.foreach(p =>
             ScbfMaintenance.vacuum(spark, p.toString, olderThanMs = 0L)))
           assert(rm.isEmpty && ad.isEmpty, "vacuum must not touch live data files")

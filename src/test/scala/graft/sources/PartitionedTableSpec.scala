@@ -352,7 +352,7 @@ class PartitionedTableSpec extends AnyFunSuite with SparkTestBase {
     // FULL recursive leaf listing per re-list round and prune files
     // afterwards — at 10⁶ files that is minutes of object-store LIST
     // per round for a one-partition takedown. Directory-first
-    // discovery (ScbfPartitions.pruneDirs) prunes partition NAMES
+    // discovery (ScbfPartitions.walk) prunes partition NAMES
     // before listing their contents; this pins the listing SCOPE.
     val dir = makeTable("graft_ptdel7")
     val conf = new Configuration()
@@ -361,7 +361,7 @@ class PartitionedTableSpec extends AnyFunSuite with SparkTestBase {
     ScbfPartitions.listedDirs.clear()
     spark.sql("DELETE FROM graft_ptdel7 WHERE grp = 'g1'")
     val listed = ScbfPartitions.listedDirs.toArray(Array.empty[String]).toSeq
-    assert(listed.nonEmpty, "the discovery walk must run through pruneDirs")
+    assert(listed.nonEmpty, "the discovery walk must run through ScbfPartitions.walk")
     val offenders = listed.filterNot(p => p == qroot || p == s"$qroot/grp=g1")
     assert(offenders.isEmpty, s"out-of-scope directories listed: $offenders")
     // bounded rounds: one walk per table-level re-list round (the
@@ -524,5 +524,91 @@ class PartitionedTableSpec extends AnyFunSuite with SparkTestBase {
     // the cap forced multiple files somewhere
     val files = ScbfDataSource.resolveFiles(Seq(dir), new Configuration())
     assert(files.length > 16, s"cap produced no rolls: ${files.length} files")
+  }
+
+  test("every table listing is one walk: the old projections agree on an awkward tree") {
+    // one tree holding every shape the table-layer listing rules
+    // decide on: a stray root-level data file, a temp-only and a
+    // keeper-only partition, hidden `_k=v`/`.k=v` directories, a
+    // foreign non-`k=v` subdirectory, two-level partitions, and a
+    // clone ref file at the root pointing at a source table's file
+    val base = Files.createTempDirectory("scbf-part-tree").toString
+    val conf = new Configuration()
+    val fs = new Path(base).getFileSystem(conf)
+    def touch(rel: String): Path = {
+      val p = fs.makeQualified(new Path(s"$base/$rel"))
+      fs.create(p, true).close()
+      new java.io.File(p.toUri).setLastModified(1000L)
+      p
+    }
+    val source = touch("src/s0.scbf")
+    val root = fs.makeQualified(new Path(s"$base/t"))
+    val expected = Seq("t/stray.scbf", "t/p=1/d1.scbf", "t/p=3/keeper-0.scbf",
+      "t/p=6/q=1/d.scbf", "t/p=6/q=2/d.scbf").map(touch)
+    val temps = Seq("t/p=1/.d9.scbf.tmp", "t/p=2/.d2.scbf.tmp").map(touch)
+    val hiddenTemps = Seq("t/_p=4/.h.scbf.tmp", "t/.p=5/.h.scbf.tmp").map(touch)
+    Seq("t/_p=4/h.scbf", "t/.p=5/h.scbf", "t/foreign/f.scbf").foreach(touch)
+    ScbfClone.write(root, conf, fs.makeQualified(new Path(s"$base/src")),
+      Seq(fs.getFileStatus(source)))
+
+    def rel(dirs: Iterable[Path]) =
+      dirs.map(d => root.toUri.relativize(d.toUri).getPath.stripSuffix("/")).toSeq
+    val allDirs = Seq("", "p=1", "p=2", "p=3", "p=6", "p=6/q=1", "p=6/q=2")
+    val dataDirs = Seq("", "p=1", "p=3", "p=6/q=1", "p=6/q=2")
+    // VACUUM's and the overwrite temp sweep's domain, then OPTIMIZE's
+    // and ALTER TABLE's: name order, parents before children
+    assert(rel(ScbfPartitions.walk(root, conf).map(_.dir).toSeq) == allDirs)
+    assert(rel(ScbfPartitions.walk(root, conf).filter(_.holdsData).map(_.dir).toSeq) ==
+      dataDirs)
+
+    ScbfPartitions.listedDirs.clear()
+    val files = ScbfDataSource.resolveFiles(Seq(root.toString), conf)
+    assert(files.map(_.getPath) == (source +: expected).sortBy(_.toString))
+    // each table directory is listed exactly once, nothing outside it
+    val listed = ScbfPartitions.listedDirs.toArray(Array.empty[String]).toSeq
+    assert(rel(listed.map(new Path(_))).sorted == allDirs.sorted, s"listed: $listed")
+    val unfiltered = ScbfDataSource.resolveFilesPruned(Seq(root.toString), conf,
+      new StructType(), Seq.empty)
+    assert(unfiltered.map(_.getPath) == files.map(_.getPath))
+
+    // a partition filter lists the root and the kept partition only
+    val pq = StructType(Seq(StructField("p", IntegerType), StructField("q", IntegerType)))
+    ScbfPartitions.listedDirs.clear()
+    val kept = ScbfDataSource.resolveFilesPruned(Seq(root.toString), conf, pq,
+      Seq(EqualTo("p", 6), EqualTo("q", 2)))
+    assert(kept.map(_.getPath) == Seq(source, expected(0), expected(4)).sortBy(_.toString))
+    assert(rel(ScbfPartitions.listedDirs.toArray(Array.empty[String]).map(new Path(_))) ==
+      Seq("", "p=6", "p=6/q=2"))
+
+    // schema inference stops at the root, which already holds a file
+    ScbfPartitions.listedDirs.clear()
+    assert(ScbfDataSource.findFirstFile(Seq(root.toString), conf).map(_.getPath) ==
+      Some(expected.head))
+    assert(ScbfPartitions.listedDirs.toArray(Array.empty[String]).toSeq == Seq(root.toString))
+
+    // VACUUM sweeps temps in every table directory, data-holding or
+    // not, and never inside the hidden ones
+    val (swept, _) = ScbfMaintenance.vacuumTable(spark, root.toString, Some(0L))
+    assert(swept == temps.size)
+    assert(temps.forall(t => !fs.exists(t)) && hiddenTemps.forall(fs.exists))
+  }
+
+  test("table-level OPTIMIZE refuses on a partitioned SHALLOW CLONE") {
+    // a clone's data are refs into the source's directories; a sweep of
+    // the clone's own tree must not quietly rewrite (or skip) them
+    makeTable("graft_pt_csrc")
+    val cl = Files.createTempDirectory("scbf-part-clone").toString + "/c"
+    spark.sql("DROP TABLE IF EXISTS graft_pt_clone")
+    spark.sql(s"CREATE TABLE graft_pt_clone SHALLOW CLONE graft_pt_csrc LOCATION '$cl'")
+    try {
+      val e = intercept[Exception](spark.sql("OPTIMIZE graft_pt_clone").collect())
+      val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
+      assert(msgs.contains("SHALLOW CLONE"), msgs)
+      assert(spark.table("graft_pt_clone").count() == 100L)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_pt_clone")
+      spark.sql("DROP TABLE IF EXISTS graft_pt_csrc")
+    }
   }
 }

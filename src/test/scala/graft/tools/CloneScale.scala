@@ -63,7 +63,8 @@ object CloneScale {
     // the planning bill every clone read pays: pooled length-guarded
     // stats over all refs
     timed(s"ref resolution ($n pooled stats)") {
-      val got = ScbfClone.resolve(new Path(cloneDir), conf)
+      val got = ScbfClone.resolvePruned(new Path(cloneDir), conf,
+        new org.apache.spark.sql.types.StructType(), Seq.empty)
       require(got.size == n, s"resolved ${got.size}")
     }
     val cnt = timed("first clone COUNT(*)") {
@@ -124,7 +125,8 @@ object CloneScale {
       s"pruned resolve must stat only the selected partition: " +
         s"${sel.size} files, ${ScbfClone.refStats.get} stats (want $fpp)")
     timed(s"branch resolve, ALL $parts partitions (full stats)") {
-      require(ScbfClone.resolve(new Path(pclone), conf).size == parts * fpp)
+      require(ScbfClone.resolvePruned(new Path(pclone), conf,
+        new org.apache.spark.sql.types.StructType(), Seq.empty).size == parts * fpp)
     }
     // plan a partition-scoped branch scan: ONE source manifest, fpp files
     ScbfStats.manifestReads.set(0)
