@@ -170,11 +170,7 @@ object ScbfCdc extends org.apache.spark.internal.Logging {
           val dest = preservedPath(qroot, tag, relName(fs, qroot, p))
           fs.mkdirs(dest.getParent)
           val ok = try fs.rename(p, dest) catch { case NonFatal(_) => false }
-          if (!ok) {
-            logWarning(s"CDC retention: could not rename $p to $dest — " +
-              "deleting instead; a CDC window over this commit will refuse")
-            ScbfOcc.deleteWithSidecars(fs, p)
-          } else {
+          if (ok) {
             // sidecar renames CHECKED (ADVICE r13): a failed one would
             // silently orphan the sidecar at the old path and cost
             // retained reads their stats skipping — log, then delete
@@ -193,6 +189,10 @@ object ScbfCdc extends org.apache.spark.internal.Logging {
               }
             moveSidecar(ScbfStats.sidecarPath(p), ScbfStats.sidecarPath(dest), "stats")
             moveSidecar(ScbfBloom.bloomPath(p), ScbfBloom.bloomPath(dest), "bloom")
+          } else if (fs.exists(p)) { // a victim already gone has nothing to retain
+            logWarning(s"CDC retention: could not rename $p to $dest — " +
+              "deleting instead; a CDC window over this commit will refuse")
+            ScbfOcc.deleteWithSidecars(fs, p)
           }
         }
       })).foreach(_.get())

@@ -138,22 +138,27 @@ object ScbfDataSource {
     p.getName.endsWith(Scbf.FileExtension) && !ScbfPartitions.isHidden(p.getName)
 
   /** ONE data file — what schema inference needs (every file's header
-   * carries the full schema): the first data file of the lazy
-   * [[ScbfPartitions.walk]], which stops listing once it is found. */
+   * carries the full schema): the first of [[dataFilesLazily]]. */
   def findFirstFile(tablePaths: Seq[String], conf: Configuration): Option[FileStatus] =
+    dataFilesLazily(tablePaths, conf).nextOption()
+
+  /** The data files of the lazy [[ScbfPartitions.walk]], which lists a
+   * directory only once the iterator reaches it — a caller that stops
+   * at the first file it can use lists nothing further. A directory's
+   * walk ends with its first clone ref: a fresh clone holds no local
+   * data files, and every SCBF file carries the schema. */
+  def dataFilesLazily(tablePaths: Seq[String], conf: Configuration): Iterator[FileStatus] =
     tablePaths.iterator.flatMap { p =>
       val hp = new Path(p)
       Option(hp.getFileSystem(conf).globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
         .sortBy(_.getPath.toString).iterator.flatMap {
-          // a fresh clone holds no local data files — its first ref
-          // serves schema inference (every SCBF file carries the schema)
           case d if d.isDirectory =>
-            ScbfPartitions.walk(d.getPath, conf).flatMap(_.dataFiles).nextOption()
-              .orElse(ScbfClone.firstRef(d.getPath, conf))
+            ScbfPartitions.walk(d.getPath, conf).flatMap(_.dataFiles) ++
+              ScbfClone.firstRef(d.getPath, conf)
           case f if ScbfPartitions.isHidden(f.getPath.getName) => None
           case f                                               => Some(f)
         }
-    }.nextOption()
+    }
 
   /** Expand each path for scan planning: glob patterns honored,
    * directories walk through [[ScbfPartitions.walk]] with the

@@ -66,13 +66,14 @@ object ScbfDelete {
   def canDelete(filters: Array[Filter]): Boolean =
     filters.forall(f => filterToColumn(f).isDefined)
 
-  /** One rewrite round's outputs: the unique file prefix its
-   * replacements carry, the original names they replaced, and the CDC
-   * tag it captured under (if the table has CDC enabled) — what a
-   * TABLE-level caller needs to re-announce the rewrite to the root
-   * discovery log with subdir-qualified names. */
-  private[sources] case class RewriteRound(prefix: String, replaced: Seq[String],
-      cdcTag: Option[String] = None)
+  /** One rewrite round's outputs: the original names it replaced, the
+   * CDC tag it captured under (if the table has CDC enabled), the
+   * (name, length) pairs it published, and the id of its REMOVAL entry
+   * when it published no replacement — what a TABLE-level caller needs
+   * to re-announce the rewrite to the root discovery log with
+   * subdir-qualified names. */
+  private[sources] case class RewriteRound(replaced: Seq[String], cdcTag: Option[String],
+      published: Seq[(String, Long)], removalId: Option[String])
 
   /**
    * `DELETE FROM <partitioned scbf table> WHERE <cond>` — the
@@ -169,8 +170,8 @@ object ScbfDelete {
       // stream's next reconcile would re-deliver the replacement's rows
       // even under onChangeCommit=skip
       perPartition(part.toString, r =>
-        ScbfRewrite.announceToRoot(qroot, conf, part, r.prefix, r.replaced,
-          rowsChanged = true, r.cdcTag))
+        ScbfRewrite.announceToRoot(qroot, conf, part, r.published, r.replaced,
+          rowsChanged = true, r.cdcTag, r.removalId))
       ()
     }
     // Bounded re-list rounds at the DIRECTORY level, mirroring
@@ -358,50 +359,27 @@ object ScbfDelete {
       // pick the assigned values
       else Seq("update_pre" -> matched, "update_post" -> rewrite(matched, cond))
     }
-    // leafOnly lists the directory itself, never recursing into k=v
-    // subtrees another table-level pass owns (a stray root file on a
-    // 10⁵-file table must not cost full-table listings per round)
-    def listCandidates(): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (leafOnly)
-        dfs.listStatus(qdir).toSeq.filter(f =>
-          f.isFile && ScbfDataSource.isDataFile(f.getPath))
-      else ScbfDataSource.resolveFiles(Seq(dir), conf)
-    // The rewrite-transparent listing (ScbfRewrite.liveListing) needs
-    // the log's recorded victims. The full chain replays ONCE per
-    // operation; each round extends the set with the commits that
-    // landed since — one bounded replay from the op-start instant, the
-    // same bill the OCC recheck pays.
-    val opStartTs: Option[Long] =
-      ScbfOcc.snapshot(qdir, conf, ScbfRewrite.listingRefusal(where))
-    val opVictims: Map[String, Seq[ScbfOcc.VictimRec]] =
-      if (opStartTs.isEmpty) Map.empty
-      else ScbfRewrite.recordedVictims(where, qdir, conf)
-    val sinceOpStart = new ScbfRewrite.Occ(where, qdir, conf, opStartTs)
-    def recordedVictimsNow(): Map[String, Seq[ScbfOcc.VictimRec]] =
-      if (opStartTs.isDefined) {
-        val late = sinceOpStart.entries()
-          .flatMap { case (e, d) => e.rewriteOf.map(_ -> ScbfOcc.recOf(e, d)) }
-          .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-        (opVictims.keySet ++ late.keySet).iterator.map(v =>
-          v -> (opVictims.getOrElse(v, Nil) ++ late.getOrElse(v, Nil))).toMap
-      }
-      // no chain at op start: any chain that appears mid-op is young
-      // and cheap to replay whole
-      else if (ScbfDiscovery.exists(qdir, conf))
-        ScbfRewrite.recordedVictims(where, qdir, conf)
-      else Map.empty
+    // leafOnly lists the directory's own files, never recursing into
+    // k=v subtrees another table-level pass owns (a stray root file on
+    // a 10⁵-file table must not cost full-table listings per round)
+    val listCandidates: () => Seq[org.apache.hadoop.fs.FileStatus] =
+      if (leafOnly) () => ScbfRewrite.ownFiles(qdir, conf)
+      else () => ScbfDataSource.resolveFiles(Seq(dir), conf)
+    // Each round plans from a snapshot (ScbfRewrite.snapshot): its OCC
+    // position BEFORE its listing, so anything stamped after it
+    // committed concurrently with the round. Recorded victims are dead
+    // bytes, excluded from the round's whole universe (the empty-table
+    // guard's included) and healed once stale; listCandidates is
+    // unpruned, so it is its own universe. The full chain replays once
+    // per operation: each later round extends the victims with the
+    // commits its predecessor's recheck replayed.
+    var snap = ScbfRewrite.snapshot(where, qdir, conf, listCandidates,
+      probeFs = false, heal = true)
     var round = 0
     while (true) {
       round += 1
-      // OCC snapshot BEFORE this round's listing: anything stamped
-      // after it committed concurrently with the round
-      val occ = new ScbfRewrite.Occ(where, qdir, conf,
-        ScbfRewrite.snapshot(where, qdir, conf))
-      // recorded victims are dead bytes, excluded from the round's whole
-      // universe (the empty-table guard's included) and healed once
-      // stale; listCandidates is unpruned, so it is its own universe
-      val listed = ScbfRewrite.liveListing(where, dfs, qdir, conf,
-        listCandidates(), recordedVictimsNow(), probeFs = false, heal = true)
+      val occ = new ScbfRewrite.Occ(where, qdir, conf, snap.position)
+      val listed = snap.files
       val candidates = listed
         .filterNot(f => accounted.contains(f.getPath.getName) ||
           ourPrefixes.exists(f.getPath.getName.startsWith))
@@ -512,23 +490,35 @@ object ScbfDelete {
       }
       } finally if (tag.isDefined) srcOpt.foreach(_.unpersist())
       postPublishHook()
-      // ONE bounded replay serves both the recheck and this round's own
-      // published names (the write announced them, so they are
-      // post-snapshot entries carrying our prefix); an unreadable replay
-      // re-derives them from the round's prefix by one listing
-      occ.recheckAfterPublish(affectedNames, selfName,
+      // the next round's position, BEFORE the replay that extends its
+      // victims: that replay then covers every commit up to it
+      val nextPosition = ScbfRewrite.position(where, qdir, conf)
+      // ONE bounded replay serves the recheck, this round's own
+      // published (name, length) pairs (the write announced them, so
+      // they are post-snapshot entries carrying our prefix) and the
+      // next round's victims; an unreadable replay re-derives our names
+      // from the round's prefix by one listing, for the rollback
+      val checked = occ.recheckAfterPublish(affectedNames, selfName,
         published = {
           case Some(post) => post.map(_._1.name).filter(_.startsWith(prefix)).toSet
           case None => ScbfDataSource.resolveFiles(Seq(dir), conf)
             .map(_.getPath.getName).filter(_.startsWith(prefix)).toSet
         },
         alsoScrub = Set(removalName), cdc = tag.map((qcdc, _)))
+      // no chain at the snapshot: the recheck replayed nothing, and the
+      // log this round created is young and cheap to replay whole
+      val since =
+        if (snap.position.isDefined) checked
+        else ScbfRewrite.allEntries(where, qdir, conf)
       val victims = affected.map(_.getPath)
       ScbfRewrite.removeVictims(dfs, victims, retainAt = tag.map((qcdc, _)))
       ScbfRewrite.dropFromManifests(conf, victims)
-      val round_ = RewriteRound(prefix, affected.map(_.getPath.getName), tag)
+      val round_ = RewriteRound(affected.map(_.getPath.getName), tag,
+        since.collect { case (e, _) if e.name.startsWith(prefix) => e.name -> e.len },
+        removalId = if (srcOpt.isEmpty) Some(removalId) else None)
       rounds += round_
       onRound(round_)
+      snap = snap.extend(where, qdir, conf, nextPosition, since, listCandidates)
     }
     rounds.result() // unreachable; the while(true) exits via return
   }

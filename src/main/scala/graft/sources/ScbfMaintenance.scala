@@ -46,15 +46,18 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
 
   /**
    * The one snapshot rewrite behind [[cluster]], [[compact]] and
-   * [[zorder]]: refuse on a clone; take the OCC snapshot BEFORE the
-   * listing it plans from (passed to the overwrite as `occSnapTs`, so
-   * the conflict check runs at the COMMIT INSTANT — a concurrent DELETE
+   * [[zorder]]: refuse on a clone; take the rewrite snapshot of the
+   * directory's own files ([[ScbfRewrite.snapshot]]: the OCC position
+   * BEFORE the listing, passed to the overwrite as `occSnapTs` so the
+   * conflict check runs at the COMMIT INSTANT — a concurrent DELETE
    * landing anywhere in the rewrite job aborts the rewrite instead of
-   * having its removed rows resurrected); list the directory
-   * rewrite-transparently, healing what the log records as pending
-   * ([[ScbfRewrite.liveListing]] — OPTIMIZE is the natural healer);
-   * then read exactly that snapshot, `shape` it and overwrite exactly
-   * its files (`replaceFileNames`).
+   * having its removed rows resurrected; the listing rewrite-
+   * transparent, healing what the log records as pending — OPTIMIZE is
+   * the natural healer); then read exactly that snapshot, `shape` it
+   * and overwrite exactly its files (`replaceFileNames`). Files of
+   * `k=v` subdirectories are never part of it: a table-level sweep
+   * rewrites each of those directories on its own, and folding them
+   * into this one would duplicate or flatten the table.
    *
    * One skip rule for every kind: a snapshot of ONE file at a target
    * of ONE file is left alone — no job, no commit, no announcement
@@ -75,30 +78,24 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * equal-count, balanced-sizes skip through `plan`.
    *
    * `plan` sees the snapshot and returns the shaping step, or None when
-   * there is nothing worth rewriting. Returns the names ACTUALLY folded
-   * into the rewrite, empty when skipped — callers announcing it elsewhere
-   * ([[sweepPartitions]]' root log) must mark exactly this set, not
-   * their own re-listing: a file appended between two listings would
-   * be folded in but not marked, and a caught-up stream would skip the
-   * rewrite as covered while the file's own announcement points at
-   * deleted data.
+   * there is nothing worth rewriting. Returns the names folded into the
+   * rewrite, empty when skipped. The overwrite's commit marks exactly
+   * this set as replaced, in the directory's log and, for a partition
+   * (`cdcRoot` set), in the root's ([[ScbfRewrite.announceToRoot]]).
    */
   private def rewriteSnapshot(spark: SparkSession, dir: String, what: String,
       numFiles: Int, maxBufferedBytes: Option[Long], filePrefix: Option[String],
-      cdcTag: Option[String], cdcRoot: Option[String])(
+      cdcRoot: Option[String])(
       plan: Seq[org.apache.hadoop.fs.FileStatus] =>
         Option[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame])
       : Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(dir)
     ScbfClone.refuseIfClone(p, conf, s"OPTIMIZE ($what)")
-    val fs = p.getFileSystem(conf)
-    val q = fs.makeQualified(p)
-    val where = s"maintenance rewrite on $dir"
-    val occTs = ScbfRewrite.snapshot(where, q, conf)
-    val snapshot = ScbfRewrite.liveListing(where, fs, q, conf,
-      ScbfDataSource.resolveFiles(Seq(dir), conf),
-      ScbfRewrite.recordedVictims(where, q, conf), probeFs = false, heal = true)
+    val q = p.getFileSystem(conf).makeQualified(p)
+    val snap = ScbfRewrite.snapshot(s"maintenance rewrite on $dir", q, conf,
+      () => ScbfRewrite.ownFiles(q, conf), probeFs = false, heal = true)
+    val snapshot = snap.files
     // a freshly-created (or fully-truncated) directory has nothing to
     // rewrite — loading zero paths would crash with an unrelated error;
     // one file at a one-file target is already the rewrite's output
@@ -111,22 +108,21 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       .option("replaceFileNames", snapshot.map(_.getPath.getName).mkString(","))
     maxBufferedBytes.foreach(b => writer.option("maxBufferedBytes", b))
     filePrefix.foreach(p => writer.option("filePrefix", p))
-    cdcTag.foreach(t => writer.option("cdcTag", t))
     cdcRoot.foreach(r => writer.option("cdcRoot", r))
-    occTs.foreach(t => writer.option("occSnapTs", t))
+    snap.position.foreach(t => writer.option("occSnapTs", t))
     writer.save(dir)
     snapshot.map(_.getPath.getName)
   }
 
-  /** Range-partition `dir` on `clusterCols` into `numFiles` files with
-   * disjoint value ranges (no sort within a file), so a directory
-   * already at one file with a one-file target is skipped
-   * ([[rewriteSnapshot]]). Returns the names folded in.
+  /** Range-partition the files of `dir` itself on `clusterCols` into
+   * `numFiles` files with disjoint value ranges (no sort within a
+   * file), so a directory already at one file with a one-file target
+   * is skipped ([[rewriteSnapshot]]). Returns the names folded in.
    *
-   * Per-partition maintenance rewrites thread the table-level CDC
-   * coordinates ([[ScbfCdc]]) so the sweep's ROOT re-announcement can
-   * carry the same tag the partition commit retained under — a flat
-   * rewrite needs neither (the commit self-tags at its own root). */
+   * Per-partition maintenance rewrites pass the table root as
+   * `cdcRoot`: the partition commit tags itself and retains its victims
+   * under the root's CDC area ([[ScbfCdc]]), and re-announces itself to
+   * the root's log with that tag — a flat rewrite needs neither. */
   def cluster(
       spark: SparkSession,
       dir: String,
@@ -134,12 +130,11 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       numFiles: Int,
       maxBufferedBytes: Option[Long] = None,
       filePrefix: Option[String] = None,
-      cdcTag: Option[String] = None,
       cdcRoot: Option[String] = None): Seq[String] = {
     require(clusterCols.nonEmpty, "cluster requires at least one column")
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     rewriteSnapshot(spark, dir, "cluster", numFiles, maxBufferedBytes, filePrefix,
-      cdcTag, cdcRoot)(_ => Some(_.repartitionByRange(numFiles, clusterCols.map(col): _*)))
+      cdcRoot)(_ => Some(_.repartitionByRange(numFiles, clusterCols.map(col): _*)))
   }
 
   /** Plain bin-packing compaction — `OPTIMIZE tbl [FILES n]` without a
@@ -160,11 +155,10 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       numFiles: Int,
       maxBufferedBytes: Option[Long] = None,
       filePrefix: Option[String] = None,
-      cdcTag: Option[String] = None,
       cdcRoot: Option[String] = None): Seq[String] = {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     rewriteSnapshot(spark, dir, "compact", numFiles, maxBufferedBytes, filePrefix,
-      cdcTag, cdcRoot) { snapshot =>
+      cdcRoot) { snapshot =>
       // idempotence: already AT the target file count with a
       // plausibly-packed layout — re-running `OPTIMIZE tbl` must not pay
       // a full rewrite and churn the discovery log for a layout it
@@ -197,9 +191,9 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       numFilesPerPartition: Int,
       maxBufferedBytes: Option[Long] = None,
       parallelism: Int = 1): Seq[String] =
-    sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
+    sweepPartitions(spark, dir, parallelism) { (part, prefix) =>
       compact(spark, part, numFilesPerPartition, maxBufferedBytes,
-        Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
+        Some(prefix), cdcRoot = Some(dir))
     }.map(_._1)
 
   /**
@@ -235,14 +229,13 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       bits: Int = 8,
       maxBufferedBytes: Option[Long] = None,
       filePrefix: Option[String] = None,
-      cdcTag: Option[String] = None,
       cdcRoot: Option[String] = None): Seq[String] = {
     require(zCols.size >= 2, "zorder needs >= 2 columns (use cluster for 1)")
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     require(bits >= 1 && bits <= 16, s"bits per column must be in [1,16], got $bits")
     import org.apache.spark.sql.functions._
     rewriteSnapshot(spark, dir, "zorder", numFiles, maxBufferedBytes, filePrefix,
-      cdcTag, cdcRoot) { _ => Some { df =>
+      cdcRoot) { _ => Some { df =>
       zCols.foreach { c =>
         val dt = df.schema(c).dataType
         require(dt == org.apache.spark.sql.types.IntegerType ||
@@ -288,10 +281,13 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
   }
 
   /**
-   * Table-level OPTIMIZE: run [[cluster]] in EVERY partition directory
-   * of a (possibly hive-partitioned) table with one call — the shape
-   * an operator maintains a 100 TB table with. Each per-partition
-   * rewrite keeps the properties the single-directory form already
+   * Table-level OPTIMIZE: run [[cluster]] in EVERY directory of a
+   * (possibly hive-partitioned) table that holds data files with one
+   * call — the shape an operator maintains a 100 TB table with. Each
+   * directory's rewrite takes the directory's own files only, so a
+   * stray data file at a partitioned table's root is clustered at the
+   * root and the partitions below it are left to their own rewrites.
+   * Each rewrite keeps the properties the single-directory form already
    * has (snapshot-scoped against concurrent appends, old files deleted
    * only at commit, fresh per-directory manifest), and partitions fail
    * independently: serially, a partition that throws stops the sweep
@@ -303,8 +299,8 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * with a one-file target is skipped without a job or a commit
    * ([[rewriteSnapshot]]); any other partition re-clusters.
    *
-   * Stream transparency at the ROOT: after each partition's rewrite,
-   * its outputs are re-announced to the ROOT log
+   * Stream transparency at the ROOT: each partition's commit
+   * re-announces its outputs to the ROOT log
    * ([[ScbfRewrite.announceToRoot]]), so a caught-up root stream admits
    * them seen-without-delivery exactly like a root-level OPTIMIZE. A
    * skipped partition published nothing and announces nothing.
@@ -326,9 +322,9 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       numFilesPerPartition: Int,
       maxBufferedBytes: Option[Long] = None,
       parallelism: Int = 1): Seq[String] =
-    sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
+    sweepPartitions(spark, dir, parallelism) { (part, prefix) =>
       cluster(spark, part, clusterCols, numFilesPerPartition,
-        maxBufferedBytes, Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
+        maxBufferedBytes, Some(prefix), cdcRoot = Some(dir))
     }.map(_._1)
 
   /** Table-level [[zorder]] — the multi-dimensional [[clusterTable]];
@@ -341,9 +337,9 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       bits: Int = 8,
       maxBufferedBytes: Option[Long] = None,
       parallelism: Int = 1): Seq[String] =
-    sweepPartitions(spark, dir, parallelism) { (part, prefix, tag) =>
+    sweepPartitions(spark, dir, parallelism) { (part, prefix) =>
       zorder(spark, part, zCols, numFilesPerPartition, bits,
-        maxBufferedBytes, Some(prefix), cdcTag = tag, cdcRoot = Some(dir))
+        maxBufferedBytes, Some(prefix), cdcRoot = Some(dir))
     }.map(_._1)
 
   /** `OPTIMIZE` as SQL runs it ([[graft.plans.GraftOptimizeCommand]]):
@@ -353,51 +349,34 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * directory folds none. */
   private[graft] def optimize(spark: SparkSession, dir: String, partitioned: Boolean,
       zorderBy: Boolean, cols: Seq[String], files: Int, parallelism: Int): Int = {
-    def one(d: String, prefix: Option[String], tag: Option[String], root: Option[String]) =
-      if (zorderBy) zorder(spark, d, cols, files, filePrefix = prefix, cdcTag = tag, cdcRoot = root)
-      else if (cols.isEmpty) compact(spark, d, files, None, prefix, tag, root)
-      else cluster(spark, d, cols, files, None, prefix, tag, root)
-    if (!partitioned) one(dir, None, None, None).size
-    else sweepPartitions(spark, dir, parallelism)((part, prefix, tag) =>
-      one(part, Some(prefix), tag, Some(dir))).map(_._2).sum
+    def one(d: String, prefix: Option[String], root: Option[String]) =
+      if (zorderBy) zorder(spark, d, cols, files, filePrefix = prefix, cdcRoot = root)
+      else if (cols.isEmpty) compact(spark, d, files, None, prefix, root)
+      else cluster(spark, d, cols, files, None, prefix, root)
+    if (!partitioned) one(dir, None, None).size
+    else sweepPartitions(spark, dir, parallelism)((part, prefix) =>
+      one(part, Some(prefix), Some(dir))).map(_._2).sum
   }
 
   /** Each partition directory of `dir` with the number of files its
    * rewrite folded in. */
   private def sweepPartitions(spark: SparkSession, dir: String, parallelism: Int)(
-      rewrite: (String, String, Option[String]) => Seq[String]): Seq[(String, Int)] = {
+      rewrite: (String, String) => Seq[String]): Seq[(String, Int)] = {
     require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
-    val qroot = root.getFileSystem(conf).makeQualified(root)
     // a clone's data are refs into the SOURCE's directories: a sweep
     // of its own tree would miss them, so it refuses like the
     // single-directory rewrite does
     ScbfClone.refuseIfClone(root, conf, "OPTIMIZE (table)")
-    // one CDC probe per sweep: each per-partition rewrite is its own
-    // commit, so each gets its own tag — generated HERE so the root
-    // re-announcement below can carry the same tag the partition
-    // commit retained its victims under (ScbfCdc)
-    val cdcOn = ScbfCdc.enabled(qroot, conf)
     // the directories holding data: the root of an unpartitioned
     // table, one leaf per partition value combination otherwise. An
     // unpruned walk of the whole tree, counted as the full-table
     // listing it is
     ScbfDataSource.listings.incrementAndGet()
     val parts = ScbfPartitions.walk(root, conf).filter(_.holdsData).map(_.dir).toSeq
-    def sweepOne(part: org.apache.hadoop.fs.Path): (String, Int) = {
-      val prefix = s"opt-${java.util.UUID.randomUUID().toString.take(8)}-"
-      val tag = if (cdcOn) Some(ScbfCdc.newTag("compact")) else None
-      // the root-log mark carries the names the rewrite ACTUALLY folded
-      // in (its return value) — see rewriteSnapshot; a skipped
-      // partition folded nothing, published nothing, announces nothing
-      val folded = rewrite(part.toString, prefix, tag)
-      if (folded.nonEmpty)
-        ScbfRewrite.announceToRoot(qroot, conf, part, prefix, folded,
-          rowsChanged = false, cdcTag = tag)
-      part.toString -> folded.size
-    }
-    forEachDir(parts, parallelism)(sweepOne)
+    forEachDir(parts, parallelism)(part => part.toString ->
+      rewrite(part.toString, s"opt-${java.util.UUID.randomUUID().toString.take(8)}-").size)
   }
 
   /** Run `f` over independent directories with up to `parallelism`

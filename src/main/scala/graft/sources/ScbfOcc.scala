@@ -7,9 +7,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * The write-write CONFLICT RULES (OCC — Delta's ConcurrentDeleteRead
  * contract) behind the shared copy-on-write commit path
  * ([[ScbfRewrite]], through which the API rewrites, SQL row-level
- * operations and OPTIMIZE all commit): the snapshot point, the replay,
- * the conflict rule, recorded-victim deadness, the refusal text and
- * the rollback file-cleanup.
+ * operations and OPTIMIZE all commit): the replay, the conflict
+ * rule, recorded-victim deadness, the refusal text and the rollback
+ * file-cleanup.
  *
  * The rule: a commit stamped after the mutation's snapshot that names
  * one of its VICTIMS in `rewriteOf` raced it. A commit that names the
@@ -24,30 +24,16 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * totally ordered by their delta ordinals, so of two racers that both
  * published, exactly ONE — the higher ordinal — rolls back; the lower
  * keeps its commit and ignores the conflict (the other surface's own
- * recheck is what rolls it back — every rewriteOf-producing surface
- * rechecks post-publish). Conflicts whose ordinal is unknowable (v1
- * deltas, untagged fold interiors) and INSERT OVERWRITE boundaries
- * stay unconditional, the pre-round-15 both-abort behavior.
+ * recheck is what rolls it back). The API DELETE/UPDATE rounds and
+ * the SQL row-level commit recheck post-publish; OPTIMIZE does not:
+ * it checks once, at its commit instant, before it publishes, so a
+ * racer announcing between that check and OPTIMIZE's announce wins
+ * its own recheck and both commits stay. Conflicts whose ordinal is
+ * unknowable (v1 deltas, untagged fold interiors) and INSERT
+ * OVERWRITE boundaries stay unconditional, the pre-round-15
+ * both-abort behavior.
  */
 private[sources] object ScbfOcc extends org.apache.spark.internal.Logging {
-
-  /** The OCC snapshot point: the newest persisted commit instant,
-   * taken BEFORE the file listing a mutation plans from. None = the
-   * table genuinely has no chain (a log-less table has nothing
-   * announced to conflict with — skip OCC, the pre-round-14
-   * behavior). A FAILED listing refuses via `refuse` (ADVICE r14):
-   * the lost-update protection must not silently lapse on a transient
-   * filesystem error — fail the mutation closed and let the re-run
-   * take a real snapshot. */
-  def snapshot(qroot: Path, conf: Configuration,
-      refuse: String => Nothing): Option[Long] =
-    ScbfDiscovery.newestCommitInstant(qroot, conf) match {
-      case scala.util.Success(v) => v
-      case scala.util.Failure(e) =>
-        refuse(s"the discovery log could not be read at snapshot time " +
-          s"(${e.getMessage}) — without a snapshot the write-write " +
-          "conflict check cannot run; retry the operation.")
-    }
 
   /** Entries committed after `snapTs` on `qroot`'s log, each with its
    * SOURCE delta name (the ordinal carrier) — the commits that raced

@@ -11,7 +11,12 @@ import graft.scbf.ScbfFormatException
  * plans, [[ScbfBatchWrite]] checks at its commit instant) and scoped
  * overwrites. One copy of each step, so the surfaces cannot diverge:
  *
- *  - [[liveListing]]: the rewrite-transparent listing, and its heal;
+ *  - [[snapshot]]: what a rewrite plans from — its OCC position, the
+ *    live data files and the log's recorded victims, taken in one
+ *    order by one function; OPTIMIZE and the API rounds list the
+ *    directory's own files ([[ownFiles]]), the SQL scan its pruned
+ *    table listing;
+ *  - [[liveListing]]: the rewrite-transparent view, and its heal;
  *  - [[Occ]]: the pre-publish conflict check and the post-publish
  *    recheck with single-loser arbitration, rollback and refusal;
  *  - [[removeVictims]] / [[dropFromManifests]]: the replaced originals
@@ -23,9 +28,9 @@ import graft.scbf.ScbfFormatException
  *    discovery log.
  *
  * The front ends keep what really differs: how victims are scoped
- * (bounded re-list rounds, Spark's ReplaceData scan, a snapshot), how
- * replacements are written, and how CDC rows are captured. The rules
- * themselves — conflict, deadness, arbitration, rollback — are
+ * (bounded re-list rounds, Spark's ReplaceData scan, one snapshot),
+ * how replacements are written, and how CDC rows are captured. The
+ * rules themselves — conflict, deadness, arbitration, rollback — are
  * [[ScbfOcc]]'s.
  *
  * Failure contract, common to every front end: a crash before the
@@ -41,20 +46,83 @@ private[graft] object ScbfRewrite {
     throw new ScbfFormatException(
       s"$where: cannot verify concurrent-commit safety — $why")
 
-  def listingRefusal(where: String)(why: String): Nothing =
+  private def listingRefusal(where: String)(why: String): Nothing =
     throw new ScbfFormatException(
       s"$where: cannot verify the listing's rewrite-transparency — $why")
 
-  /** The OCC snapshot point, taken BEFORE the listing a rewrite plans
-   * from ([[ScbfOcc.snapshot]]; a failed read refuses). */
-  def snapshot(where: String, qroot: Path, conf: Configuration): Option[Long] =
-    ScbfOcc.snapshot(qroot, conf, occRefusal(where))
+  /** The OCC position: the newest persisted commit instant of `qroot`'s
+   * log, taken BEFORE the listing a rewrite plans from. None = the log
+   * has no chain (a log-less table has nothing announced to conflict
+   * with — OCC is skipped). A FAILED read refuses: the lost-update
+   * protection must not silently lapse on a transient filesystem
+   * error — fail the rewrite closed and let the re-run take a real
+   * position. */
+  def position(where: String, qroot: Path, conf: Configuration): Option[Long] =
+    ScbfDiscovery.newestCommitInstant(qroot, conf).fold(e => occRefusal(where)(
+      s"the discovery log could not be read at snapshot time (${e.getMessage}) — " +
+        "without a snapshot the write-write conflict check cannot run; retry the operation."),
+      identity)
 
-  /** The log's recorded victims ([[ScbfOcc.recordedVictims]]; an
-   * unreadable chain refuses). */
-  def recordedVictims(where: String, qroot: Path, conf: Configuration)
-      : Map[String, Seq[ScbfOcc.VictimRec]] =
-    ScbfOcc.recordedVictims(qroot, conf, listingRefusal(where))
+  /** Every entry of `qroot`'s log, from one replay (none without a
+   * log): all commits after a position taken while it had no chain. */
+  def allEntries(where: String, qroot: Path, conf: Configuration)
+      : Seq[(ScbfDiscovery.Entry, String)] =
+    ScbfOcc.entriesAfter(qroot, conf, Long.MinValue, occRefusal(where))
+
+  /**
+   * One copy-on-write rewrite's SNAPSHOT of the table at `qroot`:
+   *  - `position`: the OCC point, taken BEFORE the listing, so a commit
+   *    the listing missed is stamped after it and the commit's
+   *    [[Occ]] checks it (None: no chain at snapshot time);
+   *  - `files`: the listed data files, rewrite-transparent
+   *    ([[liveListing]]);
+   *  - `victims`: the log's recorded victims that view was taken under.
+   */
+  final case class Snapshot(position: Option[Long], files: Seq[FileStatus],
+      victims: Map[String, Seq[ScbfOcc.VictimRec]]) {
+
+    /**
+     * The next snapshot of the same directory, for a rewrite that
+     * re-lists in rounds: `next` is its position, and `since` the
+     * commits after THIS snapshot's position, replayed after `next` was
+     * taken (the round's recheck replay, or [[allEntries]]). They
+     * extend the victims, so the full chain replays once per operation.
+     */
+    def extend(where: String, qroot: Path, conf: Configuration, next: Option[Long],
+        since: Seq[(ScbfDiscovery.Entry, String)], list: () => Seq[FileStatus]): Snapshot = {
+      val late = since.flatMap { case (e, d) => e.rewriteOf.map(_ -> ScbfOcc.recOf(e, d)) }
+      take(where, qroot, conf, next, list, probeFs = false, heal = true)(
+        late.foldLeft(victims) { case (m, (v, r)) =>
+          m.updated(v, (m.getOrElse(v, Nil) :+ r).distinct) })
+    }
+  }
+
+  /**
+   * The one way a rewrite snapshot is taken, always in the safe order:
+   * the OCC position, then `list`, then the log's recorded victims
+   * ([[ScbfOcc.recordedVictims]]; an unreadable chain refuses), then
+   * the rewrite-transparent view ([[liveListing]], healing when `heal`).
+   */
+  def snapshot(where: String, qroot: Path, conf: Configuration,
+      list: () => Seq[FileStatus], probeFs: Boolean, heal: Boolean): Snapshot =
+    take(where, qroot, conf, position(where, qroot, conf), list, probeFs, heal)(
+      ScbfOcc.recordedVictims(qroot, conf, listingRefusal(where)))
+
+  private def take(where: String, qroot: Path, conf: Configuration,
+      position: Option[Long], list: () => Seq[FileStatus], probeFs: Boolean,
+      heal: Boolean)(victims: => Map[String, Seq[ScbfOcc.VictimRec]]): Snapshot = {
+    val listed = list()
+    val v = victims
+    Snapshot(position, liveListing(where, qroot.getFileSystem(conf), qroot, conf,
+      listed, v, probeFs, heal), v)
+  }
+
+  /** The data files directly in `dir` — never those of its `k=v`
+   * children, which a table-level pass rewrites as directories of
+   * their own. One recorded listing ([[ScbfPartitions.walk]] descending
+   * nowhere); a missing directory lists empty. */
+  def ownFiles(dir: Path, conf: Configuration): Seq[FileStatus] =
+    ScbfPartitions.walk(dir, conf, _ => false).next().dataFiles
 
   /**
    * The rewrite-transparent VIEW of `listed`: a file the log records as
@@ -119,14 +187,16 @@ private[graft] object ScbfRewrite {
         ScbfOcc.entriesAfter(qroot, conf, _, occRefusal(where)))
 
     /** Before any side effect: refuse if a raced commit already
-     * rewrote or removed one of `victims`. */
+     * rewrote or removed one of `victims`. Returns the commits it
+     * checked. */
     def checkBeforePublish(victims: Set[String], isSelf: String => Boolean,
-        phase: String = "detected before publish"): Unit =
-      if (snapTs.isDefined) {
-        val found = ScbfOcc.conflicts(entries(), victims, isSelf)
-        if (found.nonEmpty)
-          throw new ScbfFormatException(ScbfOcc.refusalMessage(where, found, phase))
-      }
+        phase: String = "detected before publish"): Seq[(ScbfDiscovery.Entry, String)] = {
+      val raced = entries()
+      val found = ScbfOcc.conflicts(raced, victims, isSelf)
+      if (found.nonEmpty)
+        throw new ScbfFormatException(ScbfOcc.refusalMessage(where, found, phase))
+      raced
+    }
 
     /**
      * After the replacement published, before the originals go: the
@@ -145,11 +215,12 @@ private[graft] object ScbfRewrite {
      * `published` names our outputs from the replay (None when it
      * failed); `alsoScrub` are our other entries (a removal sentinel),
      * which also carry our ordinal; `cdc` is the (CDC root, tag) our
-     * change rows were captured under.
+     * change rows were captured under. Returns the replay it passed.
      */
     def recheckAfterPublish(victims: Set[String], isSelf: String => Boolean,
         published: Option[Seq[(ScbfDiscovery.Entry, String)]] => Set[String],
-        alsoScrub: Set[String], cdc: Option[(Path, String)]): Unit = {
+        alsoScrub: Set[String], cdc: Option[(Path, String)])
+        : Seq[(ScbfDiscovery.Entry, String)] = {
       val post =
         try Right(entries())
         catch { case e: ScbfFormatException => Left(e) }
@@ -172,6 +243,7 @@ private[graft] object ScbfRewrite {
             "detected after publish; replacement rolled back") +
             ScbfOcc.scrubCaveat(scrubbed))
       }
+      post.getOrElse(Seq.empty)
     }
   }
 
@@ -238,32 +310,31 @@ private[graft] object ScbfRewrite {
    * Re-announce a PARTITION directory's rewrite to the table's ROOT
    * discovery log. The partition's commit announced to its own log (it
    * is a standalone SCBF directory), which a root stream never reads;
-   * this appends the rewrite's outputs — the partition's files carrying
-   * the rewrite's unique `prefix` — with subdir-qualified names, marked
-   * as rewrites of the subdir-qualified `replaced` names, so a root
-   * stream applies the same semantics as to a flat-directory rewrite.
-   * A row-changing rewrite that published nothing (a whole-file
-   * takedown) gets the REMOVAL entry instead, gated on the root log
-   * existing. A no-op when `part` is the root: its own commit already
-   * announced there.
+   * this appends the rewrite's `published` outputs — (name, length)
+   * pairs, named relative to `part`, as its commit announced them —
+   * with subdir-qualified names, marked as rewrites of the
+   * subdir-qualified `replaced` names, so a root stream applies the
+   * same semantics as to a flat-directory rewrite. A rewrite that
+   * published nothing and names a `removalId` (a whole-file takedown)
+   * gets that REMOVAL entry instead, gated on the root log existing.
+   * A no-op when `part` is the root: its own commit already announced
+   * there.
    */
   def announceToRoot(qroot: Path, conf: Configuration, part: Path,
-      prefix: String, replaced: Seq[String], rowsChanged: Boolean,
-      cdcTag: Option[String]): Unit = {
+      published: Seq[(String, Long)], replaced: Seq[String], rowsChanged: Boolean,
+      cdcTag: Option[String], removalId: Option[String] = None): Unit = {
     val sub = qroot.toUri.relativize(
       qroot.getFileSystem(conf).makeQualified(part).toUri).getPath.stripSuffix("/")
     if (sub.nonEmpty) {
-      val produced = ScbfDataSource.resolveFiles(Seq(part.toString), conf)
-        .filter(_.getPath.getName.startsWith(prefix))
-      val rewriteOf = replaced.map(n => s"$sub/$n")
+      val rewriteOf = replaced.map(n => s"$sub/$n").sorted
       val now = System.currentTimeMillis()
       val entries =
-        if (produced.nonEmpty) produced.map(f =>
-          ScbfDiscovery.Entry(s"$sub/${f.getPath.getName}", f.getLen, now,
-            rewriteOf = rewriteOf.sorted, rowsChanged = rowsChanged, cdcTag = cdcTag))
-        else if (rowsChanged && replaced.nonEmpty && ScbfDiscovery.exists(qroot, conf))
-          Seq(removalEntry(s"$sub/${prefix.stripSuffix("-")}", rewriteOf, cdcTag))
-        else Seq.empty
+        if (published.nonEmpty) published.map { case (n, len) =>
+          ScbfDiscovery.Entry(s"$sub/$n", len, now,
+            rewriteOf = rewriteOf, rowsChanged = rowsChanged, cdcTag = cdcTag)
+        }
+        else removalId.filter(_ => replaced.nonEmpty && ScbfDiscovery.exists(qroot, conf))
+          .map(id => removalEntry(s"$sub/$id", rewriteOf, cdcTag)).toSeq
       ScbfDiscovery.append(qroot, conf, entries)
     }
   }

@@ -90,19 +90,13 @@ private[sources] class ScbfRowLevelOperation(
    * executed its scan read no rows, so there is nothing to replace). */
   @volatile private[sources] var scannedPaths: Option[Seq[String]] = None
 
-  /** OCC snapshot (same contract as ScbfDelete's rewrite rounds): the
-   * root log's newest commit instant, captured just BEFORE the
-   * ReplaceData scan lists its groups — any commit stamped after it
-   * ran concurrently with this operation and is checked for victim
-   * overlap at commit time. None = no usable chain at plan time
-   * (ScbfOcc.snapshot) — the checks are skipped. */
-  @volatile private[sources] var occSnapTs: Option[Long] = None
-
-  /** Once-per-operation cache of the log's recorded-victim map (the
-   * strict full-chain replay): Spark invokes the scan's listing
-   * several times per row-level op (planning, EXPLAIN, retries) and
-   * the O(history) fold read must not be re-paid each time. */
-  @volatile private[sources] var victimsCache: Option[Map[String, Seq[ScbfOcc.VictimRec]]] = None
+  /** The operation's rewrite snapshot ([[ScbfRewrite.snapshot]]),
+   * taken at its FIRST listing, whichever plan step asks first (Spark
+   * asks the scan for its output partitioning before it plans
+   * partitions): the OCC position precedes every listing the plan
+   * rides on, and the O(history) recorded-victims replay is paid once
+   * however often Spark lists (planning, EXPLAIN, retries). */
+  @volatile private[sources] var snapshot: Option[ScbfRewrite.Snapshot] = None
 
   /** The table root, qualified — where the log, the CDC area and the
    * root-relative victim names live. */
@@ -224,22 +218,26 @@ private[sources] class ScbfRowLevelScanBuilder(
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
-  /** The mutation's listing, rewrite-transparent
-   * ([[ScbfRewrite.liveListing]]). The listing is stats-pruned, so a
-   * replacement's existence probes the FILESYSTEM (a pruned-away
+  /** The mutation's listing, rewrite-transparent: the first one
+   * takes the operation's snapshot, a later one is viewed under its
+   * victims ([[ScbfRewrite.liveListing]]). The listing is stats-pruned,
+   * so a replacement's existence probes the FILESYSTEM (a pruned-away
    * replacement must still kill its original), and it does not heal at
    * plan time. */
   private def transparentListFiles(
       filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val listedRaw = listFiles(filters)
-    val victims = op.victimsCache.getOrElse {
-      val v = ScbfRewrite.recordedVictims(op.where, op.qroot, conf)
-      op.victimsCache = Some(v)
-      v
+      : Seq[org.apache.hadoop.fs.FileStatus] = op.synchronized {
+    op.snapshot match {
+      case Some(snap) =>
+        ScbfRewrite.liveListing(op.where, op.qroot.getFileSystem(conf), op.qroot, conf,
+          listFiles(filters), snap.victims, probeFs = true, heal = false)
+      case None =>
+        val snap = ScbfRewrite.snapshot(op.where, op.qroot, conf,
+          () => listFiles(filters), probeFs = true, heal = false)
+        op.snapshot = Some(snap)
+        ScbfRowLevelBatchWrite.occHook("snapshot")
+        snap.files
     }
-    ScbfRewrite.liveListing(op.where, op.qroot.getFileSystem(conf), op.qroot, conf,
-      listedRaw, victims, probeFs = true, heal = false)
   }
 
   override def build(): Scan =
@@ -254,9 +252,6 @@ private[sources] class ScbfRowLevelScanBuilder(
           : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
         Array.empty
       override def planInputPartitions(): Array[InputPartition] = {
-        // OCC snapshot BEFORE the listing the plan rides on: commits
-        // stamped after this instant raced the operation
-        op.occSnapTs = ScbfRewrite.snapshot(op.where, op.qroot, conf)
         val parts = super.planInputPartitions()
         op.scannedPaths =
           Some(parts.toSeq.collect { case ScbfFilePartition(p, _, _) => p })
@@ -272,9 +267,10 @@ private[sources] class ScbfRowLevelScanBuilder(
  * (originals untouched).
  */
 private[sources] object ScbfRowLevelBatchWrite {
-  /** Test seam for the OCC race windows: invoked with "pre" at commit
-   * start (before the pre-publish check) and "post" right after the
-   * replacement announce (before the recheck). Specs inject a
+  /** Test seam for the OCC race windows: invoked with "snapshot" once
+   * the operation's snapshot is taken (the scan has listed), "pre" at
+   * commit start (before the pre-publish check) and "post" right after
+   * the replacement announce (before the recheck). Specs inject a
    * conflicting commit here. */
   @volatile private[sources] var occHook: String => Unit = _ => ()
 }
@@ -314,7 +310,7 @@ private[sources] class ScbfRowLevelBatchWrite(
     // any side effect — Spark's abort then cleans the task-committed
     // files — and rechecked after the announce, before the originals go
     val occ = new ScbfRewrite.Occ(op.where, qroot, hconf,
-      op.occSnapTs.filter(_ => victimNames.nonEmpty))
+      op.snapshot.flatMap(_.position).filter(_ => victimNames.nonEmpty))
     ScbfRowLevelBatchWrite.occHook("pre")
     occ.checkBeforePublish(victimNames, publishedNames.contains)
     // CDC capture (ScbfCdc) — value-level by necessity: the group-based

@@ -160,7 +160,10 @@ object ScbfWrite {
    * (ScbfScan's per-file check is correct but LATE: the bad bytes are
    * already published and interleaved with good files). One header read
    * per append job (the first live file is authoritative — the
-   * directory is homogeneous by induction under this very check).
+   * directory is homogeneous by induction under this very check),
+   * found by the lazy walk that stops at it
+   * ([[ScbfDataSource.dataFilesLazily]]) — an append into one partition
+   * lists the root and one partition, not the table.
    * Overwrites skip it: they replace the contents wholesale.
    */
   private[sources] def validateAppendSchema(
@@ -169,14 +172,13 @@ object ScbfWrite {
     // commit that may delete the chosen file between the two calls —
     // the exact append-concurrent-with-rewrite interleaving this guard
     // legitimizes — so a vanished file is a retry (next live file, then
-    // a fresh listing), not a spurious job failure. Any OTHER read
+    // a fresh walk), not a spurious job failure. Any OTHER read
     // error propagates: a corrupt header is a real mismatch signal.
     var have: ScbfSchema = null
     var round = 0
     while (have == null) {
-      val existing = ScbfDataSource.resolveFiles(Seq(dir), conf)
-      if (existing.isEmpty) return
-      val it = existing.iterator
+      val it = ScbfDataSource.dataFilesLazily(Seq(dir), conf)
+      if (!it.hasNext) return
       while (have == null && it.hasNext) {
         val f = it.next()
         try have = ScbfUtil.readHeader(f, conf).schema
@@ -184,7 +186,7 @@ object ScbfWrite {
       }
       round += 1
       if (have == null && round >= 3)
-        // every listed file vanished three listings in a row: something
+        // every file found vanished three walks in a row: something
         // is actively emptying the directory — treat as empty table
         return
     }
@@ -241,8 +243,9 @@ class ScbfBatchWrite(
     // row-level path learns its scope at commit time. OPTIMIZE and
     // scoped overwrites self-tag when the table has CDC enabled.
     private[sources] var cdcTag: Option[String] = None,
-    // table root the CDC area lives under (per-partition maintenance
-    // rewrites pass it; defaults to this write's own directory)
+    // table root the CDC area and the root log live under
+    // (per-partition maintenance rewrites pass it and re-announce to
+    // its log; defaults to this write's own directory)
     cdcRoot: Option[String] = None,
     // OCC snapshot instant of a snapshot rewrite's planning listing —
     // see the commit-instant check in commit()
@@ -283,19 +286,19 @@ class ScbfBatchWrite(
         }
       }
     }
-    if (truncate && fs.exists(path)) {
-      // resolveFiles: recursive over partition subdirectories, so a
-      // partitioned overwrite replaces the WHOLE table, not just root
-      val listed = ScbfDataSource.resolveFiles(Seq(dir), conf).map(_.getPath)
+    if (truncate && fs.exists(path)) toReplace = replaceOnly match {
       // a SNAPSHOT-scoped overwrite (OPTIMIZE rewrites pass the exact
-      // file set they read) deletes only that snapshot: a file a
-      // concurrent append publishes between the rewrite's read and this
-      // commit is NOT the rewrite's to destroy — it survives, and the
-      // next maintenance pass folds it in
-      toReplace = replaceOnly match {
-        case Some(names) => listed.filter(p => names.contains(p.getName))
-        case None        => listed
-      }
+      // files they read, all directly in `dir`) replaces only that
+      // snapshot: a file a concurrent append publishes between the
+      // rewrite's read and this commit is NOT the rewrite's to destroy
+      // — it survives, and the next maintenance pass folds it in. A
+      // victim already gone by the commit is skipped by the removal
+      case Some(names) =>
+        val qdir = fs.makeQualified(path)
+        names.toSeq.sorted.map(new Path(qdir, _))
+      // recursive over partition subdirectories, so a partitioned
+      // overwrite replaces the WHOLE table, not just root
+      case None => ScbfDataSource.resolveFiles(Seq(dir), conf).map(_.getPath)
     }
     fs.mkdirs(path)
     val taskConf = ScbfUtil.broadcastConf(conf)
@@ -346,11 +349,14 @@ class ScbfBatchWrite(
     // commit — a throw here makes Spark abort the job, which removes
     // only the task-committed replacement files; victims stay, and the
     // table renders exactly the concurrent mutation's state. This
-    // guards the WHOLE rewrite job, not just its planning window.
-    replaceOnly.foreach(victims =>
+    // guards the WHOLE rewrite job, not just its planning window. The
+    // same replay says whether anything else committed here since the
+    // snapshot (`raced`), which decides the manifest rebuild below.
+    val raced = replaceOnly.exists(victims =>
       new ScbfRewrite.Occ(s"snapshot rewrite on $dir", qroot, conf, occSnapTs)
         .checkBeforePublish(victims, isSelf = newNames.contains,
-          "detected at commit; the rewrite aborted, originals untouched"))
+          "detected at commit; the rewrite aborted, originals untouched")
+        .nonEmpty)
     // scoped overwrite emptying a directory the insert does not
     // repopulate (static scope with no rows for it): the 0-row keeper
     // goes in BEFORE the deletions (ScbfRewrite)
@@ -361,10 +367,11 @@ class ScbfBatchWrite(
     // CDC retention (ScbfCdc): a snapshot rewrite (OPTIMIZE) or scoped
     // overwrite on a CDC-enabled table RETAINS its victims instead of
     // deleting them — self-tagged here when the caller did not pass a
-    // tag (SQL INSERT OVERWRITE PARTITION has no option channel;
-    // maintenance passes its own so the root re-announcement can carry
-    // the same tag). Full truncate stays uncaptured: it restarts the
-    // log, and the overwrite BOUNDARY is what gates feeds across it.
+    // tag (SQL INSERT OVERWRITE PARTITION has no option channel; a
+    // partition's maintenance rewrite carries this tag into its root
+    // re-announcement below). Full truncate stays uncaptured: it
+    // restarts the log, and the overwrite BOUNDARY is what gates feeds
+    // across it.
     val victims = toReplace.filterNot(p => newNames.contains(p.getName))
     val cdcRootQ = fs.makeQualified(new Path(cdcRoot.getOrElse(dir)))
     val captureTag: Option[String] = cdcTag.orElse {
@@ -429,19 +436,17 @@ class ScbfBatchWrite(
       case Some(snapshot) =>
         // snapshot-scoped overwrite COEXISTS with concurrent appends:
         // never sweep temps (a live append's staged files would die),
-        // and rebuild the manifest fresh only when nothing appeared
-        // mid-rewrite — otherwise ONE merge cycle that adds this job's
-        // entries and drops exactly the names it deleted (a newcomer
-        // appending mid-merge keeps its entries: its names can never be
-        // in the drop set, where a retain-the-live-listing prune would
-        // race its commit)
-        val live = ScbfDataSource.resolveFiles(Seq(dir), conf)
-          .map(_.getPath.getName).toSet
-        if ((live -- snapshot -- newNames).isEmpty)
+        // and rebuild the manifest fresh only when the log shows no
+        // other commit since the snapshot — otherwise ONE merge cycle
+        // that adds this job's entries and drops exactly the names it
+        // replaced (a newcomer appending mid-merge keeps its entries:
+        // its names can never be in the drop set, where a
+        // retain-the-live-listing prune would race its commit)
+        if (!raced)
           ScbfStats.mergeManifest(new Path(dir), conf, entries, fresh = true)
         else
           ScbfStats.mergeManifest(new Path(dir), conf, entries, fresh = false,
-            drop = toReplace.map(_.getName).toSet -- newNames)
+            drop = snapshot -- newNames)
     }
     // announce the published files to the streaming discovery log
     // (ScbfDiscovery): a full overwrite restarts the log (its previous
@@ -467,11 +472,11 @@ class ScbfBatchWrite(
     // the log that lives AT the CDC root: a per-partition rewrite's
     // own log would resolve the tag against a partition-local CDC
     // area that does not exist (the bytes are retained at the TABLE
-    // root, and the table-level sweep's root re-announcement carries
-    // the tag there); an untagged partition entry refuses with the
+    // root, and the root re-announcement below carries the tag
+    // there); an untagged partition entry refuses with the
     // honest no-retention message instead of a phantom-sweep one
     val entryTag =
-      if (rewriteOf.nonEmpty && cdcRootQ == fs.makeQualified(new Path(dir)))
+      if (rewriteOf.nonEmpty && cdcRootQ == qroot)
         captureTag
       else None
     val announced =
@@ -480,6 +485,12 @@ class ScbfBatchWrite(
     if (truncate && replaceOnly.isEmpty)
       ScbfDiscovery.reset(new Path(dir), conf, announced)
     else ScbfDiscovery.append(new Path(dir), conf, announced)
+    // a PARTITION's snapshot rewrite (a table-level OPTIMIZE passes the
+    // table root as cdcRoot) re-announces its outputs to the root's log
+    // too, carrying the same tag; a no-op when this directory is the root
+    if (replaceOnly.isDefined)
+      ScbfRewrite.announceToRoot(cdcRootQ, conf, qroot,
+        entries.map(e => e.name -> e.dataLen), rewriteOf, rowsChanged = false, captureTag)
     // scoped overwrite = delete-old-rows + insert-new: the new files
     // announced above are PLAIN entries (they are new data, not the
     // victims' surviving rows — marking them rewriteOf would make a

@@ -438,4 +438,64 @@ class OccConflictSpec extends AnyFunSuite with SparkTestBase {
     assert(ScbfOcc.conflicts(Seq(boundary), victims, self, ourOrd = Some(3))
       .exists(_.contains("INSERT OVERWRITE")))
   }
+
+  // The SQL row-level operation plans from ONE snapshot whose OCC
+  // position precedes its first listing. Spark asks the ReplaceData
+  // scan for its output partitioning, which lists, before it plans the
+  // scan's partitions; a position taken at partition planning would
+  // postdate that listing, so a commit landing between the two would
+  // be neither among the listing's dead victims nor after the position.
+  // The racer is a real API DELETE of the same rows, parked after its
+  // publish (replacement announced, original still on disk) while the
+  // SQL statement runs to its end.
+  for ((what, sql) <- Seq(
+      "UPDATE" -> "UPDATE %s SET source = 'changed' WHERE id < 500",
+      "MERGE" -> ("MERGE INTO %s t USING (SELECT CAST(id AS INT) AS id FROM range(0, 500)) s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET t.source = 'changed'"),
+      "subquery DELETE" ->
+        "DELETE FROM %s WHERE id IN (SELECT CAST(id AS INT) FROM range(0, 500))"))
+    test(s"SQL $what refuses an API DELETE that publishes while its scan plans") {
+      val t = s"occ_pos_${what.replace(' ', '_').toLowerCase}"
+      val dir = tmpDir(s"scbf-occ-pos-$t")
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (id INT, source STRING) USING scbf LOCATION '$dir'")
+      writeTwoFiles(dir)
+      val published = new java.util.concurrent.CountDownLatch(1)
+      val release = new java.util.concurrent.CountDownLatch(1)
+      @volatile var racerError: Option[Throwable] = None
+      val racer = new Thread(() =>
+        try ScbfDelete.deleteWhere(spark, dir, hconf, Array[Filter](LessThan("id", 200)))
+        catch { case e: Throwable => racerError = Some(e) })
+      ScbfDelete.postPublishHook = () => {
+        published.countDown()
+        release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      var fired = false
+      ScbfRowLevelBatchWrite.occHook = phase => if (phase == "snapshot" && !fired) {
+        fired = true
+        racer.start()
+        assert(published.await(120, java.util.concurrent.TimeUnit.SECONDS),
+          "the racing DELETE never published")
+      }
+      val outcome =
+        try scala.util.Try(spark.sql(sql.format(t)).collect())
+        finally {
+          ScbfRowLevelBatchWrite.occHook = _ => ()
+          release.countDown()
+          racer.join()
+          ScbfDelete.postPublishHook = () => ()
+        }
+      assert(fired, "the row-level scan never took its snapshot")
+      assert(racerError.isEmpty, s"the racing DELETE failed: $racerError")
+      val msgs = outcome.failed.toOption.iterator
+        .flatMap(e => Iterator.iterate(e)(_.getCause).takeWhile(_ != null))
+        .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
+      assert(msgs.contains("concurrent mutation conflict"),
+        s"$what must refuse, got ${outcome.map(_ => "success")} $msgs")
+      // the DELETE's result, exactly: no row back, none doubled, none changed
+      val rows = spark.read.format("scbf").load(dir).select("id", "source").collect()
+      assert(rows.map(_.getInt(0)).sorted.toSeq == (200 until 2000))
+      assert(!rows.exists(_.getString(1) == "changed"))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
 }

@@ -122,6 +122,28 @@ class PartitionedTableSpec extends AnyFunSuite with SparkTestBase {
     spark.sql("DROP TABLE IF EXISTS graft_pt_infer")
   }
 
+  test("an append's schema check reads the first header it reaches, not a table listing") {
+    val dir = Files.createTempDirectory("scbf-part-append").toString
+    spark.sql("DROP TABLE IF EXISTS graft_pt_append")
+    spark.sql("CREATE TABLE graft_pt_append (id INT, grp STRING, v DOUBLE) " +
+      s"USING scbf PARTITIONED BY (grp) LOCATION '$dir'")
+    spark.sql("INSERT INTO graft_pt_append SELECT CAST(id AS INT), " +
+      "concat('g', CAST(id % 3 AS INT)), 0.5 FROM range(0, 30)")
+    ScbfDataSource.listings.set(0)
+    ScbfPartitions.listedDirs.clear()
+    spark.sql("INSERT INTO graft_pt_append VALUES (100, 'g2', 1.0)")
+    val listed = ScbfPartitions.listedDirs.toArray(Array.empty[String]).toSeq
+    assert(listed.size <= 2, s"an append into one partition listed $listed")
+    assert(ScbfDataSource.listings.get == 0, "an append takes no full-table listing")
+    // the check still runs: a mismatched append into the table refuses
+    val e = intercept[Exception](spark.range(0, 3).selectExpr("CAST(id AS INT) AS id",
+      "CAST(id AS STRING) AS v").write.format("scbf").mode("append").save(dir))
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("schema mismatch")), e.toString)
+    assert(spark.sql("SELECT count(*) FROM graft_pt_append").head().getLong(0) == 31L)
+    spark.sql("DROP TABLE IF EXISTS graft_pt_append")
+  }
+
   test("runtime (DPP-shaped) In-filters partition-prune too") {
     val dir = makeTable("graft_pt3")
     val conf = new Configuration()
@@ -414,6 +436,44 @@ class PartitionedTableSpec extends AnyFunSuite with SparkTestBase {
       .map(_.getPath.getParent.getName).toSet
     assert(parts.exists(_.startsWith("grp=")), s"partition dirs survive: $parts")
   }
+
+  for (parallelism <- Seq(8, 1))
+    test(s"a STRAY root-level file stays at the root through table-level OPTIMIZE (parallelism $parallelism)") {
+      // each directory's rewrite takes the directory's OWN files: the
+      // root pass clusters the stray file alone, so it can neither fold
+      // the partitions' files into the root (flattening the layout) nor
+      // rewrite them a second time beside their own pass (duplicates)
+      import spark.implicits._
+      val t = s"graft_ptopt_stray$parallelism"
+      val dir = makeTable(t)
+      (100 until 200).map(i => (i, s"g${i % 4}", i * 0.5)).toDF("id", "grp", "v")
+        .createOrReplaceTempView(s"${t}_src2")
+      spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(2, grp) */ id, grp, v FROM ${t}_src2")
+      Seq((1000, "g1", 1.0), (1001, "g2", 2.0)).toDF("id", "grp", "v")
+        .coalesce(1).write.format("scbf").mode("append").save(dir) // stray, at root
+      def perGroup(): Map[String, Long] =
+        spark.sql(s"SELECT grp, count(*) FROM $t GROUP BY grp").collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val before = perGroup()
+      assert(before.values.sum == 202L)
+      spark.conf.set(graft.GraftConf.SweepParallelism, parallelism.toString)
+      try spark.sql(s"OPTIMIZE $t CLUSTER BY (id)")
+      finally spark.conf.unset(graft.GraftConf.SweepParallelism)
+      assert(perGroup() == before)
+      val fs = new Path(dir).getFileSystem(new Configuration())
+      def ownIds(d: Path): Seq[Int] = {
+        val own = fs.listStatus(d).map(_.getPath)
+          .filter(p => fs.isFile(p) && ScbfDataSource.isDataFile(p)).map(_.toString)
+        if (own.isEmpty) Seq.empty
+        else spark.read.format("scbf").load(own: _*).select("id").collect()
+          .map(_.getInt(0)).sorted.toSeq
+      }
+      assert(ownIds(new Path(dir)) == Seq(1000, 1001), "the root keeps only the stray rows")
+      Seq("g0", "g1", "g2", "g3").foreach { g =>
+        assert(ownIds(new Path(dir, s"grp=$g")) ==
+          (0 until 200).filter(i => s"g${i % 4}" == g), s"grp=$g keeps its own rows")
+      }
+    }
 
   test("partitioned DELETE is root-stream transparent under every onChangeCommit policy") {
     val dir = makeTable("graft_ptdel4")
