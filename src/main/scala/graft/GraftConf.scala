@@ -64,9 +64,10 @@ object GraftConf {
    * mutation (default 8): `OPTIMIZE`/`VACUUM`, partitioned `DELETE` —
    * that many per-directory rewrites run as CONCURRENT Spark jobs
    * from driver threads (the optimization guide's §2.6 overlap:
-   * partitions are disjoint commit units — independent snapshots,
-   * manifests, logs — so the only shared resource is cluster
-   * capacity, and FIFO scheduling back-fills each job's straggler
+   * partitions are disjoint commit units — independent snapshots and
+   * manifests, each commit one ordinal-CAS delta on the table root's
+   * one log — so the only shared resource is cluster capacity, and
+   * FIFO scheduling back-fills each job's straggler
    * tail with the next job's tasks). A small partition's rewrite is
    * dominated by fixed job overhead; a sweep of 10³ partitions
    * serializing that overhead is O(partitions) wall-clock for no

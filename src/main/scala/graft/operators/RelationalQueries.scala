@@ -591,10 +591,10 @@ object RelationalQueries {
       // other partition's files stay byte-identical — and a
       // data-column predicate (a doc_id band) that routes the
       // stats-scoped per-partition rewrite through every partition
-      // holding matching rows. Replacements re-announce to the root
-      // discovery log (C:1) so root streams keep their onChangeCommit
-      // semantics; the oracle applies the same two WHERE-NOTs to the
-      // source parquet.
+      // holding matching rows. Replacements announce on the table's
+      // one discovery log, at its root (C:1), so root streams keep their
+      // onChangeCommit semantics; the oracle applies the same two
+      // WHERE-NOTs to the source parquet.
       val scbfDir = scratchDir(s) + "/graft_scbf_pdel_" +
         dir.replaceAll("[^a-zA-Z0-9]", "_")
       val p = new org.apache.hadoop.fs.Path(scbfDir)

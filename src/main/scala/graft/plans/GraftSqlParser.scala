@@ -30,7 +30,7 @@ import graft.sources.ScbfMaintenance
  * The commands resolve the table through the session catalog (provider
  * must be `scbf`; the DDL location is the table root) and route to the
  * same maintenance engine the API exposes: partitioned tables sweep
- * per partition with root-log re-announcement
+ * per partition, each pass committing on the table root's one log
  * ([[ScbfMaintenance.optimize]]), flat directories
  * rewrite in one snapshot-scoped pass. Recognition is whole-statement
  * anchored — a SELECT mentioning the word OPTIMIZE never detours.
@@ -1754,7 +1754,7 @@ case class GraftShowCreateTableCommand(table: String)
 
 /** `OPTIMIZE tbl [CLUSTER|ZORDER BY (cols)] [FILES n]` — snapshot-scoped
  * rewrite via [[ScbfMaintenance]]; partitioned tables sweep every
- * partition (per-partition passes, root-log re-announce). A directory
+ * partition (per-partition passes on the root's one log). A directory
  * already at one file with a one-file target is skipped (no job, no
  * commit), as is a balanced layout at the target count under plain
  * compaction. Returns the number of original files folded into the

@@ -319,10 +319,10 @@ class ScbfTable(
    * Partitioned tables route through [[ScbfDelete.deleteWhereTable]]:
    * the FULL condition is enforced by every per-directory rewrite
    * (partition columns are stored in the data files), partition
-   * pruning is a pure optimization, and replacements re-announce to
-   * the root discovery log so root streams keep the onChangeCommit
-   * semantics — so the accepted predicate surface is identical to the
-   * flat-directory case. */
+   * pruning is a pure optimization, and every partition's rewrite
+   * checks and announces on the table's one discovery log, at its root,
+   * so root streams keep the onChangeCommit semantics — so the accepted
+   * predicate surface is identical to the flat-directory case. */
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     tablePaths.size == 1 && ScbfDelete.canDelete(filters) &&
       // data columns, plus the _file_path metadata column: its
@@ -339,10 +339,9 @@ class ScbfTable(
     refuseMutationIfTravelled("DELETE")
     cdcFromProps
     tablePaths.foreach(p => ScbfClone.refuseIfClone(new Path(p), conf, "DELETE"))
-    if (partitionTransforms.isEmpty) {
+    if (partitionTransforms.isEmpty)
       ScbfDelete.deleteWhere(SparkSession.active, tablePaths.head, conf, filters)
-      ()
-    } else ScbfDelete.deleteWhereTable(SparkSession.active, tablePaths.head,
+    else ScbfDelete.deleteWhereTable(SparkSession.active, tablePaths.head,
       conf, schema, filters,
       parallelism = graft.GraftConf.int(SparkSession.active,
         graft.GraftConf.SweepParallelism, 8))

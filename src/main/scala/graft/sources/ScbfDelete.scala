@@ -22,8 +22,8 @@ import org.apache.spark.sql.sources._
  * originals (plus their sidecars) are deleted last.
  *
  * The commit steps — rewrite-transparent listing and heal, OCC check
- * and post-publish recheck with rollback, victim removal, root-log
- * re-announcement — are the shared copy-on-write commit path
+ * and post-publish recheck with rollback, victim removal — are the
+ * shared copy-on-write commit path
  * ([[ScbfRewrite]]), with its failure contract: a crash before the
  * replacement commits leaves the delete un-happened; a crash after it
  * leaves original and replacement coexisting until the next rewrite's
@@ -66,15 +66,6 @@ object ScbfDelete {
   def canDelete(filters: Array[Filter]): Boolean =
     filters.forall(f => filterToColumn(f).isDefined)
 
-  /** One rewrite round's outputs: the original names it replaced, the
-   * CDC tag it captured under (if the table has CDC enabled), the
-   * (name, length) pairs it published, and the id of its REMOVAL entry
-   * when it published no replacement — what a TABLE-level caller needs
-   * to re-announce the rewrite to the root discovery log with
-   * subdir-qualified names. */
-  private[sources] case class RewriteRound(replaced: Seq[String], cdcTag: Option[String],
-      published: Seq[(String, Long)], removalId: Option[String])
-
   /**
    * `DELETE FROM <partitioned scbf table> WHERE <cond>` — the
    * takedown path at its REAL layout: a 100 TB corpus is
@@ -96,10 +87,12 @@ object ScbfDelete {
    * to the root's own files instead of recursing into every
    * partition.
    *
-   * After each directory's rewrite commits, it is re-announced to the
-   * ROOT discovery log ([[ScbfRewrite.announceToRoot]], row-changing),
-   * so a root stream gets the same onChangeCommit semantics as for a
-   * flat-directory DELETE. `parallelism` drives
+   * Every per-directory round snapshots, checks OCC and announces on
+   * the table ROOT's discovery log — the table's one log, which SQL
+   * UPDATE/MERGE and OPTIMIZE check too — under root-relative names,
+   * so conflicting writers see each other and a root stream gets the
+   * same onChangeCommit semantics as for a flat-directory DELETE.
+   * `parallelism` drives
    * that many per-directory rewrites as concurrent Spark jobs (same
    * contract as [[ScbfMaintenance.clusterTable]]: every started
    * attempt completes before the first failure surfaces).
@@ -110,14 +103,9 @@ object ScbfDelete {
       conf: org.apache.hadoop.conf.Configuration,
       tableSchema: org.apache.spark.sql.types.StructType,
       filters: Array[Filter],
-      parallelism: Int = 1): Unit = {
-    val root = new Path(rootDir)
-    val qroot = root.getFileSystem(conf).makeQualified(root)
-    tableRewrite(spark, rootDir, conf, tableSchema, filters, parallelism)(
-      (part, onRound) =>
-        deleteWhere(spark, part, conf, filters, leafOnly = true,
-          onRound = onRound, cdcRoot = Some(qroot)))
-  }
+      parallelism: Int = 1): Unit =
+    tableRewrite(spark, rootDir, conf, tableSchema, filters, parallelism)((part, qroot) =>
+      deleteWhere(spark, part, conf, filters, leafOnly = true, cdcRoot = Some(qroot)))
 
   /** Table-level [[updateWhere]] — same routing as
    * [[deleteWhereTable]]. SET targets must be data columns: updating
@@ -136,14 +124,14 @@ object ScbfDelete {
     require(bad.isEmpty,
       s"cannot UPDATE partition column(s) ${bad.mkString(", ")}: rows would " +
         "change directories — DELETE and re-INSERT instead")
-    val root = new Path(rootDir)
-    val qroot = root.getFileSystem(conf).makeQualified(root)
-    tableRewrite(spark, rootDir, conf, tableSchema, filters, parallelism)(
-      (part, onRound) =>
-        updateWhere(spark, part, conf, filters, set, leafOnly = true,
-          onRound = onRound, cdcRoot = Some(qroot)))
+    tableRewrite(spark, rootDir, conf, tableSchema, filters, parallelism)((part, qroot) =>
+      updateWhere(spark, part, conf, filters, set, leafOnly = true, cdcRoot = Some(qroot)))
   }
 
+  /** The directory sweep behind [[deleteWhereTable]] and
+   * [[updateWhereTable]]: `perPartition` rewrites one in-scope data
+   * directory, committing on the log of the (qualified) table root it
+   * is given. */
   private def tableRewrite(
       spark: SparkSession,
       rootDir: String,
@@ -151,29 +139,15 @@ object ScbfDelete {
       tableSchema: org.apache.spark.sql.types.StructType,
       filters: Array[Filter],
       parallelism: Int)(
-      perPartition: (String, RewriteRound => Unit) => Seq[RewriteRound]): Unit = {
+      perPartition: (String, Path) => Unit): Unit = {
     require(canDelete(filters),
       s"untranslatable condition: ${filters.mkString(", ")}")
     val root = new Path(rootDir)
-    val fs = root.getFileSystem(conf)
-    val qroot = fs.makeQualified(root)
+    val qroot = root.getFileSystem(conf).makeQualified(root)
     // qualified roots: prune prefix-matches against the listing's
     // qualified paths, so an unqualified caller path would silently
     // no-op the optimization (correctness unaffected — conservative)
     val qroots = ScbfPartitions.qualifiedRoots(Seq(rootDir), conf)
-    def sweepOne(part: Path): Unit = {
-      // root-dir rounds announce themselves in their own commit;
-      // subdirectory rounds re-announce to the root log PER ROUND,
-      // immediately after each round's commit — a crash between a
-      // round's partition-level commit and a deferred whole-partition
-      // announcement would leave no C:1 mark, and a caught-up root
-      // stream's next reconcile would re-deliver the replacement's rows
-      // even under onChangeCommit=skip
-      perPartition(part.toString, r =>
-        ScbfRewrite.announceToRoot(qroot, conf, part, r.published, r.replaced,
-          rowsChanged = true, r.cdcTag, r.removalId))
-      ()
-    }
     // Bounded re-list rounds at the DIRECTORY level, mirroring
     // rewriteRounds' file-level guard: a concurrent INSERT can CREATE
     // a partition directory after the initial listing, and a one-shot
@@ -193,7 +167,7 @@ object ScbfDelete {
       // listing — never a full-table leaf LIST per round. Pure
       // optimization (see scaladoc): over-keeping a directory only
       // costs its listing — the rewrite condition enforces exactness
-      val parents = ScbfPartitions.walk(new Path(rootDir), conf,
+      val parents = ScbfPartitions.walk(root, conf,
         ScbfPartitions.cellPrune(tableSchema, filters.toSeq, qroots))
         .filter(_.holdsData).map(_.dir).filterNot(done).toSeq
       if (parents.isEmpty) return
@@ -203,7 +177,7 @@ object ScbfDelete {
           "rounds; giving up loudly. Directories processed so far are fully " +
           "rewritten and consistent — re-run once the ingest settles.")
       done ++= parents
-      ScbfMaintenance.forEachDir(parents, parallelism)(sweepOne)
+      ScbfMaintenance.forEachDir(parents, parallelism)(part => perPartition(part.toString, qroot))
     }
   }
 
@@ -231,10 +205,9 @@ object ScbfDelete {
       filters: Array[Filter],
       set: Map[String, Column],
       leafOnly: Boolean = false,
-      onRound: RewriteRound => Unit = _ => (),
-      cdcRoot: Option[Path] = None): Seq[RewriteRound] = {
+      cdcRoot: Option[Path] = None): Unit = {
     require(set.nonEmpty, "updateWhere needs at least one SET assignment")
-    rewriteRounds(spark, dir, conf, filters, "UPDATE", leafOnly, onRound, cdcRoot) { (src, cond) =>
+    rewriteRounds(spark, dir, conf, filters, "UPDATE", leafOnly, cdcRoot) { (src, cond) =>
       set.keys.foreach(c => require(src.columns.contains(c),
         s"SET column '$c' does not exist in the table"))
       // ONE projection, not a withColumn chain: SQL UPDATE evaluates every
@@ -260,9 +233,8 @@ object ScbfDelete {
       conf: org.apache.hadoop.conf.Configuration,
       filters: Array[Filter],
       leafOnly: Boolean = false,
-      onRound: RewriteRound => Unit = _ => (),
-      cdcRoot: Option[Path] = None): Seq[RewriteRound] =
-    rewriteRounds(spark, dir, conf, filters, "DELETE", leafOnly, onRound, cdcRoot) { (src, cond) =>
+      cdcRoot: Option[Path] = None): Unit =
+    rewriteRounds(spark, dir, conf, filters, "DELETE", leafOnly, cdcRoot) { (src, cond) =>
       // survivors under SQL three-valued logic: a row is deleted only when
       // cond is TRUE; NULL-condition rows must SURVIVE, and a bare
       // `filter(!cond)` would drop them (NOT NULL = NULL filters out).
@@ -322,15 +294,11 @@ object ScbfDelete {
       // subdirectories another pass owns (double-applied UPDATEs,
       // survivors folded out of their partitions)
       leafOnly: Boolean = false,
-      // invoked after each round fully commits (replacements
-      // published, originals removed) — the table-level path's
-      // per-round root-log re-announcement hook
-      onRound: RewriteRound => Unit = _ => (),
-      // table root the CDC area lives under (ScbfCdc) — per-partition
-      // table-level passes pass the ROOT; a flat call captures at its
-      // own directory
+      // table root the CDC area and the table's discovery log live
+      // under — per-partition table-level passes pass the ROOT; a flat
+      // call uses its own directory
       cdcRoot: Option[Path] = None)(
-      rewrite: (org.apache.spark.sql.DataFrame, Column) => org.apache.spark.sql.DataFrame): Seq[RewriteRound] = {
+      rewrite: (org.apache.spark.sql.DataFrame, Column) => org.apache.spark.sql.DataFrame): Unit = {
     require(canDelete(filters),
       s"untranslatable ${op.toLowerCase} condition: ${filters.mkString(", ")}")
     val cond = filters.flatMap(filterToColumn).reduceOption(_ && _)
@@ -340,14 +308,19 @@ object ScbfDelete {
     // own replacement prefixes (survivor files must never re-enter)
     var accounted = Set.empty[String]
     var ourPrefixes = Set.empty[String]
-    val rounds = Seq.newBuilder[RewriteRound]
     val dfs = new Path(dir).getFileSystem(conf)
     val qdir = dfs.makeQualified(new Path(dir))
+    // the table root: every round snapshots, checks OCC and announces
+    // on its log, which names files relative to it (`k=v/<name>` for a
+    // partition's), and CDC captures under it (ScbfCdc)
+    val qcdc = dfs.makeQualified(cdcRoot.getOrElse(qdir))
+    def rel(f: org.apache.hadoop.fs.FileStatus): String =
+      ScbfCdc.relName(dfs, qcdc, f.getPath)
+    val logPrefix = Some(ScbfCdc.relName(dfs, qcdc, qdir)).filter(_.nonEmpty).fold("")(_ + "/")
     // CDC capture (ScbfCdc): probe once per call; each round is its
     // own commit and gets its own tag. The API paths materialize EXACT
     // change rows — the condition (and for UPDATE, the rewrite
     // projection) is in hand, so no value-diffing is needed.
-    val qcdc = dfs.makeQualified(cdcRoot.getOrElse(qdir))
     val cdcOn = ScbfCdc.enabled(qcdc, conf)
     def cdcRowSets(src: org.apache.spark.sql.DataFrame)
         : Seq[(String, org.apache.spark.sql.DataFrame)] = {
@@ -365,29 +338,34 @@ object ScbfDelete {
     val listCandidates: () => Seq[org.apache.hadoop.fs.FileStatus] =
       if (leafOnly) () => ScbfRewrite.ownFiles(qdir, conf)
       else () => ScbfDataSource.resolveFiles(Seq(dir), conf)
-    // Each round plans from a snapshot (ScbfRewrite.snapshot): its OCC
-    // position BEFORE its listing, so anything stamped after it
-    // committed concurrently with the round. Recorded victims are dead
-    // bytes, excluded from the round's whole universe (the empty-table
-    // guard's included) and healed once stale; listCandidates is
-    // unpruned, so it is its own universe. The full chain replays once
-    // per operation: each later round extends the victims with the
-    // commits its predecessor's recheck replayed.
-    var snap = ScbfRewrite.snapshot(where, qdir, conf, listCandidates,
-      probeFs = false, heal = true)
+    // files no earlier round listed, ours excluded
+    def unseen(fs: Seq[org.apache.hadoop.fs.FileStatus]) = fs.filterNot(f =>
+      accounted.contains(f.getPath.getName) || ourPrefixes.exists(f.getPath.getName.startsWith))
     var round = 0
     while (true) {
       round += 1
-      val occ = new ScbfRewrite.Occ(where, qdir, conf, snap.position)
+      // a later round first lists the directory alone: when no file
+      // arrived since the last round's listing, nothing new is in scope
+      // and the table's log need not be read
+      if (round > 1 && unseen(listCandidates()).isEmpty) return
+      // Each round plans from a fresh snapshot (ScbfRewrite.snapshot) of
+      // the root's log: its OCC position BEFORE its listing, so anything
+      // stamped after it committed concurrently with the round. Recorded
+      // victims are dead bytes, excluded from the round's whole universe
+      // (the empty-table guard's included) and healed once stale;
+      // listCandidates is unpruned, so it is its own universe. The
+      // root's replay cursor makes a later round's snapshot cost only
+      // the deltas published since the last replay.
+      val snap = ScbfRewrite.snapshot(where, qcdc, conf, listCandidates,
+        probeFs = false, heal = true)
+      val occ = new ScbfRewrite.Occ(where, qcdc, conf, snap.position)
       val listed = snap.files
-      val candidates = listed
-        .filterNot(f => accounted.contains(f.getPath.getName) ||
-          ourPrefixes.exists(f.getPath.getName.startsWith))
+      val candidates = unseen(listed)
       accounted ++= candidates.map(_.getPath.getName)
       val pruner = new ScbfStats.Pruner(conf, filters.toSeq)
       val affected = pruner.keepAll(candidates)(_.getPath, _.getLen)
       raceHook()
-      if (affected.isEmpty) return rounds.result() // nothing new in scope: done
+      if (affected.isEmpty) return // nothing new in scope: done
       if (round > MaxRewriteRounds) throw new graft.scbf.ScbfFormatException(
         s"$op on $dir: concurrent appends kept publishing in-scope files " +
           s"through $MaxRewriteRounds re-list rounds; giving up loudly. " +
@@ -422,12 +400,13 @@ object ScbfDelete {
             affected.size == listed.size)
           Seq(affected.minBy(_.getLen))
         else rewriteSet0
-      val affectedNames = affected.map(_.getPath.getName).toSet
+      val affectedNames = affected.map(rel).toSet
       val removalId = prefix.stripSuffix("-")
-      val removalName = s"$removalId${ScbfDiscovery.RemovalSuffix}"
+      val removalName = s"$logPrefix$removalId${ScbfDiscovery.RemovalSuffix}"
+      // this operation's log entries, of any round: replacements and
+      // REMOVAL entries, all named after a round's prefix
       def selfName(n: String): Boolean =
-        n == removalName || ourPrefixes.exists(p =>
-          n.startsWith(p) || n.startsWith(p.stripSuffix("-")))
+        ourPrefixes.exists(p => n.startsWith(logPrefix + p.stripSuffix("-")))
       occ.checkBeforePublish(affectedNames, selfName)
       prePublishHook()
       val tag = if (cdcOn) Some(ScbfCdc.newTag(op.toLowerCase(java.util.Locale.ROOT))) else None
@@ -461,65 +440,46 @@ object ScbfDelete {
         val rewriteNames = rewriteSet.map(_.getPath.getName).toSet
         val whole = affected.filterNot(f => rewriteNames(f.getPath.getName))
         if (whole.nonEmpty) // DELETE-only by construction (fast path)
-          ScbfCdc.recordWhole(dfs, qcdc, t,
-            whole.map(f => ScbfCdc.relName(dfs, qcdc, f.getPath)))
+          ScbfCdc.recordWhole(dfs, qcdc, t, whole.map(rel))
       }
       if (srcOpt.isDefined) {
         // the connector's own append path (task-commit publish,
         // sidecars, manifest merge — a failure aborts with originals
-        // untouched), announcing the replacements as rewrites of ALL
-        // affected names, tagged row-changing (C:1) so a caught-up
-        // log-path stream applies its onChangeCommit policy
+        // untouched), announcing the replacements on the root's log as
+        // rewrites of ALL affected names, tagged row-changing (C:1) so
+        // a caught-up log-path stream applies its onChangeCommit policy
         val w = rewrite(srcOpt.get, cond).write.format("scbf").mode("append")
           .option("filePrefix", prefix)
           .option("rewriteOfNames", affected.map(_.getPath.getName).mkString(","))
-        tag.foreach(t => w.option("cdcTag", t).option("cdcRoot", qcdc.toString))
+          .option("cdcRoot", qcdc.toString)
+        tag.foreach(t => w.option("cdcTag", t))
         w.save(dir)
-      } else if (ScbfDiscovery.exists(new Path(dir), conf)) {
+      } else if (ScbfDiscovery.exists(qcdc, conf)) {
         // METADATA-ONLY round: every victim was dropped whole and no
         // replacement publishes, so a REMOVAL entry announces the
         // change (log-path consumers get the same onChangeCommit
         // semantics) while the takedown stays zero-data-IO. Gated on
         // the log existing — CREATING a log here would flip a log-less
         // table's streams from listing mode to a log that omits every
-        // other file. The tag goes only on the log AT the CDC root (the
-        // table-level root re-announcement carries it there).
-        ScbfDiscovery.append(new Path(dir), conf, Seq(ScbfRewrite.removalEntry(
-          removalId, affected.map(_.getPath.getName),
-          cdcTag = if (qcdc == qdir) tag else None)))
+        // other file.
+        ScbfDiscovery.append(qcdc, conf, Seq(ScbfRewrite.removalEntry(
+          s"$logPrefix$removalId", affected.map(rel), tag)))
       }
       } finally if (tag.isDefined) srcOpt.foreach(_.unpersist())
       postPublishHook()
-      // the next round's position, BEFORE the replay that extends its
-      // victims: that replay then covers every commit up to it
-      val nextPosition = ScbfRewrite.position(where, qdir, conf)
-      // ONE bounded replay serves the recheck, this round's own
-      // published (name, length) pairs (the write announced them, so
-      // they are post-snapshot entries carrying our prefix) and the
-      // next round's victims; an unreadable replay re-derives our names
-      // from the round's prefix by one listing, for the rollback
-      val checked = occ.recheckAfterPublish(affectedNames, selfName,
+      // the recheck's replay names this round's published outputs (the
+      // write announced them under our prefix); an unreadable replay
+      // re-derives them from the prefix by one listing, for the rollback
+      val ours = logPrefix + prefix
+      occ.recheckAfterPublish(affectedNames, selfName,
         published = {
-          case Some(post) => post.map(_._1.name).filter(_.startsWith(prefix)).toSet
-          case None => ScbfDataSource.resolveFiles(Seq(dir), conf)
-            .map(_.getPath.getName).filter(_.startsWith(prefix)).toSet
+          case Some(post) => post.map(_._1.name).filter(_.startsWith(ours)).toSet
+          case None => ScbfRewrite.ownFiles(qdir, conf).map(rel).filter(_.startsWith(ours)).toSet
         },
         alsoScrub = Set(removalName), cdc = tag.map((qcdc, _)))
-      // no chain at the snapshot: the recheck replayed nothing, and the
-      // log this round created is young and cheap to replay whole
-      val since =
-        if (snap.position.isDefined) checked
-        else ScbfRewrite.allEntries(where, qdir, conf)
       val victims = affected.map(_.getPath)
       ScbfRewrite.removeVictims(dfs, victims, retainAt = tag.map((qcdc, _)))
       ScbfRewrite.dropFromManifests(conf, victims)
-      val round_ = RewriteRound(affected.map(_.getPath.getName), tag,
-        since.collect { case (e, _) if e.name.startsWith(prefix) => e.name -> e.len },
-        removalId = if (srcOpt.isEmpty) Some(removalId) else None)
-      rounds += round_
-      onRound(round_)
-      snap = snap.extend(where, qdir, conf, nextPosition, since, listCandidates)
     }
-    rounds.result() // unreachable; the while(true) exits via return
   }
 }

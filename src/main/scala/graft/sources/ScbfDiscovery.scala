@@ -16,8 +16,9 @@ import org.apache.hadoop.fs.Path
  * trigger forever, see BENCH_NOTES round-6 "listing-bound" measurement).
  *
  * Layout: `<table>/.scbf.discovery/` (dot-prefixed — invisible to the
- * data-file listing and to reference tooling, like the stats sidecars)
- * holding small immutable DELTA files, one appended per committing
+ * data-file listing and to reference tooling, like the stats sidecars;
+ * a partitioned table has one, at its root, naming files relative to
+ * it) holding small immutable DELTA files, one appended per committing
  * write (batch job commit, streaming epoch commit). Each delta lists
  * the files that commit published as `name\tlen\tmtime` lines under a
  * `discovery\t1` header, published via an atomic exclusive-create of
@@ -362,15 +363,17 @@ object ScbfDiscovery extends org.apache.spark.internal.Logging {
     }
 
   /** Append one delta announcing `entries`, then fold the log if it has
-   * grown past [[CompactThreshold]]. Failures are swallowed (log
+   * grown past [[CompactThreshold]] (counted on the listing the append
+   * won its ordinal on: a delta another writer published meanwhile
+   * triggers the fold at its own append). Failures are swallowed (log
    * scaladoc: discovery must never fail a committed write — the files
    * ARE published; a missed announcement is repaired by the consumer's
    * reconcile listing). */
   def append(table: Path, conf: Configuration, entries: Seq[Entry]): Unit =
     try {
-      if (entries.nonEmpty && writeDelta(table, conf, entries).isDefined) {
+      if (entries.nonEmpty) writeDelta(table, conf, entries).foreach { deltas =>
         deltaAppends.incrementAndGet()
-        if (listDeltas(table, conf).size > CompactThreshold) compact(table, conf)
+        if (deltas > CompactThreshold) compact(table, conf)
       }
     } catch { case NonFatal(_) => /* best-effort — see scaladoc */ }
 
@@ -810,8 +813,9 @@ object ScbfDiscovery extends org.apache.spark.internal.Logging {
     }.maxOption.getOrElse(0) + 1
   }
 
-  /** Write one delta via the ordinal-CAS protocol. Returns the
-   * published name, or None when the CAS lost [[MaxCasAttempts]]
+  /** Write one delta via the ordinal-CAS protocol. Returns the number
+   * of deltas the log holds with it, as the listing it won on showed
+   * them, or None when the CAS lost [[MaxCasAttempts]]
    * times (pathological contention — the best-effort announce
    * contract applies: files are published, reconcile repairs).
    * `foldLast` (folds only): the max CLAIMED ordinal the fold covers —
@@ -821,7 +825,7 @@ object ScbfDiscovery extends org.apache.spark.internal.Logging {
    * deltas by name). */
   private def writeDelta(table: Path, conf: Configuration, entries: Seq[Entry],
       foldSpan: Int = 0, preserveTs: Boolean = false,
-      foldLast: Int = -1): Option[String] = {
+      foldLast: Int = -1): Option[Int] = {
     val d = dir(table)
     val fs = d.getFileSystem(conf)
     fs.mkdirs(d)
@@ -887,14 +891,14 @@ object ScbfDiscovery extends org.apache.spark.internal.Logging {
       val body = if (foldSpan > 0) stamped.sortBy(e => (e.ts, e.name)) else stamped
       val tmp = new Path(d,
         s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
-        (Header +: body.map(e => s"${e.name}\t${e.len}\t${e.ts}" +
+      val bytes = (Header +: body.map(e => s"${e.name}\t${e.len}\t${e.ts}" +
           (if (e.rewriteOf.isEmpty) "" else s"\tR:${e.rewriteOf.mkString(",")}") +
           (if (e.rowsChanged) "\tC:1" else "") +
           e.cdcTag.fold("")(t => s"\tD:$t") +
           e.commitVersion.fold("")(v => s"\tV:$v")))
-          .mkString("\n").getBytes(UTF_8))
+          .mkString("\n").getBytes(UTF_8)
+      val out = fs.create(tmp, true)
+      try out.write(bytes)
       finally out.close()
       if (attempt == 1) casRaceHook()
       val won = publishExclusive(fs, tmp, new Path(d, name))
@@ -905,9 +909,13 @@ object ScbfDiscovery extends org.apache.spark.internal.Logging {
         // DESCRIBE instants) without a content read. Best-effort — a
         // lost marker degrades those to one small read, never to
         // wrong results.
-        try fs.create(new Path(d, markerName(name, millis)), true).close()
-        catch { case NonFatal(_) => () }
-        return Some(name)
+        val marked =
+          try { fs.create(new Path(d, markerName(name, millis)), true).close(); true }
+          catch { case NonFatal(_) => false }
+        if (isNewCommit)
+          extendCursor(table, conf, listing, name, bytes.length,
+            Some(millis).filter(_ => marked), stamped)
+        return Some(listing.deltas.size + 1)
       }
       // lost the CAS: another writer owns this name
       if (foldSpan > 0) gen += 1 // an identical-range fold exists
@@ -1369,80 +1377,181 @@ object ScbfDiscovery extends org.apache.spark.internal.Logging {
     if (at < 0 || colon < at) 0L else key.substring(at + 1, colon).toLong
   }
 
+  /** One listing of `qroot`'s log handed to `replay`, re-listed and
+   * retried when a delta vanishes mid-replay (a concurrent compaction
+   * folded it into a delta this listing predates). An empty log, or a
+   * chain still unreadable after 3 attempts, refuses. */
+  private def withListing[T](qroot: Path, conf: Configuration,
+      refuse: String => Nothing, attempt: Int = 1)(replay: LogListing => T): T = {
+    val listing = listLog(qroot, conf)
+    if (listing.deltas.isEmpty)
+      refuse("the discovery log is empty or unlistable — there is no " +
+        "recorded history to replay (a crashed overwrite, a swept log, or " +
+        "a transient filesystem error). Retry, or resync from a full read.")
+    try replay(listing)
+    catch {
+      case _: java.io.IOException if attempt < 3 =>
+        withListing(qroot, conf, refuse, attempt + 1)(replay)
+      case e: java.io.IOException =>
+        refuse("the delta chain could not be replayed after 3 attempts " +
+          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — concurrent " +
+          "compactions kept changing it, or the filesystem is failing; " +
+          "retry the read.")
+    }
+  }
+
+  /** Serve listed delta `n`'s entries to `f`, strictly. Small deltas
+   * (≤ CacheMaxDeltaBytes) serve from / fill the per-delta parse cache:
+   * deltas are content-immutable once published, so repeated replays
+   * stop re-reading the same bytes. An oversized SORTED fold bisects
+   * to its first line stamped after `lo` instead of streaming the
+   * whole re-announced history — the replay's BYTE cost stays
+   * O(changes) even across compactions (pre-round-13 unmarked folds
+   * read whole) — and stays out of driver memory. */
+  private def consult(qroot: Path, conf: Configuration, listing: LogListing,
+      n: String, lo: Long)(f: Entry => Unit): Unit =
+    cacheKey(qroot, n, listing) match {
+      case Some(key) =>
+        val hit = entryCache.get(key)
+        if (hit != null) {
+          // a cache hit still counts as a delta CONSULTATION:
+          // deltaReads is the bounded-access contract every REQUIRE
+          // pin and scale spec asserts on ("read ONLY the N post-start
+          // deltas"), and that contract is about which deltas a replay
+          // touches, not whether the bytes came from disk —
+          // deltaCacheHits carries the physical-IO saving separately
+          deltaReads.incrementAndGet()
+          deltaCacheHits.incrementAndGet()
+          hit._2.foreach(f)
+        } else readThroughCache(qroot, conf, n, key)(f)
+      case None =>
+        if (isSortedFold(n)) readSortedFoldFrom(qroot, conf, n, lo)(f)
+        else readDeltaStream(qroot, conf, n, strict = true)(f)
+    }
+
   private[sources] def replayAfterWithSources(qroot: Path, conf: Configuration,
-      lo: Long, refuse: String => Nothing): Replay = {
-    val firstAt = scala.collection.mutable.HashMap.empty[String, Entry]
-    val deltaOf = scala.collection.mutable.HashMap.empty[String, String]
-    var attempt = 0
-    var replayed = false
-    while (!replayed) {
-      attempt += 1
-      firstAt.clear(); deltaOf.clear()
-      val listing = listLog(qroot, conf)
-      if (listing.deltas.isEmpty)
-        refuse("the discovery log is empty or unlistable — there is no " +
-          "recorded history to replay (a crashed overwrite, a swept log, or " +
-          "a transient filesystem error). Retry, or resync from a full read.")
-      try {
-        // subsume: a delta whose claimed range another covers is
-        // pending deletion; its only divergent content is entries a
-        // scrub REMOVED — reading it would resurrect them
-        subsume(listing.deltas.sorted)
-          // early-stop: a delta published at or before `lo` cannot
-          // hold post-lo entries (v1: name millis; v2: the tsb-
-          // marker; a markerless crashed delta has no bound → read it)
-          .filter(n => listing.instants.get(n).forall(_ > lo))
-          .foreach { n =>
-            def admit(e: Entry): Unit =
-              if (e.ts > lo) {
-                val cur = firstAt.get(e.name)
-                if (cur.isEmpty || cur.get.ts > e.ts) {
-                  firstAt(e.name) = e
-                  deltaOf(e.name) = n
-                }
+      lo: Long, refuse: String => Nothing): Replay =
+    withListing(qroot, conf, refuse) { listing =>
+      val firstAt = scala.collection.mutable.HashMap.empty[String, Entry]
+      val deltaOf = scala.collection.mutable.HashMap.empty[String, String]
+      // subsume: a delta whose claimed range another covers is pending
+      // deletion; its only divergent content is entries a scrub
+      // REMOVED — reading it would resurrect them
+      subsume(listing.deltas.sorted)
+        // early-stop: a delta published at or before `lo` cannot hold
+        // post-lo entries (v1: name millis; v2: the tsb- marker; a
+        // markerless crashed delta has no bound → read it)
+        .filter(n => listing.instants.get(n).forall(_ > lo))
+        .foreach { n =>
+          consult(qroot, conf, listing, n, lo) { e =>
+            if (e.ts > lo) {
+              val cur = firstAt.get(e.name)
+              if (cur.isEmpty || cur.get.ts > e.ts) {
+                firstAt(e.name) = e
+                deltaOf(e.name) = n
               }
-            // a SORTED fold bisects to the first post-lo line instead
-            // of streaming the whole re-announced history — the
-            // replay's BYTE cost stays O(changes) even across
-            // compactions (pre-round-13 unmarked folds read whole).
-            // Small deltas (≤ CacheMaxDeltaBytes) serve from / fill
-            // the per-delta parse cache: deltas are content-immutable
-            // once published, so repeated replays (one per mutation
-            // statement: recordedVictims + OCC snapshot + recheck)
-            // stop re-reading the same bytes — O(new deltas) IO per
-            // statement instead of O(chain). Oversized folds keep the
-            // bisect path and stay out of driver memory.
-            cacheKey(qroot, n, listing) match {
-              case Some(key) =>
-                val hit = entryCache.get(key)
-                if (hit != null) {
-                  // a cache hit still counts as a delta CONSULTATION:
-                  // deltaReads is the bounded-access contract every
-                  // REQUIRE pin and scale spec asserts on ("read ONLY
-                  // the N post-start deltas"), and that contract is
-                  // about which deltas a replay touches, not whether
-                  // the bytes came from disk — deltaCacheHits carries
-                  // the physical-IO saving separately
-                  deltaReads.incrementAndGet()
-                  deltaCacheHits.incrementAndGet()
-                  hit._2.foreach(admit)
-                } else readThroughCache(qroot, conf, n, key)(admit)
-              case None =>
-                if (isSortedFold(n)) readSortedFoldFrom(qroot, conf, n, lo)(admit)
-                else readDeltaStream(qroot, conf, n, strict = true)(admit)
             }
           }
-        replayed = true
-      } catch {
-        case _: java.io.IOException if attempt < 3 => // re-list
-        case e: java.io.IOException =>
-          refuse("the delta chain could not be replayed after 3 attempts " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}) — concurrent " +
-            "compactions kept changing it, or the filesystem is failing; " +
-            "retry the read.")
-      }
+        }
+      Replay(firstAt, deltaOf)
     }
-    Replay(firstAt, deltaOf)
+
+  // ---- per-root REPLAY CURSOR (OCC) ----------------------------------
+  //
+  // Every copy-on-write statement replays its table root's log two to
+  // four times (the snapshot's recorded victims, the pre-publish check,
+  // the post-publish recheck, a later round's snapshot). The chain a
+  // replay has seen is kept per qualified root, so the next replay
+  // consults only the deltas published since, and this process's own
+  // commits extend it without a read (reuse what the session already
+  // knows). A chain is identified delta by delta by (name, length,
+  // publication instant): a fold, scrub or reset changes some delta's
+  // identity — a reset even reuses ordinal names, which the instant
+  // tells apart — and the replay then starts over. Only the OCC
+  // replays use it; change-feed, CDC and history replays keep
+  // [[replayAfterWithSources]]. Bounded in total by CacheMaxTotalBytes
+  // of delta bytes (least recently used cursors go first); a root
+  // whose chain alone exceeds it replays as above.
+
+  /** A replayed chain: its deltas' identities, oldest-first, and each
+   * name's first announcement with its source delta. */
+  private final case class Cursor(chain: Vector[(String, Long, Option[Long])],
+      firstAt: Map[String, (Entry, String)]) {
+    val bytes: Long = chain.iterator.map(_._2).sum
+  }
+
+  private def admit(firstAt: Map[String, (Entry, String)], e: Entry,
+      delta: String): Map[String, (Entry, String)] =
+    if (firstAt.get(e.name).exists(_._1.ts <= e.ts)) firstAt
+    else firstAt.updated(e.name, (e, delta))
+
+  private val cursorBytes = new AtomicLong(0)
+  private val cursors =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[String, Cursor](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, Cursor]): Boolean =
+          if (cursorBytes.get > CacheMaxTotalBytes) {
+            cursorBytes.addAndGet(-e.getValue.bytes); true
+          } else false
+      })
+
+  private def cursorKey(table: Path, conf: Configuration): String =
+    table.getFileSystem(conf).makeQualified(table).toString
+
+  private def chainOf(listing: LogListing): Vector[(String, Long, Option[Long])] =
+    subsume(listing.deltas.sorted).iterator
+      .map(n => (n, listing.lens.getOrElse(n, 0L), listing.instants.get(n))).toVector
+
+  private def keep(key: String, c: Cursor): Unit =
+    if (c.bytes > CacheMaxTotalBytes)
+      Option(cursors.remove(key)).foreach(old => cursorBytes.addAndGet(-old.bytes))
+    else {
+      cursorBytes.addAndGet(c.bytes)
+      Option(cursors.put(key, c)).foreach(old => cursorBytes.addAndGet(-old.bytes))
+    }
+
+  /** The entries of `qroot`'s log stamped after `lo`, each with its
+   * source delta — [[replayAfterWithSources]]'s answer, from the root's
+   * replay cursor: when the cursor's chain is a prefix of the listed
+   * one, only the deltas past it are consulted (and counted in
+   * `deltaReads`); otherwise the chain replays whole and replaces the
+   * cursor. A name announced twice keeps its first announcement, after
+   * `lo` or not (names are never reused). Refuses like
+   * [[replayAfterWithSources]]. */
+  private[sources] def occReplay(qroot: Path, conf: Configuration, lo: Long,
+      refuse: String => Nothing): Seq[(Entry, String)] = {
+    val key = cursorKey(qroot, conf)
+    withListing(qroot, conf, refuse) { listing =>
+      val chain = chainOf(listing)
+      if (chain.iterator.map(_._2).sum > CacheMaxTotalBytes) None
+      else {
+        val base = Option(cursors.get(key)).filter(c => chain.startsWith(c.chain))
+          .getOrElse(Cursor(Vector.empty, Map.empty))
+        var firstAt = base.firstAt
+        chain.drop(base.chain.size).foreach { case (n, _, _) =>
+          consult(qroot, conf, listing, n, Long.MinValue)(e => firstAt = admit(firstAt, e, n))
+        }
+        keep(key, Cursor(chain, firstAt))
+        Some(firstAt.valuesIterator.filter(_._1.ts > lo).toSeq)
+      }
+    }.getOrElse {
+      val r = replayAfterWithSources(qroot, conf, lo, refuse)
+      r.firstAt.iterator.map { case (n, e) => (e, r.deltaOf(n)) }.toSeq
+    }
+  }
+
+  /** A new commit this process published as `name` on top of the chain
+   * `listing` showed: when that chain is the cursor's (an empty log's
+   * is the empty cursor), the cursor takes the commit's entries without
+   * reading them back. */
+  private def extendCursor(table: Path, conf: Configuration, listing: LogListing,
+      name: String, len: Long, instant: Option[Long], entries: Seq[Entry]): Unit = {
+    val key = cursorKey(table, conf)
+    val c = Option(cursors.get(key)).getOrElse(Cursor(Vector.empty, Map.empty))
+    if (c.chain == chainOf(listing))
+      keep(key, Cursor(c.chain :+ ((name, len, instant)),
+        entries.foldLeft(c.firstAt)(admit(_, _, name))))
   }
 
   /** Pooled per-file stats over log entries (an as-of rendering or a
@@ -1583,13 +1692,12 @@ object ScbfDiscovery extends org.apache.spark.internal.Logging {
       ord += span
     }
     val span = names.iterator.map(versionSpan).sum
-    val published =
-      if (union.isEmpty) Some("")
-      else writeDelta(table, conf, union.values.toSeq,
+    val published = union.isEmpty ||
+      writeDelta(table, conf, union.values.toSeq,
         foldSpan = math.max(span, 1),
         foldLast = math.max(span - 1,
-          raw.flatMap(claimedLast).maxOption.getOrElse(-1)))
-    if (published.isEmpty) return // lost the fold CAS — someone else folded
+          raw.flatMap(claimedLast).maxOption.getOrElse(-1))).isDefined
+    if (!published) return // lost the fold CAS — someone else folded
     val d = dir(table)
     val fs = d.getFileSystem(conf)
     val listing = listLog(table, conf)

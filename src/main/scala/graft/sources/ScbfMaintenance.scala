@@ -47,8 +47,11 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
   /**
    * The one snapshot rewrite behind [[cluster]], [[compact]] and
    * [[zorder]]: refuse on a clone; take the rewrite snapshot of the
-   * directory's own files ([[ScbfRewrite.snapshot]]: the OCC position
-   * BEFORE the listing, passed to the overwrite as `occSnapTs` so the
+   * directory's own files on the table root's log (`cdcRoot` for a
+   * partition, the directory itself otherwise — a partitioned table
+   * has one log, at its root) ([[ScbfRewrite.snapshot]]: the OCC
+   * position BEFORE the listing, passed to the overwrite as
+   * `occSnapTs` so the
    * conflict check runs at the COMMIT INSTANT — a concurrent DELETE
    * landing anywhere in the rewrite job aborts the rewrite instead of
    * having its removed rows resurrected; the listing rewrite-
@@ -79,9 +82,9 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    *
    * `plan` sees the snapshot and returns the shaping step, or None when
    * there is nothing worth rewriting. Returns the names folded into the
-   * rewrite, empty when skipped. The overwrite's commit marks exactly
-   * this set as replaced, in the directory's log and, for a partition
-   * (`cdcRoot` set), in the root's ([[ScbfRewrite.announceToRoot]]).
+   * rewrite, empty when skipped. The overwrite's commit checks OCC on
+   * the root's log and marks exactly this set as replaced there, under
+   * root-relative names.
    */
   private def rewriteSnapshot(spark: SparkSession, dir: String, what: String,
       numFiles: Int, maxBufferedBytes: Option[Long], filePrefix: Option[String],
@@ -93,7 +96,8 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     val p = new org.apache.hadoop.fs.Path(dir)
     ScbfClone.refuseIfClone(p, conf, s"OPTIMIZE ($what)")
     val q = p.getFileSystem(conf).makeQualified(p)
-    val snap = ScbfRewrite.snapshot(s"maintenance rewrite on $dir", q, conf,
+    val root = q.getFileSystem(conf).makeQualified(new org.apache.hadoop.fs.Path(cdcRoot.getOrElse(dir)))
+    val snap = ScbfRewrite.snapshot(s"maintenance rewrite on $dir", root, conf,
       () => ScbfRewrite.ownFiles(q, conf), probeFs = false, heal = true)
     val snapshot = snap.files
     // a freshly-created (or fully-truncated) directory has nothing to
@@ -120,9 +124,9 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * is skipped ([[rewriteSnapshot]]). Returns the names folded in.
    *
    * Per-partition maintenance rewrites pass the table root as
-   * `cdcRoot`: the partition commit tags itself and retains its victims
-   * under the root's CDC area ([[ScbfCdc]]), and re-announces itself to
-   * the root's log with that tag — a flat rewrite needs neither. */
+   * `cdcRoot`: the partition rewrite snapshots, checks and announces on
+   * the root's log (the table's one log), and tags itself and retains
+   * its victims under the root's CDC area ([[ScbfCdc]]). */
   def cluster(
       spark: SparkSession,
       dir: String,
@@ -183,15 +187,15 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Table-level [[compact]] — every partition swept, root-log
-   * re-announced; same contract as [[clusterTable]]. */
+  /** Table-level [[compact]] — every partition swept, each committing
+   * on the root's log; same contract as [[clusterTable]]. */
   def compactTable(
       spark: SparkSession,
       dir: String,
       numFilesPerPartition: Int,
       maxBufferedBytes: Option[Long] = None,
       parallelism: Int = 1): Seq[String] =
-    sweepPartitions(spark, dir, parallelism) { (part, prefix) =>
+    sweepPartitions(spark, dir, numFilesPerPartition, parallelism) { (part, prefix) =>
       compact(spark, part, numFilesPerPartition, maxBufferedBytes,
         Some(prefix), cdcRoot = Some(dir))
     }.map(_._1)
@@ -296,20 +300,23 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
    * completion before the first failure surfaces (nothing is left
    * running in the background). Either way re-running is always safe,
    * and cheap where nothing changed: a partition already at one file
-   * with a one-file target is skipped without a job or a commit
-   * ([[rewriteSnapshot]]); any other partition re-clusters.
+   * with a one-file target is skipped without a job or a commit, and,
+   * when the sweep's walk listed it at one file, without reading the
+   * table's log ([[rewriteSnapshot]] skips the rest); any other
+   * partition re-clusters.
    *
-   * Stream transparency at the ROOT: each partition's commit
-   * re-announces its outputs to the ROOT log
-   * ([[ScbfRewrite.announceToRoot]]), so a caught-up root stream admits
-   * them seen-without-delivery exactly like a root-level OPTIMIZE. A
+   * One log per table: each partition's rewrite snapshots, checks OCC
+   * and announces its outputs on the ROOT log under root-relative
+   * names, so it sees every other writer of the table (INSERT, DELETE,
+   * SQL UPDATE/MERGE) and a caught-up root stream admits the outputs
+   * seen-without-delivery exactly like a root-level OPTIMIZE. A
    * skipped partition published nothing and announces nothing.
    *
    * `parallelism` runs that many partition rewrites as CONCURRENT
    * Spark jobs from driver threads — partitions are disjoint
-   * directories (independent snapshots, manifests, logs; the root-log
-   * append is atomic-rename per unique delta), so the only shared
-   * resource is cluster capacity. A per-partition rewrite of a small
+   * directories (independent snapshots and manifests; each root-log
+   * append is its own ordinal-CAS delta), so the only shared resource
+   * is cluster capacity. A per-partition rewrite of a small
    * partition is dominated by fixed job overhead; a sweep of 10³
    * partitions serializing that overhead would make table maintenance
    * O(partitions) wall-clock for no reason. Returns the partition
@@ -322,13 +329,13 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       numFilesPerPartition: Int,
       maxBufferedBytes: Option[Long] = None,
       parallelism: Int = 1): Seq[String] =
-    sweepPartitions(spark, dir, parallelism) { (part, prefix) =>
+    sweepPartitions(spark, dir, numFilesPerPartition, parallelism) { (part, prefix) =>
       cluster(spark, part, clusterCols, numFilesPerPartition,
         maxBufferedBytes, Some(prefix), cdcRoot = Some(dir))
     }.map(_._1)
 
   /** Table-level [[zorder]] — the multi-dimensional [[clusterTable]];
-   * same per-partition sweep, same root-log re-announcement. */
+   * same per-partition sweep on the root's log. */
   def zorderTable(
       spark: SparkSession,
       dir: String,
@@ -337,7 +344,7 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       bits: Int = 8,
       maxBufferedBytes: Option[Long] = None,
       parallelism: Int = 1): Seq[String] =
-    sweepPartitions(spark, dir, parallelism) { (part, prefix) =>
+    sweepPartitions(spark, dir, numFilesPerPartition, parallelism) { (part, prefix) =>
       zorder(spark, part, zCols, numFilesPerPartition, bits,
         maxBufferedBytes, Some(prefix), cdcRoot = Some(dir))
     }.map(_._1)
@@ -354,14 +361,14 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
       else if (cols.isEmpty) compact(spark, d, files, None, prefix, root)
       else cluster(spark, d, cols, files, None, prefix, root)
     if (!partitioned) one(dir, None, None).size
-    else sweepPartitions(spark, dir, parallelism)((part, prefix) =>
+    else sweepPartitions(spark, dir, files, parallelism)((part, prefix) =>
       one(part, Some(prefix), Some(dir))).map(_._2).sum
   }
 
   /** Each partition directory of `dir` with the number of files its
    * rewrite folded in. */
-  private def sweepPartitions(spark: SparkSession, dir: String, parallelism: Int)(
-      rewrite: (String, String) => Seq[String]): Seq[(String, Int)] = {
+  private def sweepPartitions(spark: SparkSession, dir: String, numFiles: Int,
+      parallelism: Int)(rewrite: (String, String) => Seq[String]): Seq[(String, Int)] = {
     require(parallelism >= 1, s"parallelism must be >= 1, got $parallelism")
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -374,9 +381,15 @@ object ScbfMaintenance extends org.apache.spark.internal.Logging {
     // unpruned walk of the whole tree, counted as the full-table
     // listing it is
     ScbfDataSource.listings.incrementAndGet()
-    val parts = ScbfPartitions.walk(root, conf).filter(_.holdsData).map(_.dir).toSeq
-    forEachDir(parts, parallelism)(part => part.toString ->
-      rewrite(part.toString, s"opt-${java.util.UUID.randomUUID().toString.take(8)}-").size)
+    val parts = ScbfPartitions.walk(root, conf).filter(_.holdsData).toSeq
+    // a directory the walk listed at one file, with a one-file target,
+    // is skipped without a snapshot of the table's log: its live view
+    // can only be that file or nothing, both skipped by rewriteSnapshot
+    val oneFile = if (numFiles != 1) Set.empty[org.apache.hadoop.fs.Path]
+      else parts.filter(_.dataFiles.size == 1).map(_.dir).toSet
+    forEachDir(parts.map(_.dir), parallelism)(part => part.toString ->
+      (if (oneFile(part)) 0
+       else rewrite(part.toString, s"opt-${java.util.UUID.randomUUID().toString.take(8)}-").size))
   }
 
   /** Run `f` over independent directories with up to `parallelism`

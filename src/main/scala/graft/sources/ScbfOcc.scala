@@ -9,7 +9,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * ([[ScbfRewrite]], through which the API rewrites, SQL row-level
  * operations and OPTIMIZE all commit): the replay, the conflict
  * rule, recorded-victim deadness, the refusal text and the rollback
- * file-cleanup.
+ * file-cleanup. A table has ONE log, at its root: every commit into
+ * any of its partition directories checks and announces there, under
+ * root-relative names, so every writer's check sees every other's
+ * commits.
  *
  * The rule: a commit stamped after the mutation's snapshot that names
  * one of its VICTIMS in `rewriteOf` raced it. A commit that names the
@@ -45,10 +48,7 @@ private[sources] object ScbfOcc extends org.apache.spark.internal.Logging {
   def entriesAfter(qroot: Path, conf: Configuration, snapTs: Long,
       refuse: String => Nothing): Seq[(ScbfDiscovery.Entry, String)] =
     if (!ScbfDiscovery.exists(qroot, conf)) Seq.empty
-    else {
-      val r = ScbfDiscovery.replayAfterWithSources(qroot, conf, snapTs, refuse)
-      r.firstAt.iterator.map { case (n, e) => (e, r.deltaOf(n)) }.toSeq
-    }
+    else ScbfDiscovery.occReplay(qroot, conf, snapTs, refuse)
 
   /** A post-snapshot entry's commit ordinal: its source delta's
    * claimed ordinal (v2 names), or — when a concurrent compaction
@@ -112,10 +112,13 @@ private[sources] object ScbfOcc extends org.apache.spark.internal.Logging {
    * rewrite entry predates the racer's snapshot). Exclusion by the
    * log's own record closes it exactly.
    *
-   * Cost: one strict full-chain replay per TABLE-LEVEL operation
-   * (compaction bounds the chain at ~[[ScbfDiscovery.CompactThreshold]]
-   * deltas; the fold read is O(history entries) — Delta's
-   * checkpoint-read bill, paid by mutations only, never by reads).
+   * Cost: a strict replay of the chain, served from the root's replay
+   * cursor ([[ScbfDiscovery.occReplay]]): only the deltas published
+   * since this process last replayed or wrote the log are consulted,
+   * and the whole chain (compaction bounds it at
+   * ~[[ScbfDiscovery.CompactThreshold]] deltas; the fold read is
+   * O(history entries) — Delta's checkpoint-read bill, paid by
+   * mutations only, never by reads) only after a fold, scrub or reset.
    * Empty on a log-less table. Unreadable chains REFUSE — a mutation
    * must not plan over a window it cannot rule out.
    *
@@ -130,11 +133,10 @@ private[sources] object ScbfOcc extends org.apache.spark.internal.Logging {
     else {
       val m = scala.collection.mutable.HashMap
         .empty[String, List[VictimRec]]
-      val r = ScbfDiscovery.replayAfterWithSources(qroot, conf,
-        Long.MinValue, refuse)
-      r.firstAt.foreach { case (n, e) =>
-        val rec = VictimRec(e, ordinalOf(e, r.deltaOf(n)))
-        e.rewriteOf.foreach(v => m(v) = rec :: m.getOrElse(v, Nil))
+      ScbfDiscovery.occReplay(qroot, conf, Long.MinValue, refuse).foreach {
+        case (e, d) =>
+          val rec = recOf(e, d)
+          e.rewriteOf.foreach(v => m(v) = rec :: m.getOrElse(v, Nil))
       }
       m.toMap
     }

@@ -13,8 +13,9 @@ import graft.scbf.ScbfFormatException
  *
  *  - [[snapshot]]: what a rewrite plans from — its OCC position, the
  *    live data files and the log's recorded victims, taken in one
- *    order by one function; OPTIMIZE and the API rounds list the
- *    directory's own files ([[ownFiles]]), the SQL scan its pruned
+ *    order by one function on the TABLE ROOT's log (a partitioned
+ *    table has one log, at its root); OPTIMIZE and the API rounds list
+ *    the directory's own files ([[ownFiles]]), the SQL scan its pruned
  *    table listing;
  *  - [[liveListing]]: the rewrite-transparent view, and its heal;
  *  - [[Occ]]: the pre-publish conflict check and the post-publish
@@ -23,9 +24,7 @@ import graft.scbf.ScbfFormatException
  *    retained under CDC or deleted with their sidecars, then dropped
  *    from their directories' manifests;
  *  - [[keepEmptiedDirsReadable]]: the 0-row keeper of a directory a
- *    commit empties;
- *  - [[announceToRoot]]: a partition rewrite re-announced to the root
- *    discovery log.
+ *    commit empties.
  *
  * The front ends keep what really differs: how victims are scoped
  * (bounded re-list rounds, Spark's ReplaceData scan, one snapshot),
@@ -63,58 +62,37 @@ private[graft] object ScbfRewrite {
         "without a snapshot the write-write conflict check cannot run; retry the operation."),
       identity)
 
-  /** Every entry of `qroot`'s log, from one replay (none without a
-   * log): all commits after a position taken while it had no chain. */
-  def allEntries(where: String, qroot: Path, conf: Configuration)
-      : Seq[(ScbfDiscovery.Entry, String)] =
-    ScbfOcc.entriesAfter(qroot, conf, Long.MinValue, occRefusal(where))
-
   /**
-   * One copy-on-write rewrite's SNAPSHOT of the table at `qroot`:
+   * One copy-on-write rewrite's SNAPSHOT of the table whose log is at
+   * `qroot`:
    *  - `position`: the OCC point, taken BEFORE the listing, so a commit
    *    the listing missed is stamped after it and the commit's
    *    [[Occ]] checks it (None: no chain at snapshot time);
    *  - `files`: the listed data files, rewrite-transparent
    *    ([[liveListing]]);
-   *  - `victims`: the log's recorded victims that view was taken under.
+   *  - `victims`: the log's recorded victims that view was taken under,
+   *    named relative to `qroot`.
    */
   final case class Snapshot(position: Option[Long], files: Seq[FileStatus],
-      victims: Map[String, Seq[ScbfOcc.VictimRec]]) {
-
-    /**
-     * The next snapshot of the same directory, for a rewrite that
-     * re-lists in rounds: `next` is its position, and `since` the
-     * commits after THIS snapshot's position, replayed after `next` was
-     * taken (the round's recheck replay, or [[allEntries]]). They
-     * extend the victims, so the full chain replays once per operation.
-     */
-    def extend(where: String, qroot: Path, conf: Configuration, next: Option[Long],
-        since: Seq[(ScbfDiscovery.Entry, String)], list: () => Seq[FileStatus]): Snapshot = {
-      val late = since.flatMap { case (e, d) => e.rewriteOf.map(_ -> ScbfOcc.recOf(e, d)) }
-      take(where, qroot, conf, next, list, probeFs = false, heal = true)(
-        late.foldLeft(victims) { case (m, (v, r)) =>
-          m.updated(v, (m.getOrElse(v, Nil) :+ r).distinct) })
-    }
-  }
+      victims: Map[String, Seq[ScbfOcc.VictimRec]])
 
   /**
    * The one way a rewrite snapshot is taken, always in the safe order:
    * the OCC position, then `list`, then the log's recorded victims
    * ([[ScbfOcc.recordedVictims]]; an unreadable chain refuses), then
    * the rewrite-transparent view ([[liveListing]], healing when `heal`).
+   * `qroot` is the table root, whose log every commit into the table
+   * checks and announces on; `list` may list one partition of it. The
+   * replays run from the root's replay cursor ([[ScbfDiscovery]]), so
+   * a snapshot costs the deltas published since the last one.
    */
   def snapshot(where: String, qroot: Path, conf: Configuration,
-      list: () => Seq[FileStatus], probeFs: Boolean, heal: Boolean): Snapshot =
-    take(where, qroot, conf, position(where, qroot, conf), list, probeFs, heal)(
-      ScbfOcc.recordedVictims(qroot, conf, listingRefusal(where)))
-
-  private def take(where: String, qroot: Path, conf: Configuration,
-      position: Option[Long], list: () => Seq[FileStatus], probeFs: Boolean,
-      heal: Boolean)(victims: => Map[String, Seq[ScbfOcc.VictimRec]]): Snapshot = {
+      list: () => Seq[FileStatus], probeFs: Boolean, heal: Boolean): Snapshot = {
+    val position = ScbfRewrite.position(where, qroot, conf)
     val listed = list()
-    val v = victims
+    val victims = ScbfOcc.recordedVictims(qroot, conf, listingRefusal(where))
     Snapshot(position, liveListing(where, qroot.getFileSystem(conf), qroot, conf,
-      listed, v, probeFs, heal), v)
+      listed, victims, probeFs, heal), victims)
   }
 
   /** The data files directly in `dir` — never those of its `k=v`
@@ -305,37 +283,4 @@ private[graft] object ScbfRewrite {
     ScbfDiscovery.Entry(s"$id${ScbfDiscovery.RemovalSuffix}",
       ScbfDiscovery.RemovedLen, System.currentTimeMillis(),
       rewriteOf = replaced.sorted, rowsChanged = true, cdcTag = cdcTag)
-
-  /**
-   * Re-announce a PARTITION directory's rewrite to the table's ROOT
-   * discovery log. The partition's commit announced to its own log (it
-   * is a standalone SCBF directory), which a root stream never reads;
-   * this appends the rewrite's `published` outputs — (name, length)
-   * pairs, named relative to `part`, as its commit announced them —
-   * with subdir-qualified names, marked as rewrites of the
-   * subdir-qualified `replaced` names, so a root stream applies the
-   * same semantics as to a flat-directory rewrite. A rewrite that
-   * published nothing and names a `removalId` (a whole-file takedown)
-   * gets that REMOVAL entry instead, gated on the root log existing.
-   * A no-op when `part` is the root: its own commit already announced
-   * there.
-   */
-  def announceToRoot(qroot: Path, conf: Configuration, part: Path,
-      published: Seq[(String, Long)], replaced: Seq[String], rowsChanged: Boolean,
-      cdcTag: Option[String], removalId: Option[String] = None): Unit = {
-    val sub = qroot.toUri.relativize(
-      qroot.getFileSystem(conf).makeQualified(part).toUri).getPath.stripSuffix("/")
-    if (sub.nonEmpty) {
-      val rewriteOf = replaced.map(n => s"$sub/$n").sorted
-      val now = System.currentTimeMillis()
-      val entries =
-        if (published.nonEmpty) published.map { case (n, len) =>
-          ScbfDiscovery.Entry(s"$sub/$n", len, now,
-            rewriteOf = rewriteOf, rowsChanged = rowsChanged, cdcTag = cdcTag)
-        }
-        else removalId.filter(_ => replaced.nonEmpty && ScbfDiscovery.exists(qroot, conf))
-          .map(id => removalEntry(s"$sub/$id", rewriteOf, cdcTag)).toSeq
-      ScbfDiscovery.append(qroot, conf, entries)
-    }
-  }
 }

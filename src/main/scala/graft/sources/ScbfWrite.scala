@@ -243,9 +243,9 @@ class ScbfBatchWrite(
     // row-level path learns its scope at commit time. OPTIMIZE and
     // scoped overwrites self-tag when the table has CDC enabled.
     private[sources] var cdcTag: Option[String] = None,
-    // table root the CDC area and the root log live under
-    // (per-partition maintenance rewrites pass it and re-announce to
-    // its log; defaults to this write's own directory)
+    // table root the CDC area and the root log live under (a commit
+    // into a partition directory passes it: it checks OCC and announces
+    // on that one log; defaults to this write's own directory)
     cdcRoot: Option[String] = None,
     // OCC snapshot instant of a snapshot rewrite's planning listing —
     // see the commit-instant check in commit()
@@ -323,6 +323,12 @@ class ScbfBatchWrite(
     }
     def dirOf(sub: String): Path = if (sub.isEmpty) qroot else new Path(qroot, sub)
     def relOf(p: Path): String = ScbfCdc.relName(fs, qroot, p)
+    // the table's ONE discovery log lives at its root (`cdcRoot`, or
+    // this directory): entries are named relative to it — the one
+    // place a partition commit's `k=v/` prefix is added
+    val tableRoot = fs.makeQualified(new Path(cdcRoot.getOrElse(dir)))
+    val logPrefix = Some(ScbfCdc.relName(fs, tableRoot, qroot)).filter(_.nonEmpty).fold("")(_ + "/")
+    def logged(n: String): String = logPrefix + n
     def localized(es: Seq[ScbfStats.FileEntry], sub: String): Seq[ScbfStats.FileEntry] =
       if (sub.isEmpty) es else es.map(e => e.copy(name = e.name.substring(sub.length + 1)))
     val bySub = entries.groupBy(e => subdirOf(e.name))
@@ -350,38 +356,38 @@ class ScbfBatchWrite(
     // only the task-committed replacement files; victims stay, and the
     // table renders exactly the concurrent mutation's state. This
     // guards the WHOLE rewrite job, not just its planning window. The
-    // same replay says whether anything else committed here since the
-    // snapshot (`raced`), which decides the manifest rebuild below.
+    // same replay says whether anything else committed into THIS
+    // directory since the snapshot (`raced`: an INSERT into the
+    // partition, say), which decides the manifest rebuild below.
     val raced = replaceOnly.exists(victims =>
-      new ScbfRewrite.Occ(s"snapshot rewrite on $dir", qroot, conf, occSnapTs)
-        .checkBeforePublish(victims, isSelf = newNames.contains,
+      new ScbfRewrite.Occ(s"snapshot rewrite on $dir", tableRoot, conf, occSnapTs)
+        .checkBeforePublish(victims.map(logged), isSelf = newNames.map(logged),
           "detected at commit; the rewrite aborted, originals untouched")
-        .nonEmpty)
+        .exists { case (e, _) =>
+          e.name.startsWith(logPrefix) && e.name.indexOf('/', logPrefix.length) < 0 })
     // scoped overwrite emptying a directory the insert does not
     // repopulate (static scope with no rows for it): the 0-row keeper
     // goes in BEFORE the deletions (ScbfRewrite)
     if (scopedOverwrite)
       ScbfRewrite.keepEmptiedDirsReadable(fs, toReplace,
         repopulated = p => bySub.contains(relOf(p)), schema, "ow-keeper-",
-        announceRoot = new Path(dir))
+        announceRoot = tableRoot)
     // CDC retention (ScbfCdc): a snapshot rewrite (OPTIMIZE) or scoped
     // overwrite on a CDC-enabled table RETAINS its victims instead of
     // deleting them — self-tagged here when the caller did not pass a
-    // tag (SQL INSERT OVERWRITE PARTITION has no option channel; a
-    // partition's maintenance rewrite carries this tag into its root
-    // re-announcement below). Full truncate stays uncaptured: it
+    // tag (SQL INSERT OVERWRITE PARTITION has no option channel).
+    // Full truncate stays uncaptured: it
     // restarts the log, and the overwrite BOUNDARY is what gates feeds
     // across it.
     val victims = toReplace.filterNot(p => newNames.contains(p.getName))
-    val cdcRootQ = fs.makeQualified(new Path(cdcRoot.getOrElse(dir)))
     val captureTag: Option[String] = cdcTag.orElse {
       if (victims.nonEmpty && (replaceOnly.isDefined || scopedOverwrite) &&
-          ScbfCdc.enabled(cdcRootQ, conf))
+          ScbfCdc.enabled(tableRoot, conf))
         Some(ScbfCdc.newTag(if (replaceOnly.isDefined) "compact" else "overwrite"))
       else None
     }
     ScbfRewrite.removeVictims(fs, victims,
-      retainAt = captureTag.filter(_ => victims.nonEmpty).map((cdcRootQ, _)))
+      retainAt = captureTag.filter(_ => victims.nonEmpty).map((tableRoot, _)))
     // compact per-file stats into the directory manifest so planning
     // reads one stats file, not one per data file. Overwrite starts
     // fresh (stale entries for replaced files must not survive); append
@@ -468,29 +474,13 @@ class ScbfBatchWrite(
     val rewriteOf = replaceOnly.fold(rewriteOfNames.sorted)(_.toSeq.sorted)
     val rowsChanged = replaceOnly.isEmpty && rewriteOf.nonEmpty
     // rewrite commits carry the CDC tag (if captured) so readers can
-    // find the retained victims and materialized rows — but ONLY in
-    // the log that lives AT the CDC root: a per-partition rewrite's
-    // own log would resolve the tag against a partition-local CDC
-    // area that does not exist (the bytes are retained at the TABLE
-    // root, and the root re-announcement below carries the tag
-    // there); an untagged partition entry refuses with the
-    // honest no-retention message instead of a phantom-sweep one
-    val entryTag =
-      if (rewriteOf.nonEmpty && cdcRootQ == qroot)
-        captureTag
-      else None
+    // find the retained victims and materialized rows under the root
     val announced =
-      entries.map(e => ScbfDiscovery.Entry(e.name, e.dataLen, now, rewriteOf, rowsChanged,
-        entryTag))
+      entries.map(e => ScbfDiscovery.Entry(logged(e.name), e.dataLen, now,
+        rewriteOf.map(logged), rowsChanged, captureTag.filter(_ => rewriteOf.nonEmpty)))
     if (truncate && replaceOnly.isEmpty)
-      ScbfDiscovery.reset(new Path(dir), conf, announced)
-    else ScbfDiscovery.append(new Path(dir), conf, announced)
-    // a PARTITION's snapshot rewrite (a table-level OPTIMIZE passes the
-    // table root as cdcRoot) re-announces its outputs to the root's log
-    // too, carrying the same tag; a no-op when this directory is the root
-    if (replaceOnly.isDefined)
-      ScbfRewrite.announceToRoot(cdcRootQ, conf, qroot,
-        entries.map(e => e.name -> e.dataLen), rewriteOf, rowsChanged = false, captureTag)
+      ScbfDiscovery.reset(tableRoot, conf, announced)
+    else ScbfDiscovery.append(tableRoot, conf, announced)
     // scoped overwrite = delete-old-rows + insert-new: the new files
     // announced above are PLAIN entries (they are new data, not the
     // victims' surviving rows — marking them rewriteOf would make a
@@ -498,10 +488,10 @@ class ScbfBatchWrite(
     // disappearance gets its own REMOVAL entry, C:1 like any
     // row-changing commit (same record a metadata-only DELETE leaves)
     if (scopedOverwrite && toReplace.nonEmpty &&
-        ScbfDiscovery.exists(new Path(dir), conf)) {
-      ScbfDiscovery.append(new Path(dir), conf, Seq(ScbfRewrite.removalEntry(
+        ScbfDiscovery.exists(tableRoot, conf)) {
+      ScbfDiscovery.append(tableRoot, conf, Seq(ScbfRewrite.removalEntry(
         s"ow-${java.util.UUID.randomUUID().toString.take(8)}",
-        toReplace.map(relOf), captureTag)))
+        toReplace.map(p => ScbfCdc.relName(fs, tableRoot, p)), captureTag)))
     }
   }
 

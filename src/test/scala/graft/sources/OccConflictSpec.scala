@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThan}
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, LessThan}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -447,25 +447,48 @@ class OccConflictSpec extends AnyFunSuite with SparkTestBase {
   // be neither among the listing's dead victims nor after the position.
   // The racer is a real API DELETE of the same rows, parked after its
   // publish (replacement announced, original still on disk) while the
-  // SQL statement runs to its end.
-  for ((what, sql) <- Seq(
-      "UPDATE" -> "UPDATE %s SET source = 'changed' WHERE id < 500",
-      "MERGE" -> ("MERGE INTO %s t USING (SELECT CAST(id AS INT) AS id FROM range(0, 500)) s " +
-        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET t.source = 'changed'"),
-      "subquery DELETE" ->
-        "DELETE FROM %s WHERE id IN (SELECT CAST(id AS INT) FROM range(0, 500))"))
-    test(s"SQL $what refuses an API DELETE that publishes while its scan plans") {
-      val t = s"occ_pos_${what.replace(' ', '_').toLowerCase}"
+  // SQL statement runs to its end. On a partitioned table the racer is
+  // the table-level DELETE, whose partition rounds must check and
+  // announce on the same root log the statement checks.
+  for (partitioned <- Seq(false, true);
+       // the racer deletes ids below `gone`; the statement touches ids
+       // below `touched`, in the scope `where` (t. = the MERGE target)
+       (gone, touched, where) = if (partitioned) (50, 100, "%sgrp = 'g0' AND ")
+         else (200, 500, "");
+       (what, sql) <- Seq(
+         "UPDATE" -> s"UPDATE %s SET source = 'changed' WHERE ${where.format("")}id < $touched",
+         "MERGE" -> (s"MERGE INTO %s t USING (SELECT CAST(id AS INT) AS id FROM range(0, $touched)) s " +
+           s"ON ${where.format("t.")}t.id = s.id WHEN MATCHED THEN UPDATE SET t.source = 'changed'"),
+         "subquery DELETE" -> (s"DELETE FROM %s WHERE ${where.format("")}id IN " +
+           s"(SELECT CAST(id AS INT) FROM range(0, $touched))")))
+    test(s"SQL $what refuses an API DELETE that publishes while its scan plans" +
+        (if (partitioned) " (partitioned table)" else "")) {
+      val t = s"occ_pos_${what.replace(' ', '_').toLowerCase}${if (partitioned) "_pt" else ""}"
       val dir = tmpDir(s"scbf-occ-pos-$t")
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      spark.sql(s"CREATE TABLE $t (id INT, source STRING) USING scbf LOCATION '$dir'")
-      writeTwoFiles(dir)
+      if (partitioned) {
+        // two partitions of ids 0..149, each written as two files
+        spark.sql(s"CREATE TABLE $t (id INT, source STRING, grp STRING) USING scbf " +
+          s"PARTITIONED BY (grp) LOCATION '$dir'")
+        Seq(0 -> 75, 75 -> 150).foreach { case (from, until) =>
+          spark.sql(s"""INSERT INTO $t SELECT /*+ COALESCE(1) */ CAST(id % 150 AS INT),
+            'src', concat('g', CAST(id / 150 AS INT)) FROM range(0, 300)
+            WHERE id % 150 >= $from AND id % 150 < $until""")
+        }
+      } else {
+        spark.sql(s"CREATE TABLE $t (id INT, source STRING) USING scbf LOCATION '$dir'")
+        writeTwoFiles(dir)
+      }
+      val schema = spark.table(t).schema
       val published = new java.util.concurrent.CountDownLatch(1)
       val release = new java.util.concurrent.CountDownLatch(1)
       @volatile var racerError: Option[Throwable] = None
       val racer = new Thread(() =>
-        try ScbfDelete.deleteWhere(spark, dir, hconf, Array[Filter](LessThan("id", 200)))
-        catch { case e: Throwable => racerError = Some(e) })
+        try {
+          if (partitioned) ScbfDelete.deleteWhereTable(spark, dir, hconf, schema,
+            Array[Filter](EqualTo("grp", "g0"), LessThan("id", gone)))
+          else ScbfDelete.deleteWhere(spark, dir, hconf, Array[Filter](LessThan("id", gone)))
+        } catch { case e: Throwable => racerError = Some(e) })
       ScbfDelete.postPublishHook = () => {
         published.countDown()
         release.await(120, java.util.concurrent.TimeUnit.SECONDS)
@@ -494,8 +517,63 @@ class OccConflictSpec extends AnyFunSuite with SparkTestBase {
         s"$what must refuse, got ${outcome.map(_ => "success")} $msgs")
       // the DELETE's result, exactly: no row back, none doubled, none changed
       val rows = spark.read.format("scbf").load(dir).select("id", "source").collect()
-      assert(rows.map(_.getInt(0)).sorted.toSeq == (200 until 2000))
+      val expected =
+        if (partitioned) (gone until 150) ++ (0 until 150) else gone until 2000
+      assert(rows.map(_.getInt(0)).sorted.toSeq == expected.sorted)
       assert(!rows.exists(_.getString(1) == "changed"))
       spark.sql(s"DROP TABLE IF EXISTS $t")
     }
+
+  // OPTIMIZE planning inside a SQL UPDATE's publish-to-removal window:
+  // the UPDATE's replacement and its original coexist on disk, and only
+  // the log says the original is dead. OPTIMIZE takes its recorded
+  // victims from the same root log the UPDATE announced on, so it folds
+  // the replacement, never the original beside it. Run on a fresh table,
+  // whose partitions never had a log of their own.
+  test("OPTIMIZE planning in a SQL UPDATE's publish-to-removal window folds no original") {
+    val t = "occ_opt_in_update"
+    val dir = tmpDir(s"scbf-$t")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (id INT, v INT, grp STRING) USING scbf " +
+      s"PARTITIONED BY (grp) LOCATION '$dir'")
+    Seq(0 -> 75, 75 -> 150).foreach { case (from, until) =>
+      spark.sql(s"""INSERT INTO $t SELECT /*+ COALESCE(1) */ CAST(id % 150 AS INT),
+        CAST(id % 150 AS INT), concat('g', CAST(id / 150 AS INT)) FROM range(0, 300)
+        WHERE id % 150 >= $from AND id % 150 < $until""")
+    }
+    val go = new java.util.concurrent.CountDownLatch(1)
+    @volatile var optimizeOutcome: scala.util.Try[Seq[String]] = null
+    // created before the statement, so it inherits no SQL execution id
+    val racer = new Thread(() => {
+      go.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      optimizeOutcome = scala.util.Try(
+        ScbfMaintenance.clusterTable(spark, dir, Seq("id"), 1))
+    })
+    racer.start()
+    var fired = false
+    ScbfRowLevelBatchWrite.occHook = phase => if (phase == "post" && !fired) {
+      fired = true
+      go.countDown()
+      racer.join(120000)
+    }
+    val update =
+      try scala.util.Try(spark.sql(
+        s"UPDATE $t SET v = -7 WHERE grp = 'g0' AND id < 50").collect())
+      finally {
+        ScbfRowLevelBatchWrite.occHook = _ => ()
+        go.countDown()
+        racer.join()
+      }
+    assert(fired, "the UPDATE never published")
+    assert(update.isSuccess, s"the UPDATE must stand: $update")
+    assert(optimizeOutcome != null, "OPTIMIZE never ran")
+    optimizeOutcome.failed.foreach(e => assert(
+      Option(e.getMessage).exists(_.contains("concurrent mutation conflict")), e))
+    // the UPDATE's result, exactly: 150 rows, each id once, 50 updated
+    val g0 = spark.sql(s"SELECT id, v FROM $t WHERE grp = 'g0'").collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).sortBy(_._1).toSeq
+    assert(g0 == (0 until 150).map(i => i -> (if (i < 50) -7 else i)))
+    assert(spark.sql(s"SELECT count(*) FROM $t WHERE grp = 'g1'").head().getLong(0) == 150L)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
 }

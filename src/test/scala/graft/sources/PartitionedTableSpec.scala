@@ -475,6 +475,41 @@ class PartitionedTableSpec extends AnyFunSuite with SparkTestBase {
       }
     }
 
+  test("an INSERT into a partition during table-level OPTIMIZE keeps its manifest entry") {
+    // OPTIMIZE rebuilds a partition's manifest fresh only when nothing
+    // else committed into that partition since its snapshot; the INSERT
+    // commits on the same root log OPTIMIZE checks, so the rebuild
+    // becomes a merge that keeps the INSERT's entry
+    val t = "graft_ptopt_ins"
+    val dir = makeTable(t)
+    (100 until 200).map(i => (i, s"g${i % 4}", i * 0.5)).toDF("id", "grp", "v")
+      .createOrReplaceTempView(s"${t}_src2")
+    spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(2, grp) */ id, grp, v FROM ${t}_src2")
+    var fired = false
+    ScbfMaintenance.raceHook = () => if (!fired) {
+      fired = true
+      spark.sql(s"INSERT INTO $t SELECT /*+ COALESCE(1) */ CAST(id AS INT), 'g0', 0.0 " +
+        "FROM range(5000, 5010)")
+    }
+    spark.conf.set(graft.GraftConf.SweepParallelism, "1")
+    try spark.sql(s"OPTIMIZE $t CLUSTER BY (id)")
+    finally {
+      ScbfMaintenance.raceHook = () => ()
+      spark.conf.unset(graft.GraftConf.SweepParallelism)
+    }
+    assert(fired, "OPTIMIZE never reached its rewrite")
+    val conf = new Configuration()
+    val fs = new Path(dir).getFileSystem(conf)
+    Seq("g0", "g1", "g2", "g3").foreach { g =>
+      val d = new Path(dir, s"grp=$g")
+      val live = fs.listStatus(d).map(_.getPath)
+        .filter(p => fs.isFile(p) && ScbfDataSource.isDataFile(p)).map(_.getName).toSet
+      val entries = ScbfStats.readManifest(d, conf).keySet
+      assert(live.subsetOf(entries), s"grp=$g: files $live, manifest entries $entries")
+    }
+    assert(spark.sql(s"SELECT count(*) FROM $t WHERE grp = 'g0'").head().getLong(0) == 60L)
+  }
+
   test("partitioned DELETE is root-stream transparent under every onChangeCommit policy") {
     val dir = makeTable("graft_ptdel4")
     val conf = spark.sessionState.newHadoopConf()
